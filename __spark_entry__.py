@@ -3673,7 +3673,7 @@ _R4_WINDOW = [
     "fuzzy_street", "fuzzy_city", "match_lineage",
 ]
 
-# Round-5 window: the 9 new round-5 operators, every entry whose code
+# Round-5 window: the 12 new round-5 operators, every entry whose code
 # path was touched this round (BPE empty-doc left join, polygon_geometry
 # multi-ring guard, generalized color-JPEG decoder, cents-parameterized
 # IVF family), the flagship cascade + geospatial core, and a rotation of
@@ -3683,7 +3683,7 @@ _R5_WINDOW = [
     "ivf_kmeans_centroids", "ann_topk_ivf_kmeans", "ann_recall_kmeans",
     "pq_codebooks", "ann_topk_ivf_pq", "ann_recall_pq",
     "asset_decode_layouts", "ann_topk_filtered", "ann_knn_join",
-    "ann_index_stats", "ann_index_append",
+    "ann_index_stats", "ann_index_append", "ann_nprobe_curve",
     # code paths touched in round 5 — re-verify
     "bpe_merges", "bpe_tokenize", "asset_decode_color",
     "asset_decode_real", "district_geometry", "enclave_geometry",

@@ -147,22 +147,25 @@ def main() -> None:
     # bytes per vector. The rank map rides with the stored codebook.
     w_rk = Window.partitionBy("subspace").orderBy("centroid_id")
     ranked_books = books.withColumn("rk", F.row_number().over(w_rk) - 1)
-    rank_kv = ranked_books.agg(
-        F.map_from_arrays(
-            F.collect_list(
-                F.col("subspace").cast("long") * F.lit(similarity._PQ_KEYSPACE)
-                + F.col("centroid_id")
-            ),
-            F.collect_list("rk"),
-        ).alias("_rkv")
+    rank_kv = (
+        ranked_books.groupBy("subspace")
+        .agg(
+            F.map_from_arrays(
+                F.collect_list("centroid_id"), F.collect_list("rk")
+            ).alias("rks")
+        )
+        .agg(
+            F.map_from_arrays(
+                F.collect_list("subspace"), F.collect_list("rks")
+            ).alias("_rkv")
+        )
     )
     dense = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda s: (
             F.element_at(
-                F.col("_rkv"),
-                s.cast("long") * F.lit(similarity._PQ_KEYSPACE)
-                + F.element_at(F.col("codes"), s + 1).cast("long"),
+                F.element_at(F.col("_rkv"), s),
+                F.element_at(F.col("codes"), s + 1).cast("long"),
             )
             - 128
         ).cast("byte"),
@@ -238,9 +241,8 @@ def main() -> None:
         F.transform(
             F.sequence(F.lit(0), F.lit(m - 1)),
             lambda s: F.element_at(
-                F.col("_bkv"),
-                s.cast("long") * F.lit(similarity._PQ_KEYSPACE)
-                + (F.element_at(F.col("codes"), s + 1).cast("long") + 128),
+                F.element_at(F.col("_bkv"), s),
+                F.element_at(F.col("codes"), s + 1).cast("int") + 128,
             ),
         )
     )

@@ -54,14 +54,27 @@ def brute_force_topk(
         F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec")
     )
     c = corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec"))
-    scored = (
+    return _topk(
         c.crossJoin(F.broadcast(q))
         .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec")))
+        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec"))),
+        k,
     )
+
+
+def _ranked(scored: DataFrame) -> DataFrame:
+    """Per-query rank of scored (query_id, match_id, cosine_sim) pairs:
+    desc cosine, asc match_id — the one final ordering every ANN path
+    shares."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
+    return scored.withColumn("rank", F.row_number().over(w))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, match_id, cosine_sim rounded to 6 places, rank) for the
+    ``k`` best pairs of each query."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _ranked(scored)
         .where(F.col("rank") <= k)
         .select("query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
     )
@@ -115,6 +128,133 @@ def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _seed_cents(corpus: DataFrame, key: str, vec: str, centroid_mod: int) -> DataFrame:
+    """The deterministic ``key % centroid_mod == 1`` centroids every IVF
+    path starts from: (centroid_id, cent_vec)."""
+    return corpus.where(F.col(key) % centroid_mod == 1).select(
+        F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
+    )
+
+
+def _cent_row(cents: DataFrame) -> DataFrame:
+    """The K centroids as ONE broadcastable row ``_cents`` =
+    array<(centroid_id, cent_vec, cn)>, each centroid's norm ``cn``
+    computed once here rather than once per scored pair. No centroids
+    → no row, so a cross join against it drops every vector (what the
+    crossJoin + window assigner did)."""
+    return cents.agg(
+        F.collect_list(
+            F.struct("centroid_id", "cent_vec", norm(F.col("cent_vec")).alias("cn"))
+        ).alias("_cents")
+    ).where(F.size("_cents") > 0)
+
+
+def _top_centroids(cands: Column, v: Column, n: int, unit: bool = False) -> Column:
+    """THE nearest-centroid ranking: the ``n`` best entries of ``cands``
+    (array<(centroid_id, cent_vec, cn)>) for the vector ``v``, ordered
+    desc cosine then asc centroid_id, as array<(cent_sim, negid)> with
+    ``negid`` = -centroid_id. Row-local: no explode, no shuffle.
+
+    Cosine is the same ``dot / (norm(v) * norm(c))`` double fold as
+    :func:`cosine`, so every score is bit-identical to the crossJoin +
+    ``row_number`` form it replaces, and struct ordering puts NaN first
+    and NULL last exactly like ``desc(cent_sim)``. ``norm(v)`` is the
+    argument of a one-element ``transform`` — evaluated once per row; in
+    the lambda body it would be re-evaluated for every centroid.
+    ``unit=True`` scores with the plain dot product (unit vectors)."""
+
+    def rank(vn: Column) -> Column:
+        scored = F.transform(
+            cands,
+            lambda c: F.struct(
+                (dot(v, c.cent_vec) if unit else dot(v, c.cent_vec) / (vn * c.cn)).alias(
+                    "cent_sim"
+                ),
+                (-c.centroid_id).alias("negid"),
+            ),
+        )
+        if n == 1:
+            return F.array(F.array_max(scored))
+        return F.slice(F.sort_array(scored, asc=False), 1, n)
+
+    return F.transform(F.array(F.lit(1.0) if unit else norm(v)), rank)[0]
+
+
+def _nearest_centroids(
+    vectors: DataFrame, cents: DataFrame, vec: str, n: int = 1
+) -> DataFrame:
+    """Top-``n`` centroids of every row of ``vectors`` against the
+    broadcast one-row centroid array (the small partitioning structure
+    goes to every row, each row routes locally). Returns the input
+    columns plus ``centroid_id``, ``cent_sim`` and ``crank`` (1 =
+    nearest): one row per vector when ``n`` == 1, up to ``n`` otherwise."""
+    cols = vectors.columns
+    return (
+        vectors.crossJoin(F.broadcast(_cent_row(cents)))
+        .select(
+            *cols,
+            F.posexplode(_top_centroids(F.col("_cents"), F.col(vec), n)).alias("_p", "_t"),
+        )
+        .select(
+            *cols,
+            (-F.col("_t.negid")).alias("centroid_id"),
+            F.col("_t.cent_sim").alias("cent_sim"),
+            (F.col("_p") + 1).alias("crank"),
+        )
+    )
+
+
+def _assign_to_centroids(
+    vectors: DataFrame, cents: DataFrame, key: str, vec: str
+) -> DataFrame:
+    """Nearest-centroid assignment (desc cosine, asc centroid_id ties):
+    (vid, v, centroid_id). ``cents`` must be (centroid_id, cent_vec)."""
+    return _nearest_centroids(
+        vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v")), cents, "v"
+    ).select("vid", "v", "centroid_id")
+
+
+_MICRO = 1_000_000.0  # integer micro-units of the exact k-means mean
+
+
+def _micro_mean(rows: DataFrame, keys: list[str], v: str) -> DataFrame:
+    """Per-group component mean of the array column ``v``, exact on any
+    engine and partitioning: each component is quantized to
+    ``floor(x · 1e6)`` BIGINT, summed (integer addition commutes) and
+    divided once, ``sum / (1e6 · n)``.
+
+    ``posexplode`` + ``groupBy(keys…, pos)`` keeps the plan two columns
+    wide for any ``dim`` (one ``sum`` and one divide column per
+    dimension cost ~1 s of driver-side plan building per round at
+    dim=64) and still aggregates partially on the map side; the per-pos
+    means regroup into an array ordered by ``pos``. Returns (keys…,
+    new_vec)."""
+    sums = (
+        rows.select(*keys, F.posexplode(v).alias("_pos", "_x"))
+        .groupBy(*keys, "_pos")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.sum(F.floor(F.col("_x").cast("double") * F.lit(_MICRO))).alias("_s"),
+        )
+    )
+    return (
+        sums.groupBy(*keys)
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        "_pos",
+                        (F.col("_s").cast("double") / (F.lit(_MICRO) * F.col("_n"))).alias(
+                            "_m"
+                        ),
+                    )
+                )
+            ).alias("_ms")
+        )
+        .select(*keys, F.transform("_ms", lambda e: e["_m"]).alias("new_vec"))
+    )
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     dim: int,
@@ -141,20 +281,22 @@ def kmeans_centroids(
       arithmetic both engines execute identically;
     * the MEAN is the one step where naive float summation would be
       aggregation-order-dependent (Spark partial aggregates sum in
-      shuffle order; DuckDB in scan order). Components are therefore
-      quantized to integer micro-units first — ``floor(x · 1e6)`` as
-      BIGINT — summed exactly (integer addition commutes), and divided
-      once: ``sum / (1e6 · n)``. Bit-identical on any engine, any
-      partitioning, any core count; the 1e-6 quantization is far below
-      any recall-relevant resolution.
+      shuffle order; DuckDB in scan order), so it is the integer
+      micro-unit mean of :func:`_micro_mean` — bit-identical on any
+      engine, any partitioning, any core count; the 1e-6 quantization
+      is far below any recall-relevant resolution.
     * empty clusters keep their previous centroid (left join + coalesce).
 
-    Scale shape: centroids are ~√N rows and broadcast; each iteration is
-    one assignment pass (broadcast join, no corpus shuffle) plus one
-    groupBy(centroid_id) whose per-dim integer sums combine map-side, so
-    the shuffle carries ~K·dim longs per map partition, not data. Each
-    round's output (K rows) is persisted so round i+1 and the final
-    consumer don't recompute the chain.
+    Scale shape: centroids are ~√N rows and broadcast as one array; each
+    round is one row-local assignment pass (:func:`_nearest_centroids`,
+    no corpus shuffle) plus one ``groupBy(centroid_id, pos)`` over the
+    posexploded vectors whose integer sums combine map-side, so the
+    shuffle carries ~K·dim (id, pos, n, sum) rows per map partition, not
+    data, and the plan has the same few expressions at any ``dim``
+    (``dim`` no longer shapes the plan; it stays for call
+    compatibility). Each round's K rows are persisted; once the last
+    round is materialized the earlier ones are released, so a call
+    leaves one cached frame — the result.
 
     With ``two_level=True`` the per-round assignment goes through
     :func:`assign_two_level` (every ``super_stride``-th centroid becomes a
@@ -167,9 +309,10 @@ def kmeans_centroids(
     the seed vec_ids, so downstream list/bucket naming is stable across
     retraining.
     """
-    cents = corpus.where(F.col(key) % centroid_mod == 1).select(
-        F.col(key).alias("centroid_id"), _to_double(F.col(vec)).alias("cent_vec")
+    cents = _seed_cents(corpus, key, vec, centroid_mod).select(
+        "centroid_id", _to_double(F.col("cent_vec")).alias("cent_vec")
     )
+    rounds = []
     for _ in range(iters):
         if two_level:
             assigned = assign_two_level(
@@ -177,27 +320,7 @@ def kmeans_centroids(
             )
         else:
             assigned = _assign_to_centroids(corpus, cents, key, vec)
-        sums = assigned.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(
-                    F.floor(
-                        F.element_at("v", i + 1).cast("double") * F.lit(1_000_000.0)
-                    ).cast("long")
-                ).alias(f"_s{i}")
-                for i in range(dim)
-            ],
-        )
-        means = sums.select(
-            "centroid_id",
-            F.array(
-                *[
-                    F.col(f"_s{i}").cast("double")
-                    / (F.lit(1_000_000.0) * F.col("n"))
-                    for i in range(dim)
-                ]
-            ).alias("new_vec"),
-        )
+        means = _micro_mean(assigned, ["centroid_id"], "v")
         cents = (
             cents.join(means, "centroid_id", "left")
             .select(
@@ -206,7 +329,21 @@ def kmeans_centroids(
             )
             .persist()
         )
-    return cents
+        rounds.append(cents)
+    return _release_rounds(rounds, cents)
+
+
+def _release_rounds(rounds: list[DataFrame], result: DataFrame) -> DataFrame:
+    """Materialize ``result`` — the last of the persisted training
+    ``rounds`` — then release the rounds before it: building the last
+    round's cache reads (and so builds) every earlier one in the same
+    job, and a loaded cache no longer needs the plans it was built from.
+    One cached frame per training call instead of one per round."""
+    if rounds:
+        result.count()
+        for r in rounds[:-1]:
+            r.unpersist()
+    return result
 
 
 def assign_two_level(
@@ -230,105 +367,70 @@ def assign_two_level(
     unprobed super); ``nprobe_super=2`` recovers exactness on the synth
     corpus (pinned by test_ann_kmeans's equality check), which is the
     evidence that licenses the fast path at build time. Same output
-    schema as the flat assigner: (vid, v, centroid_id).
+    schema as the flat assigner: (vid, v, centroid_id). A vector whose
+    probed supers hold no centroids fails the query (``raise_error``)
+    instead of leaving training with a NULL centroid_id.
 
     SHUFFLE-FREE on the corpus side: the super set and the
-    centroid→super map collapse to broadcast ONE-ROW arrays (the
-    streaming/semantic.py shape), so routing and the final argmax are
-    row-local array expressions inside whole-stage codegen — no
-    exploded candidate rows cross an exchange, which is what makes
-    this the build path at 10⁶+ vectors (a row_number window over
-    N×candidates rows would shuffle the whole scored set).
+    centroid→super map collapse to broadcast ONE-ROW arrays, and both
+    the routing and the final argmax are :func:`_top_centroids` over
+    them — row-local array expressions, no exploded candidate rows
+    cross an exchange, which is what makes this the build path at 10⁶+
+    vectors.
 
     ``assume_normalized=True`` scores with a plain dot product
-    (callers pass unit vectors) — skips the per-pair norm recompute
-    that otherwise triples the higher-order-function work (the
-    ivf_sq8_bench lesson).
+    (callers pass unit vectors) — skips the norm division.
     """
-    sim = dot if assume_normalized else cosine
     # Supers: every super_stride-th centroid in centroid_id rank order —
     # deterministic, no new hyperparameter surface. INTENTIONAL
     # single-partition window: it runs over the CENTROID table (~√N
     # rows, broadcast-sized dim), never the corpus — do not copy this
     # shape to a corpus-scale plan (see plans/export.global_rank_by).
     w_rank = Window.orderBy(F.asc("centroid_id"))
-    ranked = cents.select(
-        "centroid_id", "cent_vec", F.row_number().over(w_rank).alias("_r")
+    supers = (
+        cents.select("centroid_id", "cent_vec", F.row_number().over(w_rank).alias("_r"))
+        .where((F.col("_r") % super_stride) == 1)
+        .select("centroid_id", "cent_vec")
     )
-    supers = ranked.where((F.col("_r") % super_stride) == 1).select(
-        F.col("centroid_id").alias("super_id"), F.col("cent_vec").alias("super_vec")
-    )
+    cent = F.struct("centroid_id", "cent_vec", norm(F.col("cent_vec")).alias("cn"))
     # Each centroid hangs under its nearest super (K×(K/stride) work on
-    # the K-row centroid table; ties desc sim, asc super_id).
-    w_c = Window.partitionBy("centroid_id").orderBy(
-        F.desc("csim"), F.asc("super_id")
-    )
-    cent_map = (
-        cents.crossJoin(F.broadcast(supers))
-        .withColumn("csim", sim(F.col("cent_vec"), F.col("super_vec")))
-        .withColumn("crank", F.row_number().over(w_c))
-        .where(F.col("crank") == 1)
-        .select("centroid_id", "cent_vec", "super_id")
-    )
-    sup_arr = supers.agg(
-        F.array_sort(
-            F.collect_list(F.struct("super_id", "super_vec"))
-        ).alias("_sups")
-    )
-    # super_id → its centroids, as a one-row broadcast MAP: the lambda
-    # bodies below then do only a map lookup / one dot per element.
-    # (Expression-placement discipline: anything expensive must be a
-    # higher-order-function ARGUMENT — evaluated once per row — never
-    # sit inside a lambda body, where it re-evaluates per element;
-    # measured 10× slower with the routing expression in the body.)
+    # the K-row centroid table); super_id → its centroids is a one-row
+    # broadcast MAP, so routing does one map lookup per probed super.
     cmap = (
-        cent_map.groupBy("super_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("centroid_id", "cent_vec"))
-            ).alias("cs")
+        cents.crossJoin(F.broadcast(_cent_row(supers)))
+        .select(
+            cent.alias("c"),
+            (-_top_centroids(F.col("_cents"), F.col("cent_vec"), 1, assume_normalized)[0].negid)
+            .alias("super_id"),
         )
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("super_id"), F.collect_list("cs")
-            ).alias("_cmap")
-        )
+        .groupBy("super_id")
+        .agg(F.collect_list("c").alias("cs"))
+        .agg(F.map_from_arrays(F.collect_list("super_id"), F.collect_list("cs")).alias("_cmap"))
     )
-    v = vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v"))
-    s = v.crossJoin(F.broadcast(sup_arr)).crossJoin(F.broadcast(cmap))
-    # Row-local super routing: (-sim, super_id) sorts to (desc sim,
-    # asc id) — identical tie semantics to the flat assigner's window.
-    top_supers = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("_sups"),
-                lambda su: F.struct(
-                    (-sim(F.col("v"), su.super_vec)).alias("negsim"),
-                    su.super_id.alias("super_id"),
-                ),
-            )
-        ),
-        1,
-        nprobe_super,
-    )
+    v = F.col("v")
+    top_supers = _top_centroids(F.col("_cents"), v, nprobe_super, assume_normalized)
     cands = F.flatten(
         F.transform(
             top_supers,
-            lambda t: F.coalesce(
-                F.element_at(F.col("_cmap"), t.super_id), F.array()
-            ),
+            lambda t: F.coalesce(F.element_at(F.col("_cmap"), -t.negid), F.array()),
         )
     )
-    best = F.array_max(
-        F.transform(
-            cands,
-            lambda c: F.struct(
-                sim(F.col("v"), c.cent_vec).alias("s"),
-                (-c.centroid_id).alias("negid"),
-            ),
+    best = _top_centroids(cands, v, 1, assume_normalized)[0]
+    return (
+        vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v"))
+        .crossJoin(F.broadcast(_cent_row(supers)))
+        .crossJoin(F.broadcast(cmap))
+        .select(
+            "vid",
+            "v",
+            F.coalesce(
+                -best.negid,
+                F.raise_error(
+                    F.lit("assign_two_level: no candidate centroids under the probed supers")
+                ),
+            ).alias("centroid_id"),
         )
     )
-    return s.select("vid", "v", (-best["negid"]).alias("centroid_id"))
 
 
 def ivf_topk(
@@ -349,10 +451,15 @@ def ivf_topk(
     Centroids are picked deterministically (``vec_id % centroid_mod == 1``)
     instead of k-means so the oracle can reproduce the exact lists — the
     scale structure (assign once, bucket the corpus by ``centroid_id``,
-    probe few lists per query) is identical to a trained-centroid IVF; at
-    100 TB the list assignment is a broadcast join against ~√N centroids
-    and the corpus is written bucketed by ``centroid_id`` so probing is a
-    partition-pruned scan, not a shuffle.
+    probe few lists per query) is identical to a trained-centroid IVF.
+
+    Scale shape: the ~√N centroids broadcast as ONE row (ids, vectors and
+    norms); list assignment and probe selection are both row-local
+    top-n over that array (:func:`_nearest_centroids`), so neither the
+    corpus nor the queries shuffle to be routed. At 100 TB the corpus is
+    written bucketed by ``centroid_id`` so probing is a partition-pruned
+    scan; the one remaining shuffle is the final per-query top-k window
+    over the scored candidates.
 
     ``cents`` overrides the modulo-seeded centroids with a trained set
     (:func:`kmeans_centroids`) — schema (centroid_id, cent_vec); the
@@ -361,43 +468,35 @@ def ivf_topk(
     Returns (query_id, match_id, cosine_sim, rank).
     """
     if cents is None:
-        cents = corpus.where(F.col(corpus_key) % centroid_mod == 1).select(
-            F.col(corpus_key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
-    c = corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec"))
-    # Inverted-list assignment: nearest centroid per corpus vector.
-    w_assign = Window.partitionBy("match_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
+        cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
+    assigned = _nearest_centroids(
+        corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec")),
+        cents,
+        "c_vec",
     )
-    assigned = (
-        c.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("c_vec"), F.col("cent_vec")))
-        .withColumn("arank", F.row_number().over(w_assign))
-        .where(F.col("arank") == 1)
-        .select("match_id", "c_vec", "centroid_id")
-    )
-    # Probe lists: nprobe nearest centroids per query.
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("q_vec"), F.col("cent_vec")))
-        .withColumn("prank", F.row_number().over(w_probe))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_vec", "centroid_id")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
+    return _topk(_probe(assigned, q, cents, nprobe, "c_vec"), k)
+
+
+def _probe(
+    assigned: DataFrame,
+    q: DataFrame,
+    cents: DataFrame,
+    nprobe: int,
+    payload: str,
+    on: tuple[str, ...] = ("centroid_id",),
+) -> DataFrame:
+    """Scored pairs of an IVF probe: every query row of ``q`` (query_id,
+    q_vec, …) takes its ``nprobe`` nearest lists and meets the members
+    of ``assigned`` (match_id, ``payload``, centroid_id, …) through a
+    broadcast equi-join on ``on``; self-matches by id are excluded and
+    ``cosine_sim`` = cosine(q_vec, payload)."""
+    probes = _nearest_centroids(q, cents, "q_vec", nprobe).drop("cent_sim", "crank")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
+        assigned.drop("cent_sim", "crank")
+        .join(F.broadcast(probes), list(on))
+        .where(F.col("query_id") != F.col("match_id"))
+        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col(payload)))
     )
 
 
@@ -490,12 +589,49 @@ def lsh_topk(
         # a pair can collide in several bands — score it once
         .dropDuplicates(["query_id", "match_id"])
     )
-    scored = cand.withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
+    return _topk(cand.withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec"))), k)
+
+
+def _sq8_dims(corpus: DataFrame, vec: str) -> DataFrame:
+    """Per-dimension global [min, max] of the corpus as one broadcastable
+    row of two arrays (mn, mx): posexplode + groupBy(pos) — partial
+    aggregation ships dim rows per map partition."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
+        corpus.select(F.posexplode(F.col(vec)).alias("pos", "x"))
+        .groupBy("pos")
+        .agg(
+            F.min(F.col("x").cast("double")).alias("mn"),
+            F.max(F.col("x").cast("double")).alias("mx"),
+        )
+        .groupBy()
+        .agg(
+            F.array_sort(F.collect_list(F.struct("pos", "mn"))).alias("_mns"),
+            F.array_sort(F.collect_list(F.struct("pos", "mx"))).alias("_mxs"),
+        )
+        .select(
+            F.transform("_mns", lambda s: s.mn).alias("mn"),
+            F.transform("_mxs", lambda s: s.mx).alias("mx"),
+        )
+    )
+
+
+def _sq8_recon(v: Column) -> Column:
+    """``v`` through its SQ8 code and back, against the (mn, mx) columns of
+    :func:`_sq8_dims`: code ``floor((x-mn)/(mx-mn)*255+0.5)``, value
+    ``mn + code*(mx-mn)/255``; constant dimensions (mx==mn) reconstruct
+    to mn exactly."""
+    mn_i = lambda i: F.element_at(F.col("mn"), i + 1)  # noqa: E731
+    mx_i = lambda i: F.element_at(F.col("mx"), i + 1)  # noqa: E731
+    code = lambda x, i: F.floor(  # noqa: E731
+        (x.cast("double") - mn_i(i)) / (mx_i(i) - mn_i(i)) * F.lit(255.0)
+        + F.lit(0.5)
+    )
+    return F.transform(
+        v,
+        lambda x, i: F.when(
+            mx_i(i) > mn_i(i),
+            mn_i(i) + (code(x, i) * (mx_i(i) - mn_i(i))) / F.lit(255.0),
+        ).otherwise(mn_i(i)),
     )
 
 
@@ -525,58 +661,17 @@ def sq8_topk(
     DuckDB oracle reproduces codes bit-exactly. Returns
     (query_id, match_id, cosine_sim, rank) like the other ANN paths.
     """
-    # per-dim min/max: posexplode + groupBy(pos) — partial aggregation
-    # ships dim rows per map partition, then dim tiny arrays broadcast.
-    ex = corpus.select(F.posexplode(F.col(vec)).alias("pos", "x"))
-    dims = (
-        ex.groupBy("pos")
-        .agg(
-            F.min(F.col("x").cast("double")).alias("mn"),
-            F.max(F.col("x").cast("double")).alias("mx"),
-        )
-        .groupBy()
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "mn"))
-            ).alias("_mns"),
-            F.array_sort(
-                F.collect_list(F.struct("pos", "mx"))
-            ).alias("_mxs"),
-        )
-        .select(
-            F.transform("_mns", lambda s: s.mn).alias("mn"),
-            F.transform("_mxs", lambda s: s.mx).alias("mx"),
-        )
+    c = (
+        corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec"))
+        .crossJoin(F.broadcast(_sq8_dims(corpus, vec)))
+        .select("match_id", _sq8_recon(F.col("c_vec")).alias("r_vec"))
     )
-    c = corpus.select(
-        F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec")
-    ).crossJoin(F.broadcast(dims))
-    mn_i = lambda i: F.element_at(F.col("mn"), i + 1)  # noqa: E731
-    mx_i = lambda i: F.element_at(F.col("mx"), i + 1)  # noqa: E731
-    code = lambda x, i: F.floor(  # noqa: E731
-        (x.cast("double") - mn_i(i)) / (mx_i(i) - mn_i(i)) * F.lit(255.0)
-        + F.lit(0.5)
-    )
-    recon = F.transform(
-        F.col("c_vec"),
-        lambda x, i: F.when(
-            mx_i(i) > mn_i(i),
-            mn_i(i) + (code(x, i) * (mx_i(i) - mn_i(i))) / F.lit(255.0),
-        ).otherwise(mn_i(i)),
-    )
-    c = c.select("match_id", recon.alias("r_vec"))
-
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    scored = (
+    return _topk(
         c.crossJoin(F.broadcast(q))
         .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("r_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
+        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("r_vec"))),
+        k,
     )
 
 
@@ -617,79 +712,21 @@ def ivf_sq8_topk(
     Returns (query_id, match_id, cosine_sim, rank); cosine is against
     the reconstruction, as in any asymmetric-distance index.
     """
-    # per-dim [mn, mx] — one aggregate pass, broadcast back (sq8_topk's)
-    ex = corpus.select(F.posexplode(F.col(vec)).alias("pos", "x"))
-    dims = (
-        ex.groupBy("pos")
-        .agg(
-            F.min(F.col("x").cast("double")).alias("mn"),
-            F.max(F.col("x").cast("double")).alias("mx"),
-        )
-        .groupBy()
-        .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "mn"))).alias("_mns"),
-            F.array_sort(F.collect_list(F.struct("pos", "mx"))).alias("_mxs"),
-        )
-        .select(
-            F.transform("_mns", lambda s: s.mn).alias("mn"),
-            F.transform("_mxs", lambda s: s.mx).alias("mx"),
-        )
-    )
     if cents is None:
-        cents = corpus.where(F.col(corpus_key) % centroid_mod == 1).select(
-            F.col(corpus_key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
+        cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
     # Inverted-list assignment at full precision; payload reconstructed
     # through the SQ8 code (what a stored int8 list yields at probe time).
-    mn_i = lambda i: F.element_at(F.col("mn"), i + 1)  # noqa: E731
-    mx_i = lambda i: F.element_at(F.col("mx"), i + 1)  # noqa: E731
-    code = lambda x, i: F.floor(  # noqa: E731
-        (x.cast("double") - mn_i(i)) / (mx_i(i) - mn_i(i)) * F.lit(255.0)
-        + F.lit(0.5)
-    )
-    recon = F.transform(
-        F.col("c_vec"),
-        lambda x, i: F.when(
-            mx_i(i) > mn_i(i),
-            mn_i(i) + (code(x, i) * (mx_i(i) - mn_i(i))) / F.lit(255.0),
-        ).otherwise(mn_i(i)),
-    )
-    w_assign = Window.partitionBy("match_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
     assigned = (
-        corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec"))
-        .crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("c_vec"), F.col("cent_vec")))
-        .withColumn("arank", F.row_number().over(w_assign))
-        .where(F.col("arank") == 1)
-        .crossJoin(F.broadcast(dims))
-        .select("match_id", recon.alias("r_vec"), "centroid_id")
+        _nearest_centroids(
+            corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec")),
+            cents,
+            "c_vec",
+        )
+        .crossJoin(F.broadcast(_sq8_dims(corpus, vec)))
+        .select("match_id", _sq8_recon(F.col("c_vec")).alias("r_vec"), "centroid_id")
     )
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("q_vec"), F.col("cent_vec")))
-        .withColumn("prank", F.row_number().over(w_probe))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_vec", "centroid_id")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("r_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-        )
-    )
+    return _topk(_probe(assigned, q, cents, nprobe, "r_vec"), k)
 
 
 def ivf_topk_filtered(
@@ -721,52 +758,22 @@ def ivf_topk_filtered(
     which is the correct semantics.
     """
     if cents is None:
-        cents = corpus.where(F.col(corpus_key) % centroid_mod == 1).select(
-            F.col(corpus_key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
-    c = corpus.select(
-        F.col(corpus_key).alias("match_id"),
-        F.col(vec).alias("c_vec"),
-        F.col(filter_col).alias("_fv"),
-    )
-    w_assign = Window.partitionBy("match_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    assigned = (
-        c.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("c_vec"), F.col("cent_vec")))
-        .withColumn("arank", F.row_number().over(w_assign))
-        .where(F.col("arank") == 1)
-        .select("match_id", "c_vec", "_fv", "centroid_id")
+        cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
+    assigned = _nearest_centroids(
+        corpus.select(
+            F.col(corpus_key).alias("match_id"),
+            F.col(vec).alias("c_vec"),
+            F.col(filter_col).alias("_fv"),
+        ),
+        cents,
+        "c_vec",
     )
     q = queries.select(
         F.col(query_key).alias("query_id"),
         F.col(vec).alias("q_vec"),
         F.col(filter_col).alias("_fv"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("q_vec"), F.col("cent_vec")))
-        .withColumn("prank", F.row_number().over(w_probe))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_vec", "_fv", "centroid_id")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), ["centroid_id", "_fv"])
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-        )
-    )
+    return _topk(_probe(assigned, q, cents, nprobe, "c_vec", on=("centroid_id", "_fv")), k)
 
 
 def ivf_knn_join(
@@ -783,26 +790,17 @@ def ivf_knn_join(
     the batch shape semantic-dedup/recommendation backfills need (N×k
     output from ~N·nprobe·(N/K) scored pairs instead of N²).
 
-    Both sides share ONE assignment pass; the probe side takes each
-    vector's ``nprobe`` nearest lists and the join is a bucketed
-    equi-join on ``centroid_id``. At 100 TB both sides read the same
+    Both sides share ONE ranking expression; the probe side takes each
+    vector's ``nprobe`` nearest lists, its first list is the
+    assignment, and the join is a bucketed equi-join on
+    ``centroid_id``. At 100 TB both sides read the same
     (centroid_id)-bucketed table — co-located, no shuffle beyond the
     ranking. Returns (query_id, match_id, cosine_sim, rank).
     """
     if cents is None:
-        cents = vectors.where(F.col(key) % centroid_mod == 1).select(
-            F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
-    v = vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v"))
-    w_rank = Window.partitionBy("vid").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    ranked = (
-        v.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("v"), F.col("cent_vec")))
-        .withColumn("crank", F.row_number().over(w_rank))
-        .where(F.col("crank") <= nprobe)
-        .select("vid", "v", "centroid_id", "crank")
+        cents = _seed_cents(vectors, key, vec, centroid_mod)
+    ranked = _nearest_centroids(
+        vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v")), cents, "v", nprobe
     )
     assigned = ranked.where(F.col("crank") == 1).select(
         F.col("vid").alias("match_id"), F.col("v").alias("c_vec"), "centroid_id"
@@ -810,18 +808,11 @@ def ivf_knn_join(
     probes = ranked.select(
         F.col("vid").alias("query_id"), F.col("v").alias("q_vec"), "centroid_id"
     )
-    scored = (
+    return _topk(
         assigned.join(probes, "centroid_id")
         .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "match_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-        )
+        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("c_vec"))),
+        k,
     )
 
 
@@ -846,9 +837,7 @@ def ivf_index_stats(
     plain per-list table).
     """
     if cents is None:
-        cents = corpus.where(F.col(key) % centroid_mod == 1).select(
-            F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
+        cents = _seed_cents(corpus, key, vec, centroid_mod)
     assigned = _assign_to_centroids(corpus, cents, key, vec)
     sizes = assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("list_size")
@@ -858,14 +847,15 @@ def ivf_index_stats(
         F.count(F.lit(1)).alias("_k"),
         F.sum(F.col("list_size") * F.col("list_size")).alias("_ss"),
     )
+    # N² in double: BIGINT squares overflow past ~3e9 corpus rows.
+    n = F.col("_n").cast("double")
     return sizes.crossJoin(F.broadcast(totals)).select(
         "centroid_id",
         "list_size",
         F.round(F.col("list_size") / F.col("_n"), 6).alias("pct_of_corpus"),
-        F.round(
-            F.col("_ss").cast("double") * F.col("_k") / (F.col("_n") * F.col("_n")),
-            6,
-        ).alias("imbalance_factor"),
+        F.round(F.col("_ss").cast("double") * F.col("_k") / (n * n), 6).alias(
+            "imbalance_factor"
+        ),
     )
 
 
@@ -892,21 +882,9 @@ def ivf_index_append(
     that says the centroids need retraining).
     """
     if cents is None:
-        cents = corpus.where(F.col(key) % centroid_mod == 1).select(
-            F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
-    w = Window.partitionBy("vid").orderBy(F.desc("cent_sim"), F.asc("centroid_id"))
-    return (
-        batch.select(F.col(key).alias("vid"), F.col(vec).alias("v"))
-        .crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("v"), F.col("cent_vec")))
-        .withColumn("arank", F.row_number().over(w))
-        .where(F.col("arank") == 1)
-        .select(
-            F.col("vid").alias(key),
-            "centroid_id",
-            F.round("cent_sim", 6).alias("cent_sim"),
-        )
+        cents = _seed_cents(corpus, key, vec, centroid_mod)
+    return _nearest_centroids(batch.select(key, vec), cents, vec).select(
+        key, "centroid_id", F.round("cent_sim", 6).alias("cent_sim")
     )
 
 
@@ -946,8 +924,11 @@ def pq_codebooks(
     Scale shape: codebooks are m×k rows of dim/m doubles (KB — always
     broadcast); per iteration the ASSIGNMENT is row-local array math
     against the broadcast codebook (no explode before the argmin), and
-    the UPDATE shuffles one partially-aggregated row per
-    (subspace, code) per map partition.
+    the UPDATE is the shared :func:`_micro_mean` over (subspace, code)
+    sub-vectors — one partially-aggregated (subspace, code, pos) row per
+    map partition, and a plan of the same size for any dim/m. Rounds
+    are released as in :func:`kmeans_centroids`: a call leaves one
+    cached frame — the result.
 
     Returns (subspace, centroid_id, cent_vec array<double>) —
     centroid ids remain the seed vec_ids.
@@ -985,38 +966,19 @@ def pq_codebooks(
         "centroid_id",
         F.col("_e.cent_vec").alias("cent_vec"),
     )
+    rounds = []
     for _ in range(iters):
-        codes = pq_encode(corpus, books, dim=dim, m=m, key=key, vec=vec)
-        sub = codes.select(
-            F.col("_vd").alias("v"),
-            F.posexplode("codes").alias("subspace", "code"),
-        ).select(
-            "subspace",
-            "code",
-            *[
-                F.element_at("v", F.col("subspace") * d0 + i + 1).alias(f"_x{i}")
-                for i in range(d0)
-            ],
+        sub = pq_encode(corpus, books, dim=dim, m=m, key=key, vec=vec).select(
+            "_vd", F.posexplode("codes").alias("subspace", "centroid_id")
         )
-        sums = sub.groupBy("subspace", "code").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(
-                    F.floor(F.col(f"_x{i}") * F.lit(1_000_000.0)).cast("long")
-                ).alias(f"_s{i}")
-                for i in range(d0)
-            ],
-        )
-        means = sums.select(
-            "subspace",
-            F.col("code").alias("centroid_id"),
-            F.array(
-                *[
-                    F.col(f"_s{i}").cast("double")
-                    / (F.lit(1_000_000.0) * F.col("n"))
-                    for i in range(d0)
-                ]
-            ).alias("new_vec"),
+        means = _micro_mean(
+            sub.select(
+                "subspace",
+                "centroid_id",
+                F.slice("_vd", F.col("subspace") * d0 + 1, F.lit(d0)).alias("_x"),
+            ),
+            ["subspace", "centroid_id"],
+            "_x",
         )
         books = (
             books.join(means, ["subspace", "centroid_id"], "left")
@@ -1027,17 +989,16 @@ def pq_codebooks(
             )
             .persist()
         )
-    return books
-
-
-_PQ_KEYSPACE = 1_000_000  # subspace*keyspace + centroid_id map keys
+        rounds.append(books)
+    return _release_rounds(rounds, books)
 
 
 def _books_map(books: DataFrame) -> DataFrame:
     """One-row broadcastable forms of a codebook: ``_bmap`` (subspace →
     sorted array of (centroid_id, cent_vec)) for the argmin, ``_bkv``
-    (subspace·10⁶+centroid_id → cent_vec) for reconstruction."""
-    bmap = (
+    (subspace → (centroid_id → cent_vec)) for reconstruction. Nested
+    maps, so no composite key can collide at any codeword id."""
+    return (
         books.groupBy("subspace")
         .agg(
             F.array_sort(
@@ -1047,19 +1008,12 @@ def _books_map(books: DataFrame) -> DataFrame:
         .agg(
             F.map_from_arrays(
                 F.collect_list("subspace"), F.collect_list("arr")
-            ).alias("_bmap")
+            ).alias("_bmap"),
+            F.map_from_arrays(
+                F.collect_list("subspace"), F.collect_list(F.map_from_entries("arr"))
+            ).alias("_bkv"),
         )
     )
-    bkv = books.agg(
-        F.map_from_arrays(
-            F.collect_list(
-                F.col("subspace").cast("long") * F.lit(_PQ_KEYSPACE)
-                + F.col("centroid_id")
-            ),
-            F.collect_list("cent_vec"),
-        ).alias("_bkv")
-    )
-    return bmap.crossJoin(bkv)
 
 
 def pq_encode(
@@ -1148,11 +1102,8 @@ def ivf_pq_topk(
     Returns (query_id, match_id, cosine_sim, rank); cosine is against
     the reconstruction when ``refine`` == 0, exact otherwise.
     """
-    d0 = dim // m
     if cents is None:
-        cents = corpus.where(F.col(corpus_key) % centroid_mod == 1).select(
-            F.col(corpus_key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
+        cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
     if books is None:
         books = pq_codebooks(
             corpus, dim=dim, m=m, sub_mod=sub_mod, iters=pq_iters,
@@ -1165,68 +1116,35 @@ def ivf_pq_topk(
         F.transform(
             F.sequence(F.lit(0), F.lit(m - 1)),
             lambda s: F.element_at(
-                F.col("_bkv"),
-                s.cast("long") * F.lit(_PQ_KEYSPACE)
-                + F.element_at(F.col("codes"), s + 1).cast("long"),
+                F.element_at(F.col("_bkv"), s),
+                F.element_at(F.col("codes"), s + 1).cast("long"),
             ),
         )
     )
-    w_assign = Window.partitionBy("match_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
     assigned = (
-        coded.select(F.col(corpus_key).alias("match_id"), "_vd", "codes")
-        .crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("_vd"), F.col("cent_vec")))
-        .withColumn("arank", F.row_number().over(w_assign))
-        .where(F.col("arank") == 1)
+        _nearest_centroids(
+            coded.select(F.col(corpus_key).alias("match_id"), "_vd", "codes"), cents, "_vd"
+        )
         .crossJoin(F.broadcast(_books_map(books).select("_bkv")))
         .select("match_id", recon.alias("r_vec"), "centroid_id")
     )
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("q_vec"), F.col("cent_vec")))
-        .withColumn("prank", F.row_number().over(w_probe))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_vec", "centroid_id")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("r_vec")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("match_id"))
+    scored = _probe(assigned, q, cents, nprobe, "r_vec")
     if not refine:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "query_id", "match_id",
-                F.round("cosine_sim", 6).alias("cosine_sim"), "rank",
-            )
-        )
+        return _topk(scored, k)
     shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
+        _ranked(scored)
         .where(F.col("rank") <= refine)
         .select("query_id", "q_vec", "match_id")
     )
     full = corpus.select(
         F.col(corpus_key).alias("match_id"), F.col(vec).alias("f_vec")
     )
-    rescored = full.join(F.broadcast(shortlist), "match_id").withColumn(
-        "cosine_sim", cosine(F.col("q_vec"), F.col("f_vec"))
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "match_id",
-            F.round("cosine_sim", 6).alias("cosine_sim"), "rank",
-        )
+    return _topk(
+        full.join(F.broadcast(shortlist), "match_id").withColumn(
+            "cosine_sim", cosine(F.col("q_vec"), F.col("f_vec"))
+        ),
+        k,
     )
 
 
@@ -1289,9 +1207,7 @@ def semantic_dedup(
     Returns (vec_id, centroid_id, dup_of, is_duplicate); dup_of NULL for
     keepers.
     """
-    cents = vectors.where(F.col(key) % centroid_mod == 1).select(
-        F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-    )
+    cents = _seed_cents(vectors, key, vec, centroid_mod)
     assigned = _assign_to_centroids(vectors, cents, key, vec)
     a = assigned.select(
         F.col("vid").alias("vid_a"), F.col("v").alias("va"), "centroid_id"
@@ -1319,24 +1235,6 @@ def semantic_dedup(
     )
 
 
-def _assign_to_centroids(
-    vectors: DataFrame, cents: DataFrame, key: str, vec: str
-) -> DataFrame:
-    """Nearest-centroid assignment (desc cosine, asc centroid_id ties):
-    (vid, v, centroid_id). ``cents`` must be (centroid_id, cent_vec)."""
-    c = vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v"))
-    w_assign = Window.partitionBy("vid").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    return (
-        c.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", cosine(F.col("v"), F.col("cent_vec")))
-        .withColumn("arank", F.row_number().over(w_assign))
-        .where(F.col("arank") == 1)
-        .select("vid", "v", "centroid_id")
-    )
-
-
 def semantic_index_probe(
     corpus: DataFrame,
     batch: DataFrame,
@@ -1359,9 +1257,7 @@ def semantic_index_probe(
 
     Returns (vec_id, centroid_id, is_known_dup, matched_id).
     """
-    cents = corpus.where(F.col(key) % centroid_mod == 1).select(
-        F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-    )
+    cents = _seed_cents(corpus, key, vec, centroid_mod)
     settled = _assign_to_centroids(corpus, cents, key, vec).select(
         F.col("vid").alias("corpus_id"), F.col("v").alias("cv"), "centroid_id"
     )

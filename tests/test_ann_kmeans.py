@@ -5,7 +5,12 @@ previous centroid."""
 
 from __future__ import annotations
 
+import math
+import random
+
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from osm_poi_matchmaker_spark.operators import similarity as S
 from tests.conftest import SF_SMALL as SF
@@ -199,3 +204,152 @@ def test_index_stats_and_append_semantics(spark):
         ).collect()
     }
     assert {r["vec_id"]: r["centroid_id"] for r in out} == want
+
+
+def _window_top_n(vectors, cents, n):
+    """The crossJoin + row_number assigner the row-local primitive
+    replaced: (vid, crank, centroid_id) for the n nearest centroids."""
+    w = Window.partitionBy("vid").orderBy(F.desc("cent_sim"), F.asc("centroid_id"))
+    return (
+        vectors.crossJoin(F.broadcast(cents))
+        .withColumn("cent_sim", S.cosine(F.col("v"), F.col("cent_vec")))
+        .withColumn("crank", F.row_number().over(w))
+        .where(F.col("crank") <= n)
+        .select("vid", "crank", "centroid_id")
+    )
+
+
+def _tie_corpus(spark, extra):
+    """Seeded 8-d vectors and centroids; centroids 2 and 5 duplicate 1
+    and 4 (exact cosine ties, so asc centroid_id must decide)."""
+    rng = random.Random(7)
+    vec = lambda: [rng.uniform(-1.0, 1.0) for _ in range(8)]  # noqa: E731
+    base = {cid: vec() for cid in (1, 3, 4, 6, 7)}
+    base[2], base[5] = list(base[1]), list(base[4])
+    cents = spark.createDataFrame(
+        sorted(base.items()), "centroid_id long, cent_vec array<double>"
+    )
+    rows = [(i, vec()) for i in range(40)] + [(40, list(base[1]))] + extra
+    vectors = spark.createDataFrame(rows, "vid long, v array<double>")
+    return vectors, cents
+
+
+def _primitive_top_n(vectors, cents, n):
+    return S._nearest_centroids(vectors, cents, "v", n).select(
+        "vid", "crank", "centroid_id"
+    )
+
+
+def test_nearest_centroids_match_window_form(spark):
+    """The row-local top-n primitive returns exactly the ids and order of
+    the crossJoin + row_number form, for n = 1 and n = nprobe, through
+    exact ties and NaN cosines (vector 41 holds a NaN component)."""
+    nan_row = [(41, [float("nan")] + [0.5] * 7)]
+    vectors, cents = _tie_corpus(spark, nan_row)
+    for n in (1, 3):
+        want = sorted(tuple(r) for r in _window_top_n(vectors, cents, n).collect())
+        got = sorted(tuple(r) for r in _primitive_top_n(vectors, cents, n).collect())
+        assert got == want, n
+        assert len(got) == 42 * n
+    # a NaN centroid outranks everything in both forms
+    nan_cent = spark.createDataFrame(
+        [(9, [float("nan")] * 8)], "centroid_id long, cent_vec array<double>"
+    )
+    with_nan = cents.unionByName(nan_cent)
+    for n in (1, 3):
+        want = sorted(tuple(r) for r in _window_top_n(vectors, with_nan, n).collect())
+        got = sorted(tuple(r) for r in _primitive_top_n(vectors, with_nan, n).collect())
+        assert got == want, n
+
+
+def test_nearest_centroids_zero_vector_matches_window_form(spark):
+    """An all-zero vector has zero norm: under ANSI both forms fail the
+    division; without ANSI its cosines are NULL and both forms rank the
+    centroids by ascending id."""
+    vectors, cents = _tie_corpus(spark, [(42, [0.0] * 8)])
+    for form in (_window_top_n, _primitive_top_n):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            form(vectors, cents, 3).collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        for n in (1, 3):
+            want = sorted(tuple(r) for r in _window_top_n(vectors, cents, n).collect())
+            got = sorted(tuple(r) for r in _primitive_top_n(vectors, cents, n).collect())
+            assert got == want, n
+            zero = sorted(r[2] for r in got if r[0] == 42)
+            assert zero == [1, 2, 3][:n]
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+
+
+def test_two_level_empty_candidates_fail_loud(spark):
+    """A vector routed to a super that no centroid hangs under must fail
+    the query, not come back with a NULL centroid_id (which silently
+    drops it from the k-means sums). Unit-vector scoring on non-unit
+    input: super 1 = (1, 0) hangs under super 3 = (2, -1) (dot 2 > 1),
+    yet (0.5, 1) prefers super 1 (0.5 > 0)."""
+    cents = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, -1.0]), (3, [2.0, -1.0])],
+        "centroid_id long, cent_vec array<double>",
+    )
+    vectors = spark.createDataFrame([(7, [0.5, 1.0])], "vec_id long, embedding array<double>")
+    out = S.assign_two_level(
+        vectors, cents, super_stride=2, nprobe_super=1, assume_normalized=True
+    )
+    with pytest.raises(Exception, match="no candidate centroids"):
+        out.collect()
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_training_rounds_are_released(spark):
+    """kmeans_centroids and pq_codebooks leave at most one cached frame
+    per call (the result), not one per round."""
+    emb = _emb(spark)
+    before = _persistent_rdds(spark)
+    cents = S.kmeans_centroids(emb, dim=64, centroid_mod=100, iters=3)
+    cents.count()
+    assert _persistent_rdds(spark) - before <= 1
+    before = _persistent_rdds(spark)
+    books = S.pq_codebooks(emb, dim=64, m=8, sub_mod=5, iters=3)
+    books.count()
+    assert _persistent_rdds(spark) - before <= 1
+    cents.unpersist(blocking=True)
+    books.unpersist(blocking=True)
+
+
+def test_pq_codeword_ids_past_a_million(spark):
+    """Codeword ids are seed vec_ids; ids past 10^6 must not collide with
+    another subspace's codewords in the reconstruction lookup. Every
+    returned score must equal the cosine against the reconstruction
+    rebuilt here from the codebook and the codes."""
+    rng = random.Random(11)
+    ids = [1, 6, 11, 16, 1_000_001, 1_000_006, 1_000_011] + [
+        1_000_000 + i for i in range(20, 60)
+    ] + list(range(20, 60))
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1.0, 1.0) for _ in range(8)]) for i in ids],
+        "vec_id long, embedding array<double>",
+    )
+    books = S.pq_codebooks(df, dim=8, m=2, sub_mod=5, iters=1)
+    q = df.where(F.col("vec_id") % 10 == 0)
+    got = S.ivf_pq_topk(
+        q, df, dim=8, k=3, centroid_mod=5, nprobe=2, m=2, books=books
+    ).collect()
+    assert got
+    book = {(r["subspace"], r["centroid_id"]): r["cent_vec"] for r in books.collect()}
+    codes = {
+        r["vec_id"]: r["codes"]
+        for r in S.pq_encode(df, books, dim=8, m=2).select("vec_id", "codes").collect()
+    }
+    vecs = {r["vec_id"]: r["embedding"] for r in df.collect()}
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+
+    for r in got:
+        recon = book[(0, codes[r["match_id"]][0])] + book[(1, codes[r["match_id"]][1])]
+        assert abs(r["cosine_sim"] - cos(vecs[r["query_id"]], recon)) < 2e-6, r

@@ -296,3 +296,60 @@ def test_two_level_assignment_corpus_side_no_shuffle(spark):
     assert scan_lines, "expected parquet scans"
     assert "SortMergeJoin" not in simple
     assert "CartesianProduct" not in simple
+
+
+def test_flat_assignment_no_window_no_corpus_shuffle(spark):
+    """Flat nearest-centroid assignment is row-local against the
+    broadcast one-row centroid array: no Window, and no hash exchange
+    (the centroid array's global collect may use a single-partition
+    exchange of ~sqrt(N) rows)."""
+    from pyspark.sql import functions as F
+
+    from osm_poi_matchmaker_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    cents = emb.where(F.col("vec_id") % 100 == 1).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("cent_vec"),
+    )
+    for n in (1, 3):
+        plan = plan_of(
+            S._nearest_centroids(emb.select("vec_id", "embedding"), cents, "embedding", n),
+            mode="simple",
+        )
+        assert "Window" not in plan, plan
+        assert "hashpartitioning" not in plan, plan
+        assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    plan = plan_of(S._assign_to_centroids(emb, cents, "vec_id", "embedding"), mode="simple")
+    assert "Window" not in plan and "hashpartitioning" not in plan, plan
+
+
+def _aggregate_exprs(df) -> int:
+    """Aggregate function calls in the optimized plan of ``df``."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    return len(re.findall(r"\b(?:count|sum|collect_list|min|max|avg)\(", plan))
+
+
+def test_kmeans_round_plan_size_independent_of_dim(spark):
+    """One k-means round builds the same plan at dim=8 and dim=64: the
+    mean is posexploded and grouped by (centroid_id, pos), not one sum
+    and one divide column per dimension — Column-tree building on the
+    driver was the dominant cost of a round."""
+    from osm_poi_matchmaker_spark.operators import similarity as S
+
+    counts = []
+    for dim in (8, 64):
+        rows = [
+            (i, [float((i * 7 + d) % 13) - 6.0 for d in range(dim)]) for i in range(30)
+        ]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        cents = S.kmeans_centroids(df, dim=dim, centroid_mod=10, iters=1)
+        cents.unpersist(blocking=True)
+        counts.append(_aggregate_exprs(cents))
+    assert counts[0] == counts[1], counts
+    assert counts[0] > 0
