@@ -3638,41 +3638,6 @@ def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize_batch(spark.read.parquet(f"{sf_dir}/events.parquet"), gap_minutes=30)
 
 
-# Round-4 driver window: the grading driver checks the FIRST 50 entries of
-# queries() per round. r01 ∪ r02 ∪ r03 covered 144 distinct queries; this
-# window fronts the 27 never-driver-checked entries (VERDICT r3 ask #1:
-# the 14 remaining provider_* plans, the 6 scalar-golden entries, and the
-# 7 round-3 ops), plus bpe_merges/bpe_tokenize which now carry a real
-# pinned-golden oracle (no more no_oracle rows — r01∪…∪r04 = 171/171
-# driver-green), and fills the rest with the round-4-new operators and a
-# re-verification spread over the flagship geospatial core.
-_R4_WINDOW = [
-    # 14 never-checked provider plans
-    "provider_sber", "provider_avia", "provider_mobil_petrol",
-    "provider_ccc", "provider_jysk", "provider_tom",
-    "provider_rossmann", "provider_pingvin", "provider_bubi",
-    "provider_plugee", "provider_volanbusz", "provider_nemzeti",
-    "provider_cib", "provider_magnet",
-    # 6 never-checked scalar-golden entries
-    "coord_fixes", "smart_postcode", "osm_misc_goldens",
-    "complex_opening_hours", "js_var_extract", "live_tags_cache",
-    # 7 never-checked round-3 ops
-    "zonal_page_stats", "compact_cells", "semantic_dedup",
-    "semantic_probe", "dedup_prefix_jaccard", "tfidf_topk",
-    "way_simplify",
-    # BPE — first window with a real oracle
-    "bpe_merges", "bpe_tokenize",
-    # round-4-new operators
-    "ann_topk_ivf_sq8", "match_cascade_planet", "asset_decode_color",
-    "pip_district", "pip_enclave", "district_geometry",
-    "enclave_geometry", "decontaminate_spans", "page_quadkeys",
-    # re-verification spread: flagship cascade + geospatial core
-    "match_cascade", "match_cascade_bounded", "knn_nearest",
-    "geotag_extract", "cell_assign", "cell_histogram",
-    "pip_postcode", "pip_city", "building_relocation",
-    "fuzzy_street", "fuzzy_city", "match_lineage",
-]
-
 # Round-5 window: the 12 new round-5 operators, every entry whose code
 # path was touched this round (BPE empty-doc left join, polygon_geometry
 # multi-ring guard, generalized color-JPEG decoder, cents-parameterized

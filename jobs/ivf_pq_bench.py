@@ -194,34 +194,14 @@ def main() -> None:
     queries = corpus.where(F.col("vec_id") % step == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cents.select("centroid_id", "cent_vec")))
-        .withColumn(
-            "cent_sim", similarity.cosine(F.col("q_vec"), F.col("cent_vec"))
-        )
-        .withColumn("prank", F.row_number().over(w_probe))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_vec", "centroid_id")
-    ).persist()
+    probes = similarity._nearest_centroids(
+        queries, cents.select("centroid_id", "cent_vec"), "q_vec", nprobe
+    ).select("query_id", "q_vec", "centroid_id").persist()
     probes.count()
-
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("match_id")
-    )
-
-    def topk(scored, k=5):
-        return (
-            scored.withColumn("rank", F.row_number().over(w_rank))
-            .where(F.col("rank") <= k)
-            .select("query_id", "match_id", "cosine_sim", "rank")
-        )
 
     # exact baseline
     t0 = time.time()
-    exact = topk(
+    exact = similarity._topk(
         corpus.select(
             F.col("vec_id").alias("match_id"), F.col("embedding").alias("c_vec")
         )
@@ -229,7 +209,8 @@ def main() -> None:
         .where(F.col("query_id") != F.col("match_id"))
         .withColumn(
             "cosine_sim", similarity.cosine(F.col("q_vec"), F.col("c_vec"))
-        )
+        ),
+        5,
     ).persist()
     exact.count()
     t_exact = time.time() - t0
@@ -255,13 +236,13 @@ def main() -> None:
         .withColumn("cosine_sim", similarity.cosine(F.col("q_vec"), recon))
         .withColumnRenamed("vec_id", "match_id")
     )
-    pq_only = topk(short).persist()
+    pq_only = similarity._topk(short, 5).persist()
     pq_only.count()
     t_pq = time.time() - t0
 
     # + refine: fetch full rows for the shortlist, exact re-rank
     t0 = time.time()
-    shortlist = topk(short, k=refine).select("query_id", "match_id")
+    shortlist = similarity._topk(short, refine).select("query_id", "match_id")
     fetched = (
         corpus.withColumnRenamed("vec_id", "match_id")
         .join(F.broadcast(shortlist), "match_id")
@@ -270,7 +251,7 @@ def main() -> None:
             "cosine_sim", similarity.cosine(F.col("q_vec"), F.col("embedding"))
         )
     )
-    pq_ref = topk(fetched).persist()
+    pq_ref = similarity._topk(fetched, 5).persist()
     pq_ref.count()
     t_pq_ref = time.time() - t0
 

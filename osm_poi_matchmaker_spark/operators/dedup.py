@@ -47,20 +47,15 @@ def poi_fuzzy_dedup_pairs(
     ``pois`` needs (key, name, street, housenumber, lat, lon).
     """
     from ..functions.textsim import trigram_similarity
-    from ..tiling import coarse_cell_id, explode_ring3x3
+    from ..tiling import coarse_cell_id, ring_join
 
-    left = explode_ring3x3(
-        pois.select(
-            F.col(key).alias("poi_a"),
-            F.col("name").alias("name_a"),
-            F.col("street").alias("street_a"),
-            F.col("housenumber").alias("hn_a"),
-            "lat",
-            "lon",
-        ),
+    left = pois.select(
+        F.col(key).alias("poi_a"),
+        F.col("name").alias("name_a"),
+        F.col("street").alias("street_a"),
+        F.col("housenumber").alias("hn_a"),
         "lat",
         "lon",
-        mult,
     )
     right = pois.select(
         F.col(key).alias("poi_b"),
@@ -69,11 +64,16 @@ def poi_fuzzy_dedup_pairs(
         F.col("housenumber").alias("hn_b"),
         F.col("lat").alias("lat_b"),
         F.col("lon").alias("lon_b"),
-    ).withColumn("cand_cell", coarse_cell_id(F.col("lat_b"), F.col("lon_b"), mult))
+    )
     sim = trigram_similarity(F.col("name_a"), F.col("name_b"))
     lev = F.levenshtein(F.lower(F.col("street_a")), F.lower(F.col("street_b")))
     return (
-        left.join(right, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            left,
+            right,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("lat_b"), F.col("lon_b"), mult),
+        )
         .where(F.col("poi_a") < F.col("poi_b"))
         .where(F.col("hn_a") == F.col("hn_b"))
         .withColumn("name_sim", sim)

@@ -45,27 +45,9 @@ def fuzzy_street_match(
     """
     from ..functions.textsim import trigram_similarity
     from ..geo import haversine_m
-    from ..tiling import coarse_cell_id, coarse_mult_for_radius, explode_ring3x3
+    from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_join
 
     mult = coarse_mult_for_radius(radius_m)
-    # Ring replication on the road (candidate) side: this join is
-    # shuffle-shaped at scale (no broadcast hint; roads auto-broadcast
-    # only at test scale), and in a shuffle join the exploded side must
-    # be the small one — probe-side explode would put 9× of the
-    # page-derived side through the exchange (see match.py stage 5 for
-    # the full tradeoff; its broadcast path makes the opposite choice).
-    probe = points.select(point_key, "lat", "lon", "street").withColumn(
-        "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult)
-    )
-    cand = explode_ring3x3(
-        roads.select(
-            "road_id", "road_name", F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon")
-        ),
-        "r_lat",
-        "r_lon",
-        mult,
-        out="cand_cell",
-    )
 
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("r_lat"), F.col("r_lon"))
     sim = trigram_similarity(F.col("street"), F.col("road_name"))
@@ -75,8 +57,18 @@ def fuzzy_street_match(
         | (sim >= F.lit(min_similarity))
         | (lev < F.lit(max_lev))
     )
+    # shuffle-shaped at scale (roads auto-broadcast only at test scale):
+    # ring_join's shuffle side rule
     joined = (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            points.select(point_key, "lat", "lon", "street"),
+            roads.select(
+                "road_id", "road_name", F.col("lat").alias("r_lat"), F.col("lon").alias("r_lon")
+            ),
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("r_lat"), F.col("r_lon"), mult),
+            broadcast_candidates=False,
+        )
         .withColumn("distance", dist)
         .where((F.col("distance") < F.lit(radius_m)) & name_ok)
         .withColumn("similarity", F.round(sim, 6))

@@ -3,8 +3,9 @@
 The conflation pipeline's read-side twin: given POIs carrying a numeric
 attribute (opening-hours coverage score, review density, sensor value),
 estimate the field at every page location from its in-radius neighbors.
-One cell-ring radius join (the operators/knn.py layout: probe-side 3×3
-ring into a broadcast candidate table) and one partial-agg groupBy —
+One cell-ring radius join (the operators/knn.py layout:
+:func:`..tiling.ring_join` into a broadcast candidate table) and one
+partial-agg groupBy —
 the page side never shuffles more than one row per page.
 
 Weights are the BOUNDED variant ``w = 1 / (1 + d²)`` (d in the unit of
@@ -20,12 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import haversine_m
-from ..tiling import (
-    coarse_cell_id,
-    coarse_mult_for_radius,
-    explode_ring3x3,
-    explode_ring3x3_of_cell,
-)
+from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_join
 
 
 def idw_interpolate(
@@ -45,8 +41,8 @@ def idw_interpolate(
     the misses, as with kNN).
 
     ``broadcast_candidates=False``: planet-scale path — shuffle
-    equi-join on the ring cell, 9× explode moved to the (smaller)
-    source side. The contributing (target, source) pair set is
+    equi-join on the ring cell, ring side per
+    :func:`..tiling.ring_join`. The contributing (target, source) pair set is
     identical by ring symmetry; ``est`` agrees up to floating-point
     summation order (the shuffle path may fold partials in a different
     order), so the parity test compares n_sources exactly and est to
@@ -58,32 +54,17 @@ def idw_interpolate(
         F.col("lat").alias("s_lat"),
         F.col("lon").alias("s_lon"),
     )
-    if broadcast_candidates:
-        probe = explode_ring3x3(
-            targets.select(target_key, "lat", "lon"), "lat", "lon", mult,
-            out="probe_cell",
-        )
-        cand = F.broadcast(
-            cand.withColumn(
-                "cand_cell", coarse_cell_id(F.col("s_lat"), F.col("s_lon"), mult)
-            )
-        )
-    else:
-        probe = targets.select(target_key, "lat", "lon").withColumn(
-            "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult)
-        )
-        cand = explode_ring3x3_of_cell(
-            cand.withColumn(
-                "_c", coarse_cell_id(F.col("s_lat"), F.col("s_lon"), mult)
-            ),
-            "_c",
-            out="cand_cell",
-        ).drop("_c")
     d = haversine_m(F.col("lat"), F.col("lon"), F.col("s_lat"), F.col("s_lon"))
     ds = d / F.lit(float(scale_m))
     w = F.lit(1.0) / (F.lit(1.0) + ds * ds)
     return (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            targets.select(target_key, "lat", "lon"),
+            cand,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("s_lat"), F.col("s_lon"), mult),
+            broadcast_candidates=broadcast_candidates,
+        )
         .where(d < F.lit(float(radius_m)))
         .groupBy(target_key)
         .agg(

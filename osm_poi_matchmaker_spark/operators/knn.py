@@ -6,11 +6,8 @@ analogue: "k-ring cell-expansion kNN for nearest-POI assignment".
 
 Strategy: a radius-bounded nearest-1 (or nearest-k) join. The coarse cell
 size is picked so a 3×3 ring covers the radius (tiling.coarse_mult_for_radius);
-the 9× ring replication lives on the PROBE side, pipelined in-task into a
-broadcast probe of the unexploded candidate table — the measured-faster
-layout for the broadcast path (see operators/match.py stage 5 for the
-control-bracketed A/B; a 9×-exploded broadcast hash relation costs more
-than the 9 extra cheap probes save). Haversine post-filter, then a
+the join is :func:`..tiling.ring_join` (its side rule puts the ring on
+the probe side of the broadcast path). Haversine post-filter, then a
 min-struct aggregate (k=1) or min-by window (k>1). Points with no
 candidate inside the radius are reported unmatched (left join, NULL osm_id)
 — at planetary scale an unbounded nearest-neighbor would force ring
@@ -25,12 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..geo import haversine_m
-from ..tiling import (
-    coarse_cell_id,
-    coarse_mult_for_radius,
-    explode_ring3x3,
-    explode_ring3x3_of_cell,
-)
+from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_join
 
 
 def nearest_poi(
@@ -48,43 +40,24 @@ def nearest_poi(
     candidate in range (inner semantics — callers left-join if they need
     the misses).
 
-    ``broadcast_candidates``: True (default) = the country-scale plan —
-    probe-side ring explode into a broadcast of the UNexploded candidate
-    table (pois ~10^6 rows broadcasts; the 9 probe rows per point are
-    generated and consumed inside the same task, no shuffle, and the
-    hash relation stays 9× smaller than a candidate-side explode would
-    make it — the measured-faster tradeoff, match.py stage 5 A/B).
-    False = the planet-scale degradation path (10^8-row POI tables blow
-    the broadcast limit): no hint — the optimizer picks sort-merge /
-    shuffled-hash on the ring cell — and the 9× ring explode moves to
-    the CANDIDATE side so the smaller table carries the fan-out through
-    the exchange (same side rule as match.py's shuffle path; winners
-    are identical by ring symmetry, tested in tests/test_knn.py).
+    ``broadcast_candidates``: True (default) = the country-scale plan,
+    candidates broadcast (pois ~10^6 rows). False = the planet-scale
+    degradation path (10^8-row POI tables blow the broadcast limit): no
+    hint, the optimizer picks sort-merge / shuffled-hash on the ring
+    cell. The ring explode side follows :func:`..tiling.ring_join`;
+    winners are identical by ring symmetry (tested in
+    tests/test_knn_family_shuffle.py).
     """
     mult = coarse_mult_for_radius(radius_m)
-    if broadcast_candidates:
-        probe = explode_ring3x3(
-            points.select(point_key, "lat", "lon"), "lat", "lon", mult, out="probe_cell"
-        )
-        cand = pois.select(
-            "osm_id", F.col("lat").alias("o_lat"), F.col("lon").alias("o_lon")
-        ).withColumn("cand_cell", coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult))
-        cand = F.broadcast(cand)
-    else:
-        probe = points.select(point_key, "lat", "lon").withColumn(
-            "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult)
-        )
-        cand = explode_ring3x3_of_cell(
-            pois.select(
-                "osm_id", F.col("lat").alias("o_lat"), F.col("lon").alias("o_lon")
-            ).withColumn("_c", coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult)),
-            "_c",
-            out="cand_cell",
-        ).drop("_c")
-
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon"))
     joined = (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            points.select(point_key, "lat", "lon"),
+            pois.select("osm_id", F.col("lat").alias("o_lat"), F.col("lon").alias("o_lon")),
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult),
+            broadcast_candidates=broadcast_candidates,
+        )
         .withColumn("distance", dist)
         .where(F.col("distance") < F.lit(float(radius_m)))
     )
@@ -174,16 +147,15 @@ def nearest_competitor(
     """Nearest DIFFERENT-brand POI within ``radius_m`` of each POI — the
     competitor-distance read-off behind catchment/cannibalization
     analyses (and the reference's avoid-name checks, inverted). Same
-    cell-ring self-join layout as :func:`nearest_poi` (probe-side ring,
-    candidates broadcast, min-struct winner with map-side combine);
+    cell-ring self-join layout as :func:`nearest_poi` (candidates
+    broadcast, min-struct winner with map-side combine);
     the brand inequality is null-safe (NULL vs 'X' counts as a
     competitor, NULL vs NULL does not). Returns
     (key, competitor_id, competitor_name, distance_m), inner semantics.
 
     ``broadcast_candidates=False`` is the planet-scale self-join path:
-    no broadcast hint, ring explode on the candidate arm (a self-join
-    has no smaller side; moving the fan-out to the candidate arm keeps
-    the two paths winner-identical by ring symmetry — see nearest_poi).
+    no broadcast hint, ring side per :func:`..tiling.ring_join`
+    (winner-identical by ring symmetry — see nearest_poi).
     """
     mult = coarse_mult_for_radius(radius_m)
     cand = pois.select(
@@ -192,29 +164,15 @@ def nearest_competitor(
         F.col("lat").alias("b_lat"),
         F.col("lon").alias("b_lon"),
     )
-    if broadcast_candidates:
-        probe = explode_ring3x3(
-            pois.select(key, name, "lat", "lon"), "lat", "lon", mult, out="probe_cell"
-        )
-        cand = F.broadcast(
-            cand.withColumn(
-                "cand_cell", coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult)
-            )
-        )
-    else:
-        probe = pois.select(key, name, "lat", "lon").withColumn(
-            "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult)
-        )
-        cand = explode_ring3x3_of_cell(
-            cand.withColumn(
-                "_c", coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult)
-            ),
-            "_c",
-            out="cand_cell",
-        ).drop("_c")
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon"))
     return (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            pois.select(key, name, "lat", "lon"),
+            cand,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult),
+            broadcast_candidates=broadcast_candidates,
+        )
         .where(
             (F.col(key) != F.col("b_id"))
             & ~F.col(name).eqNullSafe(F.col("b_name"))

@@ -25,14 +25,11 @@ on composite keys. Stage 5 is a radius join → coarse-cell 3×3 ring joins
 keyed on (brand, cell): the candidate side explodes its precomputed
 per-POI brand-eligibility arrays (see _prep_pois) so brand compatibility
 is a JOIN KEY, not a post-join filter — the join emits only compatible
-pairs instead of every page×candidate pair sharing a cell. The 3×3 ring
-replication lives on the probe side — measured faster than a 9×-fatter
-broadcast hash relation at every parallelism level tried; see the
-stage-5 comment for the A/B numbers and for why the SHUFFLE degradation
-path flips that choice. The named tiers (950/970/980) ring at the
-d_perfect-sized grid; the no-name
-tier (990, d < 5 m) rings at a ~25× finer grid its tiny radius permits. The
-haversine + tier predicates evaluate post-join as codegen'd column
+pairs instead of every page×candidate pair sharing a cell. Which side
+carries the 3×3 ring is :func:`..tiling.ring_join`'s side rule (with its
+measured A/B). The named tiers (950/970/980) ring at the d_perfect-sized
+grid; the no-name tier (990, d < 5 m) rings at a ~25× finer grid its tiny
+radius permits. The haversine + tier predicates evaluate post-join as codegen'd column
 expressions. A min-struct aggregate (stage → priority → distance →
 osm_id) then reproduces "first non-empty stage wins, best (priority,
 distance) within stage" exactly — with osm_id as the deterministic
@@ -48,7 +45,7 @@ page. At planet scale (10^8 POIs) the identical plan degrades
 gracefully: ``match_cascade(..., broadcast_candidates=False)`` drops the
 hints (→ shuffle equi-joins on the same composite keys, AQE skew-join
 splitting mega-cells) and moves the ring explode to the candidate side
-so 9× of the SMALL side crosses the exchange. Winners are identical on
+(``ring_join``'s side rule). Winners are identical on
 both paths (test_match_priority.py::test_shuffle_path_identical_winners).
 The 12-row brand dim is always broadcast.
 
@@ -67,13 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..geo import haversine_m
-from ..tiling import (
-    coarse_cell_id,
-    coarse_mult_for_radius,
-    coarse_ring_spec,
-    explode_ring3x3,
-    explode_ringk,
-)
+from ..tiling import coarse_cell_id, coarse_mult_for_radius, coarse_ring_spec, ring_join
 
 # Priorities exactly as the reference assigns them (dao/poi_base.py:254-683).
 PRIO_REF = 930
@@ -88,16 +79,19 @@ PRIO_NONAME = 990
 MATCH_OUT_COLS = ("page_id", "osm_id", "node_type", "stage", "priority", "distance")
 
 
-def type_predicate(poi_type: Column, shop: Column, amenity: Column, railway: Column) -> Column:
-    """Per-brand tag predicate (analogue of ``utils/poitypes.py:15-96``)."""
-    return (
-        F.when(poi_type == "shop", shop.isin("convenience", "supermarket"))
-        .when(poi_type == "fuel", amenity == "fuel")
-        .when(poi_type == "post_office", amenity == "post_office")
-        .when(poi_type == "bank", amenity == "bank")
-        .when(poi_type == "railway_station", railway == "station")
-        .otherwise(F.lit(False))
-    )
+def type_predicate(poi_type: str, shop: Column, amenity: Column, railway: Column) -> Column:
+    """Tag predicate of one brand type (analogue of
+    ``utils/poitypes.py:15-96``); an unknown type matches nothing. The
+    type is a plan-time constant, so it is resolved here rather than
+    compared as a literal in the plan. Only that one predicate is built:
+    each Column is a round trip to the JVM, paid per brand per plan."""
+    if poi_type == "shop":
+        return shop.isin("convenience", "supermarket")
+    if poi_type in ("fuel", "post_office", "bank"):
+        return amenity == poi_type
+    if poi_type == "railway_station":
+        return railway == "station"
+    return F.lit(False)
 
 
 def with_common(pages_geo: DataFrame, common: DataFrame) -> DataFrame:
@@ -144,11 +138,10 @@ def _prep_pois(pois: DataFrame, brand_specs: list) -> DataFrame:
         F.lower(F.col("name")).alias("name_lc"),
     )
     name_lc = F.col("name_lc")
+    shop, amenity, railway = F.col("shop"), F.col("amenity"), F.col("railway")
 
     def type_ok(ptype: str):
-        return type_predicate(
-            F.lit(ptype), F.col("shop"), F.col("amenity"), F.col("railway")
-        )
+        return type_predicate(ptype, shop, amenity, railway)
 
     type_hits = F.array_compact(
         F.array(
@@ -205,13 +198,12 @@ def match_cascade(
     with pc_id/search_rx/avoid_rx/poi_type/d_perfect) — skips the
     driver-side collect() job when the caller already holds them.
     ``broadcast_candidates``: True (default) = the country-scale plan,
-    every arm broadcasts the prepared candidate side and the ring explode
-    sits probe-side. False = the planet-scale degradation (10^8 POIs, a
-    candidate side too big to broadcast): the arms become shuffle
-    equi-joins on the same composite keys, and the ring explode moves to
-    the CANDIDATE side so 9× of the small side — never of the 10^12-row
-    page side — crosses the exchange. Winners are identical either way
-    (tested); only the physical strategy changes.
+    every arm broadcasts the prepared candidate side. False = the
+    planet-scale degradation (10^8 POIs, a candidate side too big to
+    broadcast): the arms become shuffle equi-joins on the same composite
+    keys. The ring explode side follows :func:`..tiling.ring_join`.
+    Winners are identical either way (tested); only the physical
+    strategy changes.
 
     ``name_arm_radius_m``: None (default) keeps the reference's semantics
     exactly — the attribute arms (unique-name s2, name+csn+city s3,
@@ -284,37 +276,17 @@ def match_cascade(
 
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon"))
 
-    # Optional spatial bound for the attribute arms (see docstring). The
-    # ring explode follows the same side rule as stage 5: probe-side when
-    # the candidate side broadcasts (9× smaller hash relation), candidate-
-    # side on the shuffle path (9× of the SMALL side crosses the exchange).
-    if name_arm_radius_m is not None:
-        # the bound is a caller-chosen relaxation radius, legitimately
-        # settable beyond the mult=1 grid pitch — coarse_ring_spec widens
-        # the ring ((2k+1)² cells) instead of missing near-pitch pairs
-        mult_bound, k_bound = coarse_ring_spec(name_arm_radius_m)
-
-        def bound_arm(probe: DataFrame, cand: DataFrame):
-            if broadcast_candidates:
-                probe = explode_ringk(
-                    probe, "lat", "lon", mult_bound, k_bound, out="nb_cell"
-                )
-                cand = cand.withColumn(
-                    "cand_nb_cell",
-                    coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult_bound),
-                )
-            else:
-                probe = probe.withColumn(
-                    "nb_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult_bound)
-                )
-                cand = explode_ringk(
-                    cand, "o_lat", "o_lon", mult_bound, k_bound, out="cand_nb_cell"
-                )
-            return probe, cand, [F.col("nb_cell") == F.col("cand_nb_cell")]
-    else:
-
-        def bound_arm(probe: DataFrame, cand: DataFrame):
-            return probe, cand, []
+    def ring(probe: DataFrame, cand: DataFrame, mult: int, k: int, on: Column) -> DataFrame:
+        """Page × candidate radius join on the ``mult`` grid."""
+        return ring_join(
+            probe,
+            cand,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult),
+            k,
+            on=on,
+            broadcast_candidates=broadcast_candidates,
+        )
 
     avoid_ok = F.when(
         F.col("avoid_rx").isNotNull(),
@@ -354,14 +326,14 @@ def match_cascade(
     )
 
     def attr_arm(probe: DataFrame, cand: DataFrame, cond: Column, stage: int, prio: int) -> DataFrame:
-        """Attribute-keyed arm, optionally spatially bounded (see above)."""
-        probe, cand, bound_keys = bound_arm(probe, cand)
-        for bk in bound_keys:
-            cond = cond & bk
-        joined = probe.join(_cand(cand), cond)
-        if name_arm_radius_m is not None:
-            joined = joined.where(dist < F.lit(float(name_arm_radius_m)))
-        return arm(joined, stage, prio)
+        """Attribute-keyed arm, optionally spatially bounded (see docstring)."""
+        if name_arm_radius_m is None:
+            return arm(probe.join(_cand(cand), cond), stage, prio)
+        # the bound is a caller-chosen relaxation radius, legitimately
+        # settable beyond the mult=1 grid pitch — coarse_ring_spec widens
+        # the ring ((2k+1)² cells) instead of missing near-pitch pairs
+        joined = ring(probe, cand, *coarse_ring_spec(name_arm_radius_m), on=cond)
+        return arm(joined.where(dist < F.lit(float(name_arm_radius_m))), stage, prio)
 
     # -- stage 2: unique-name exact equality (930, poi_base.py:312-338) —
     # LOWER(name) = LOWER(:unique_name) under the tag predicate, no radius
@@ -421,50 +393,15 @@ def match_cascade(
     # unchanged.
     d = F.col("distance")
 
-    # The RING EXPLODE lives on the PROBE (page) side. Both sides are
-    # valid — a point is within one ring-step of a candidate's cell iff
-    # the candidate is within one ring-step of the point's cell, so
-    # exploding either side produces the identical pair set — and the
-    # choice is a measured tradeoff, not a principle:
-    #
-    #   * BROADCAST path (this plan): probe-side explode keeps the hash
-    #     relation 9× smaller and cache-resident; the 9 extra probes per
-    #     page are pipelined in-task (no shuffle — the explode feeds the
-    #     broadcast probe directly) and mostly hit empty cells. A
-    #     control-bracketed interleaved A/B of the full 3.84M-page job at
-    #     8 pinned cores measured probe-side at 74.8/83.2/99.1 s vs
-    #     candidate-side at 101.2/87.0/90.7 s (min 74.8 vs 87.0, each
-    #     pass bracketed by a pure-CPU host-drift control) — the fat
-    #     9×-exploded hash relation costs more than the extra probes
-    #     save, at every parallelism level tried (2/8/32).
-    #   * SHUFFLE path (the 10^8-POI degradation, hint dropped): the
-    #     explode MUST move to the candidate side — probe-side explode
-    #     would put 9× of the 10^12-row side through the exchange;
-    #     candidate-side puts 9× of the small side. fuzzy.py/relocate.py,
-    #     which are shuffle-shaped at scale, explode candidate-side for
-    #     exactly that reason.
-    mult_named = coarse_mult_for_radius(max_radius)
-    if broadcast_candidates:
-        probe_a = explode_ring3x3(p, "lat", "lon", mult_named, out="probe_cell")
-        cand_a = o_name.withColumn(
-            "cand_cell", coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult_named)
-        )
-    else:
-        # shuffle path: 9× the SMALL side crosses the exchange
-        probe_a = p.withColumn(
-            "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult_named)
-        )
-        cand_a = explode_ring3x3(o_name, "o_lat", "o_lon", mult_named, out="cand_cell")
+    # Ring side and hint: ring_join's side rule (tiling.py).
     prio_a = (
         F.when(F.col("s_eq") & F.col("h_eq") & (d < F.col("d_perfect")), PRIO_NAME_STREET_HN)
         .when((F.col("s_eq") | F.col("h_eq")) & (d < F.col("d_safe")), PRIO_NAME_PARTIAL)
         .when(d < F.col("d_safe"), PRIO_NAME_ONLY)
     )
+    brand_key = F.col("pc_id") == F.col("cand_pc")
     s5a = (
-        probe_a.join(
-            _cand(cand_a),
-            (F.col("probe_cell") == F.col("cand_cell")) & (F.col("pc_id") == F.col("cand_pc")),
-        )
+        ring(p, o_name, coarse_mult_for_radius(max_radius), 1, on=brand_key)
         .withColumn("distance", dist)
         .withColumn("s_eq", F.col("lc_street") == F.col("lc_o_street"))
         .withColumn("h_eq", F.col("lc_hn") == F.col("lc_o_hn"))
@@ -477,22 +414,8 @@ def match_cascade(
     )
 
     min_unsafe = max(r["d_unsafe"] for r in common_rows)
-    mult_nn = coarse_mult_for_radius(min_unsafe)
-    if broadcast_candidates:
-        probe_b = explode_ring3x3(p, "lat", "lon", mult_nn, out="probe_cell")
-        cand_b = o_type.withColumn(
-            "cand_cell", coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult_nn)
-        )
-    else:
-        probe_b = p.withColumn(
-            "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult_nn)
-        )
-        cand_b = explode_ring3x3(o_type, "o_lat", "o_lon", mult_nn, out="cand_cell")
     s5b = (
-        probe_b.join(
-            _cand(cand_b),
-            (F.col("probe_cell") == F.col("cand_cell")) & (F.col("pc_id") == F.col("cand_pc")),
-        )
+        ring(p, o_type, coarse_mult_for_radius(min_unsafe), 1, on=brand_key)
         .withColumn("distance", dist)
         .where(avoid_ok & (d < F.col("d_unsafe")))
         .select(

@@ -13,8 +13,9 @@ centroid→POI line with the building outline via
 the centroid→POI segment itself — same determinism, same inputs,
 documented deviation.)
 
-Spark rebuild: a coarse-cell ring join (60 m radius, ring replication on
-the building side) with street/hn equality folded into the join keys +
+Spark rebuild: a coarse-cell ring join (60 m radius, shuffle-shaped:
+buildings are ~10^8 rows planet-wide, so no broadcast hint) with
+street/hn equality folded into the join keys +
 nearest-1 min-struct aggregate, then pure-arithmetic coordinate
 interpolation.
 """
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import haversine_m
-from ..tiling import coarse_cell_id, coarse_mult_for_radius, explode_ring3x3
+from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_join
 
 
 def interpolation_fraction(name_col) -> F.Column:
@@ -47,38 +48,25 @@ def relocate_new_pois(
     Only rows with a qualifying building are returned (reference leaves
     the POI untouched otherwise)."""
     mult = coarse_mult_for_radius(radius_m)
-    # Ring explode on the building (candidate) side: shuffle-shaped at
-    # scale (no broadcast hint — buildings are ~10^8 rows planet-wide), so
-    # the exploded side must be the small one; probe-side explode would
-    # put 9× of the page-derived side through the exchange (match.py
-    # stage 5 documents the tradeoff; its broadcast path chooses the
-    # opposite). Street + housenumber equality is part of the join
-    # condition so Catalyst extracts all three as hash keys — only
-    # same-address pairs materialize.
-    probe = new_pois.select(
-        point_key, "name", "lat", "lon", "street", "housenumber"
-    ).withColumn("probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult))
-    cand = explode_ring3x3(
-        buildings.select(
-            "building_id",
-            "b_street",
-            "b_housenumber",
-            F.col("lat").alias("b_lat"),
-            F.col("lon").alias("b_lon"),
-        ),
-        "b_lat",
-        "b_lon",
-        mult,
-        out="cand_cell",
-    )
-
+    # Street + housenumber equality is part of the join condition so
+    # Catalyst extracts all three as hash keys — only same-address pairs
+    # materialize.
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon"))
     joined = (
-        probe.join(
-            cand,
-            (F.col("probe_cell") == F.col("cand_cell"))
-            & (F.lower(F.col("street")) == F.lower(F.col("b_street")))
+        ring_join(
+            new_pois.select(point_key, "name", "lat", "lon", "street", "housenumber"),
+            buildings.select(
+                "building_id",
+                "b_street",
+                "b_housenumber",
+                F.col("lat").alias("b_lat"),
+                F.col("lon").alias("b_lon"),
+            ),
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult),
+            on=(F.lower(F.col("street")) == F.lower(F.col("b_street")))
             & (F.lower(F.col("housenumber")) == F.lower(F.col("b_housenumber"))),
+            broadcast_candidates=False,
         )
         .withColumn("distance", dist)
         .where(F.col("distance") < F.lit(radius_m))

@@ -9,12 +9,11 @@ cluster in a single distributed pass. This module adds classic DBSCAN
 which already has a measured scale shape elsewhere in this engine:
 
 1. **ε-pair generation** — :func:`distance_band_pairs`: a cell-bucketed
-   self-join (the kNN grid from ``tiling.py``: probe side explodes its
-   3×3 coarse-cell ring, candidate side keeps one cell, equi-join on
+   self-join (``tiling.ring_join`` on the kNN grid: probe side explodes
+   its 3×3 coarse-cell ring, candidate side keeps one cell, equi-join on
    the cell id, exact haversine post-filter). Never all-pairs: the only
    shuffle is the cell-keyed co-location, identical to the
-   ``operators/knn.py`` layout but self-joined, and the ring explode
-   stays on the probe side (measured cheaper — match.py stage-5 A/B).
+   ``operators/knn.py`` layout but self-joined.
 2. **Core rule** — a degree aggregate over the pair set (map-side
    partial combine; one row per point crosses the shuffle).
 3. **Clustering** — :func:`~.dedup.connected_components` (min-label
@@ -36,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import haversine_m
-from ..tiling import coarse_cell_id, coarse_mult_for_radius, explode_ring3x3
+from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_join
 from .dedup import connected_components
 
 
@@ -50,21 +49,19 @@ def distance_band_pairs(
     the 3×3 ring probe exhaustive. Returns (a, b, distance).
     """
     mult = coarse_mult_for_radius(eps_m)
-    probe = explode_ring3x3(
-        points.select(F.col(key).alias("a"), "lat", "lon"),
-        "lat",
-        "lon",
-        mult,
-        out="probe_cell",
-    )
     cand = points.select(
         F.col(key).alias("b"),
         F.col("lat").alias("b_lat"),
         F.col("lon").alias("b_lon"),
-    ).withColumn("cand_cell", coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult))
+    )
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon"))
     return (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            points.select(F.col(key).alias("a"), "lat", "lon"),
+            cand,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult),
+        )
         .where((F.col("a") < F.col("b")) & (dist < F.lit(float(eps_m))))
         .select("a", "b", dist.alias("distance"))
     )
@@ -154,22 +151,20 @@ def dbscan_clusters_contracted(
     # pairs too — the fine-cell inequality filters them before they
     # hit the aggregate).
     mult = coarse_mult_for_radius(eps_m)
-    probe = explode_ring3x3(
-        pts.select(F.col("node").alias("a"), "lat", "lon", F.col("fcell").alias("fa")),
-        "lat",
-        "lon",
-        mult,
-        out="probe_cell",
-    )
     cand = pts.select(
         F.col("node").alias("b"),
         F.col("lat").alias("b_lat"),
         F.col("lon").alias("b_lon"),
         F.col("fcell").alias("fb"),
-    ).withColumn("cand_cell", coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult))
+    )
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon"))
     cross = (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            pts.select(F.col("node").alias("a"), "lat", "lon", F.col("fcell").alias("fa")),
+            cand,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult),
+        )
         .where(
             (F.col("a") < F.col("b"))
             & (F.col("fa") != F.col("fb"))
@@ -300,26 +295,20 @@ def dbscan_assign_probe(
     probing from the (small) batch side.
     """
     mult = coarse_mult_for_radius(eps_m)
-    probe = explode_ring3x3(
-        batch.select(F.col(key).alias("b_id"), "lat", "lon"),
-        "lat",
-        "lon",
-        mult,
-        out="probe_cell",
-    )
-    cores = (
-        settled.where(F.col("role") == "core")
-        .select(
-            F.col(key).alias("c_id"),
-            F.col("lat").alias("c_lat"),
-            F.col("lon").alias("c_lon"),
-            "cluster",
-        )
-        .withColumn("cand_cell", coarse_cell_id(F.col("c_lat"), F.col("c_lon"), mult))
+    cores = settled.where(F.col("role") == "core").select(
+        F.col(key).alias("c_id"),
+        F.col("lat").alias("c_lat"),
+        F.col("lon").alias("c_lon"),
+        "cluster",
     )
     dist = haversine_m(F.col("lat"), F.col("lon"), F.col("c_lat"), F.col("c_lon"))
     hits = (
-        probe.join(cores, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            batch.select(F.col(key).alias("b_id"), "lat", "lon"),
+            cores,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            coarse_cell_id(F.col("c_lat"), F.col("c_lon"), mult),
+        )
         .where(dist < F.lit(float(eps_m)))
         .groupBy("b_id")
         .agg(F.min("cluster").alias("cluster"))

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..tiling import coarse_cell_id, explode_ring3x3, explode_ring3x3_of_cell
+from ..tiling import coarse_cell_id, explode_ring, ring_join
 
 _KY = 111194.9267  # meters per degree latitude (R=6371000)
 _KX0 = 111319.4908  # meters per degree longitude at the equator
@@ -95,11 +95,10 @@ def nearest_way(
     way_id), inner semantics like kNN.
 
     ``broadcast_candidates=False``: planet-scale path — no hint, ring
-    explode on the (way, node-cell) side (the way table is the smaller
-    side in rows AND the explode output is re-deduped per (way, ring
-    cell) before the exchange, so node arrays cross the shuffle at most
-    9× per occupied cell, vs 9× per PAGE on a probe-side explode).
-    Winner-identical by ring symmetry (tests/test_ways.py).
+    explode on the (way, node-cell) side per :func:`..tiling.ring_join`,
+    re-deduped per (way, ring cell) before the exchange so node arrays
+    cross the shuffle at most 9× per occupied cell. Winner-identical by
+    ring symmetry (tests/test_knn_family_shuffle.py).
     """
     # candidate (way, node-cell) pairs, deduped per cell
     cand = (
@@ -108,24 +107,23 @@ def nearest_way(
         .select("way_id", "cand_cell", "nodes")
         .dropDuplicates(["way_id", "cand_cell"])
     )
-    if broadcast_candidates:
-        probe = explode_ring3x3(
-            points.select(point_key, "lat", "lon"), "lat", "lon", mult,
-            out="probe_cell",
-        )
-        cand = F.broadcast(cand)
-    else:
-        probe = points.select(point_key, "lat", "lon").withColumn(
-            "probe_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult)
-        )
+    if not broadcast_candidates:
         # a way reaches the same ring cell through several of its node
-        # cells — dedupe again so each (way, cell) ships once
-        cand = explode_ring3x3_of_cell(
-            cand.withColumnRenamed("cand_cell", "_c"), "_c", out="cand_cell"
-        ).drop("_c").dropDuplicates(["way_id", "cand_cell"])
+        # cells — explode here and dedupe again so each (way, cell) ships
+        # once; the join then keys on the 0-ring (k=0 explodes nothing)
+        cand = explode_ring(cand, F.col("cand_cell"), 1, "cand_cell").dropDuplicates(
+            ["way_id", "cand_cell"]
+        )
     d = _min_segment_dist(F.col("nodes"), F.col("lat"), F.col("lon"), lat_of, lon_of)
     hits = (
-        probe.join(cand, F.col("probe_cell") == F.col("cand_cell"))
+        ring_join(
+            points.select(point_key, "lat", "lon"),
+            cand,
+            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
+            F.col("cand_cell"),
+            k=1 if broadcast_candidates else 0,
+            broadcast_candidates=broadcast_candidates,
+        )
         .select(point_key, "way_id", d.alias("distance"))
         .where(F.col("distance") < F.lit(float(radius_m)))
         # a way can be found through several of its node cells — the

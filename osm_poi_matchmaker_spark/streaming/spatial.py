@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..geo import haversine_m
-from ..tiling import X_SPAN, coarse_cell_id, coarse_mult_for_radius
+from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_offsets
 
 
 def dbscan_probe_stream(
@@ -75,9 +75,8 @@ def dbscan_probe_stream(
         "_cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult)
     )
 
-    offsets = [dy * X_SPAN + dx for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
     mins = []
-    for j, off in enumerate(offsets):
+    for j, off in enumerate(ring_offsets(1)):
         side = idx.select(
             F.col("cell").alias(f"_k{j}"), F.col("cores").alias(f"_c{j}")
         )

@@ -74,34 +74,6 @@ def kring_k_for_radius(radius_m: float) -> int:
     return int(math.ceil(radius_m / MIN_CELL_METERS)) + 1
 
 
-def kring_cells(cell: Column, k: int) -> Column:
-    """Array of the (2k+1)^2 cell ids within Chebyshev distance k.
-
-    Built-in ``sequence``/``transform``/``flatten`` — stays inside
-    whole-stage codegen, no Python.
-    """
-    dxs = F.sequence(F.lit(-k), F.lit(k))
-    return F.flatten(
-        F.transform(
-            dxs,
-            lambda dy: F.transform(F.sequence(F.lit(-k), F.lit(k)), lambda dx: cell + dy * F.lit(X_SPAN) + dx),
-        )
-    )
-
-
-def explode_kring(
-    df: DataFrame, cell_col: str = "cell_id", k: int = 1, out: str = "probe_cell"
-) -> DataFrame:
-    """Explode each row into its k-ring: the probe side of a cell join.
-
-    Fan-out is (2k+1)^2 rows; at radius 300 m (reference distance_perfect,
-    ``utils/config.py:241-295``) k=4 → 81 cells. On the 100 TB path the
-    probe side is the smaller, already-filtered geotagged subset, and the
-    join key (probe_cell) aligns with the candidate table's layout.
-    """
-    return df.withColumn(out, F.explode(kring_cells(F.col(cell_col), k)))
-
-
 # ---------------------------------------------------------------------------
 # Coarse multi-resolution cells: radius-sized cells + a fixed 3×3 ring.
 #
@@ -113,6 +85,22 @@ def explode_kring(
 # = 73616/mult meters.
 # ---------------------------------------------------------------------------
 MAX_LON_METERS_PER_DEG = 73616.0  # at the northern edge of the HU bbox
+
+
+def _coarse_grid(radius_m: float, max_lat: float) -> tuple[int, float]:
+    """(mult, pitch): the finest power-of-two cells-per-degree whose
+    pitch at the HU northern edge is >= ``radius_m`` (mult 1 at the
+    coarsest), and that grid's longitude pitch in meters AT ``max_lat``
+    (pitch shrinks by cos(lat)/cos(48.6°))."""
+    if radius_m <= 0:
+        raise ValueError(f"radius_m must be > 0, got {radius_m}")
+    mult = 512
+    while mult > 1 and MAX_LON_METERS_PER_DEG / mult < radius_m:
+        mult //= 2
+    pitch_at_lat = (
+        MAX_LON_METERS_PER_DEG / mult
+    ) * math.cos(math.radians(max_lat)) / math.cos(math.radians(48.6))
+    return mult, pitch_at_lat
 
 
 def coarse_mult_for_radius(radius_m: float, max_lat: float = 48.6) -> int:
@@ -130,14 +118,7 @@ def coarse_mult_for_radius(radius_m: float, max_lat: float = 48.6) -> int:
     their own ``max_lat``; callers at marginal radii drop to the next
     coarser grid or shrink the radius (see poi_dbscan @400/mult128 and
     brand_colocation @250/mult256 for worked margins)."""
-    if radius_m <= 0:
-        raise ValueError(f"radius_m must be > 0, got {radius_m}")
-    mult = 512
-    while mult > 1 and MAX_LON_METERS_PER_DEG / mult < radius_m:
-        mult //= 2
-    pitch_at_lat = (
-        MAX_LON_METERS_PER_DEG / mult
-    ) * math.cos(math.radians(max_lat)) / math.cos(math.radians(48.6))
+    mult, pitch_at_lat = _coarse_grid(radius_m, max_lat)
     if radius_m > pitch_at_lat:
         raise ValueError(
             f"radius {radius_m} m exceeds the {pitch_at_lat:.1f} m grid pitch "
@@ -158,16 +139,6 @@ def coarse_cell_id(lat: Column, lon: Column, mult: int) -> Column:
     return y * F.lit(X_SPAN) + x
 
 
-def explode_ring3x3(
-    df: DataFrame, lat: str, lon: str, mult: int, out: str = "probe_cell"
-) -> DataFrame:
-    """3×3 ring around the row's coarse cell — the probe side of a
-    radius-bounded join (fixed 9× fan-out regardless of radius)."""
-    cell = coarse_cell_id(F.col(lat), F.col(lon), mult)
-    offsets = F.array(*[F.lit(dy * X_SPAN + dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1)])
-    return df.withColumn(out, F.explode(F.transform(offsets, lambda o: cell + o)))
-
-
 def coarse_ring_spec(radius_m: float, max_lat: float = 48.6) -> tuple[int, int]:
     """(mult, k): grid + smallest Chebyshev ring radius covering
     ``radius_m`` at ``max_lat``. k=1 (the 3×3 ring) whenever the radius
@@ -179,41 +150,85 @@ def coarse_ring_spec(radius_m: float, max_lat: float = 48.6) -> tuple[int, int]:
     the mult=1 pitch (e.g. match_cascade's name-arm bound); use the
     strict function when a marginal radius means the OPERATOR's grid
     choice is wrong."""
-    if radius_m <= 0:
-        raise ValueError(f"radius_m must be > 0, got {radius_m}")
-    mult = 512
-    while mult > 1 and MAX_LON_METERS_PER_DEG / mult < radius_m:
-        mult //= 2
-    pitch_at_lat = (
-        MAX_LON_METERS_PER_DEG / mult
-    ) * math.cos(math.radians(max_lat)) / math.cos(math.radians(48.6))
+    mult, pitch_at_lat = _coarse_grid(radius_m, max_lat)
     return mult, int(radius_m // pitch_at_lat) + 1
 
 
-def explode_ringk(
-    df: DataFrame, lat: str, lon: str, mult: int, k: int, out: str = "probe_cell"
+def ring_offsets(k: int) -> list[int]:
+    """Cell-id offsets of the (2k+1)×(2k+1) ring within Chebyshev
+    distance ``k`` of a cell (row-major, X_SPAN stride; k=1 is the 3×3
+    ring) — the one offset list every ring join and streaming probe
+    uses."""
+    return [dy * X_SPAN + dx for dy in range(-k, k + 1) for dx in range(-k, k + 1)]
+
+
+def explode_ring(df: DataFrame, cell: Column, k: int, out: str) -> DataFrame:
+    """One row per cell of the k-ring around ``cell``, in column ``out``.
+
+    The cell is computed once per row as a column, and the explode only
+    adds each offset to it: in the ``transform`` lambda body a cell
+    expression would be re-evaluated for every offset. Fan-out is
+    (2k+1)² rows per input row; the 0-ring is the cell itself, so
+    k=0 adds the cell column and explodes nothing."""
+    df = df.withColumn(out, cell)
+    if k == 0:
+        return df
+    offsets = F.array(*[F.lit(o) for o in ring_offsets(k)])
+    return df.withColumn(out, F.explode(F.transform(offsets, lambda o: F.col(out) + o)))
+
+
+def ring_join(
+    probe: DataFrame,
+    cand: DataFrame,
+    probe_cell: Column,
+    cand_cell: Column,
+    k: int = 1,
+    on: Column | None = None,
+    broadcast_candidates: bool | None = None,
 ) -> DataFrame:
-    """(2k+1)×(2k+1) ring around the row's coarse cell — the general
-    form of :func:`explode_ring3x3` for radii beyond the grid pitch."""
-    cell = coarse_cell_id(F.col(lat), F.col(lon), mult)
-    offsets = F.array(
-        *[
-            F.lit(dy * X_SPAN + dx)
-            for dy in range(-k, k + 1)
-            for dx in range(-k, k + 1)
-        ]
-    )
-    return df.withColumn(out, F.explode(F.transform(offsets, lambda o: cell + o)))
+    """THE radius join: every (probe, candidate) pair whose cells lie
+    within ``k`` ring steps of each other, keyed ``probe_cell ==
+    cand_cell`` (AND ``on`` when given, so extra equality keys become
+    hash keys of the same join). ``probe_cell``/``cand_cell`` are the
+    two sides' cell expressions on ONE grid; the result carries both
+    frames' columns plus ``probe_cell`` and ``cand_cell``. Distance,
+    tier and winner logic stay with the caller.
 
+    Which side carries the (2k+1)² ring explode is decided here and
+    nowhere else. Both sides are valid — a point is within k ring steps
+    of a candidate's cell iff the candidate is within k steps of the
+    point's cell, so exploding either side yields the identical pair
+    set — and the choice is a measured tradeoff, not a principle:
 
-def explode_ring3x3_of_cell(df: DataFrame, cell: str, out: str) -> DataFrame:
-    """3×3 ring around an ALREADY-COMPUTED cell id column — the
-    candidate side of the shuffle degradation path (ring adjacency is
-    symmetric: cand's ring covers probe's cell iff probe's ring covers
-    cand's, so moving the 9× explode to whichever side is smaller
-    preserves the join's hit set exactly)."""
-    offsets = F.array(*[F.lit(dy * X_SPAN + dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1)])
-    return df.withColumn(out, F.explode(F.transform(offsets, lambda o: F.col(cell) + o)))
+    * ``broadcast_candidates=True`` (country-scale plan): explode the
+      PROBE side and broadcast the unexploded candidates. The hash
+      relation stays 9× smaller and cache-resident; the 9 extra probes
+      per row are pipelined in-task (the explode feeds the broadcast
+      probe directly, no shuffle) and mostly hit empty cells. A
+      control-bracketed interleaved A/B of the full 3.84M-page match
+      cascade at 8 pinned cores measured probe-side at 74.8/83.2/99.1 s
+      vs candidate-side at 101.2/87.0/90.7 s (min 74.8 vs 87.0, each
+      pass bracketed by a pure-CPU host-drift control) — the fat
+      9×-exploded hash relation costs more than the extra probes save,
+      at every parallelism level tried (2/8/32).
+    * ``broadcast_candidates=False`` (planet-scale degradation, or a
+      join that is shuffle-shaped at scale): explode the CANDIDATE side
+      and add no hint. Probe-side explode would put 9× of the huge
+      page-derived side through the exchange; candidate-side puts 9×
+      of the small side.
+    * ``None`` (self-joins and small probe batches): explode the probe
+      side, add no hint — the optimizer picks the join strategy.
+    """
+    if broadcast_candidates is False:
+        probe = probe.withColumn("probe_cell", probe_cell)
+        cand = explode_ring(cand, cand_cell, k, "cand_cell")
+    else:
+        probe = explode_ring(probe, probe_cell, k, "probe_cell")
+        cand = cand.withColumn("cand_cell", cand_cell)
+        if broadcast_candidates:
+            cand = F.broadcast(cand)
+    key = F.col("probe_cell") == F.col("cand_cell")
+    return probe.join(cand, key if on is None else key & on)
 
 
 def tile_pyramid(

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from osm_poi_matchmaker_spark.tiling import (
@@ -13,7 +13,9 @@ from osm_poi_matchmaker_spark.tiling import (
     MAX_LON_METERS_PER_DEG,
     X_SPAN,
     coarse_mult_for_radius,
+    coarse_ring_spec,
     kring_k_for_radius,
+    ring_offsets,
 )
 
 EARTH = 6371000.0
@@ -56,6 +58,48 @@ def test_coarse_ring3x3_covers_radius(lat, lon, r, brg):
     y1, x1 = cell_xy(lat, lon, mult)
     y2, x2 = cell_xy(lat2, lon2, mult)
     assert abs(y1 - y2) <= 1 and abs(x1 - x2) <= 1
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    lat_frac=st.floats(min_value=0.0, max_value=1.0),
+    lon=hu_lon,
+    r=st.floats(min_value=1.0, max_value=50_000.0),
+    brg=bearing,
+    max_lat=st.sampled_from([48.6, 55.0, 62.0, 70.0]),
+)
+@example(lat_frac=1.0, lon=19.0, r=50_000.0, brg=math.pi / 2, max_lat=70.0)
+@example(lat_frac=0.5, lon=19.0, r=40_000.0, brg=math.pi / 4, max_lat=70.0)
+def test_coarse_ring_spec_covers_radius(lat_frac, lon, r, brg, max_lat):
+    """The wide ring behind the bounded name arms: for radii past the
+    finest grid pitch up to 50 km, and data extents up to ``max_lat``,
+    two points closer than r lie within k cells on both axes of the
+    (mult, k) ring coarse_ring_spec picks."""
+    lat = 45.7 + lat_frac * (max_lat - 45.7)
+    mult, k = coarse_ring_spec(r, max_lat)
+    lat2, lon2 = offset_point(lat, lon, r * 0.999, brg)
+    assume(lat2 <= max_lat)
+    y1, x1 = cell_xy(lat, lon, mult)
+    y2, x2 = cell_xy(lat2, lon2, mult)
+    assert abs(y1 - y2) <= k and abs(x1 - x2) <= k
+    try:
+        strict = coarse_mult_for_radius(r, max_lat)
+    except ValueError:
+        assert k >= 2  # the strict 3x3 form refuses exactly the wide rings
+    else:
+        assert (mult, k) == (strict, 1)
+
+
+def test_coarse_ring_spec_widens_past_pitch():
+    # mult=1 pitch is 73.6 km at 48.6°N and 38.1 km at 70°N
+    assert coarse_ring_spec(50_000.0) == (1, 1)
+    assert coarse_ring_spec(50_000.0, max_lat=70.0) == (1, 2)
+    assert coarse_ring_spec(150_000.0) == (1, 3)
+    assert coarse_ring_spec(300.0) == (128, 1)
+    offs = ring_offsets(2)
+    assert len(offs) == 25 and len(set(offs)) == 25
+    assert ring_offsets(1) == [dy * X_SPAN + dx for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
+    assert ring_offsets(0) == [0]
 
 
 def test_cell_id_injective_over_bbox():
