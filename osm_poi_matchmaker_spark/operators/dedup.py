@@ -669,13 +669,17 @@ def lsh_arrival_dedup(
     """
     bs = band_signatures(docs, key, text, n, num_perm, bands)
     own = bs.groupBy("band", "band_sig").agg(F.min(key).alias("owner"))
-    v = (
-        bs.join(own, ["band", "band_sig"])
-        .groupBy(key)
-        .agg(
-            F.min(F.when(F.col("owner") != F.col(key), F.col("owner"))).alias("dup_src"),
-            F.max(F.col("owner") != F.col(key)).alias("isd"),
-        )
+    return bucket_claim_verdicts(docs, bs.join(own, ["band", "band_sig"]), key)
+
+
+def bucket_claim_verdicts(docs: DataFrame, claims: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Collapse bucket claims (key, owner) to the per-doc verdict (key,
+    dup_of, is_duplicate): a doc is a duplicate iff an earlier doc owns
+    one of its buckets. Docs with no claims (too short for shingles)
+    survive."""
+    v = claims.groupBy(key).agg(
+        F.min(F.when(F.col("owner") != F.col(key), F.col("owner"))).alias("dup_src"),
+        F.max(F.col("owner") != F.col(key)).alias("isd"),
     )
     return docs.select(key).join(v, key, "left").select(
         key,
@@ -867,9 +871,36 @@ def lsh_index_probe(
 
     Returns (key, is_known_dup, matched_id).
     """
-    ci = band_signatures(corpus, key, text, n, num_perm, bands).select(
+    ci = lsh_index(corpus, key, text, n, num_perm, bands)
+    return lsh_probe(ci, batch, key, text, n, num_perm, bands)
+
+
+def lsh_index(
+    corpus: DataFrame,
+    key: str = "doc_id",
+    text: str = "text",
+    n: int = 3,
+    num_perm: int = 8,
+    bands: int = 4,
+) -> DataFrame:
+    """The index half of :func:`lsh_index_probe`: the corpus's bucket
+    rows (_corpus_id, band, band_sig)."""
+    return band_signatures(corpus, key, text, n, num_perm, bands).select(
         F.col(key).alias("_corpus_id"), "band", "band_sig"
     )
+
+
+def lsh_probe(
+    ci: DataFrame,
+    batch: DataFrame,
+    key: str = "doc_id",
+    text: str = "text",
+    n: int = 3,
+    num_perm: int = 8,
+    bands: int = 4,
+) -> DataFrame:
+    """The probe half of :func:`lsh_index_probe`: ``batch`` against the
+    bucket rows ``ci`` of :func:`lsh_index`."""
     bi = band_signatures(batch, key, text, n, num_perm, bands)
     hits = (
         bi.join(ci, ["band", "band_sig"])

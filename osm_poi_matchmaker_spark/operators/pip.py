@@ -192,9 +192,22 @@ def point_in_polygon(
     names a polygon column; the minimal (order_by, poly_id) containing
     polygon wins, reproducing ``ORDER BY name LIMIT 1`` (libs/osm.py:98).
     """
-    # one row per cell, candidates sorted by (order_key, poly_id): the
-    # groupBy shuffles only polygon fragments, never points
-    cell_map = (
+    cell_map = polygon_cell_map(polygons, poly_id, wkt_col, order_by)
+    if broadcast_polygons:
+        cell_map = F.broadcast(cell_map)
+    return locate_points(points, cell_map, point_key, swap_xy)
+
+
+def polygon_cell_map(
+    polygons: DataFrame,
+    poly_id: str = "poly_id",
+    wkt_col: str = "way_wkt",
+    order_by: str | None = None,
+) -> DataFrame:
+    """The index half of :func:`point_in_polygon`: one row per fragment
+    cell, candidates sorted by (order_key, poly_id). The groupBy
+    shuffles only polygon fragments, never points."""
+    return (
         polygon_fragments(polygons, poly_id, wkt_col, order_by)
         .groupBy("_fcell")
         .agg(
@@ -203,9 +216,16 @@ def point_in_polygon(
             ).alias("_cands")
         )
     )
-    if broadcast_polygons:
-        cell_map = F.broadcast(cell_map)
 
+
+def locate_points(
+    points: DataFrame,
+    cell_map: DataFrame,
+    point_key: str = "page_id",
+    swap_xy: bool = False,
+) -> DataFrame:
+    """The probe half of :func:`point_in_polygon`: each point's first
+    containing polygon from the :func:`polygon_cell_map` ``cell_map``."""
     px = F.col("lat") if swap_xy else F.col("lon")
     py = F.col("lon") if swap_xy else F.col("lat")
     pts = points.select(point_key, "lat", "lon").withColumn(

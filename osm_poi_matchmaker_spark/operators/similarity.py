@@ -1257,10 +1257,34 @@ def semantic_index_probe(
 
     Returns (vec_id, centroid_id, is_known_dup, matched_id).
     """
+    cents, settled = semantic_index(corpus, centroid_mod, key, vec)
+    return semantic_probe(cents, settled, batch, threshold, key, vec)
+
+
+def semantic_index(
+    corpus: DataFrame, centroid_mod: int = 100, key: str = "vec_id", vec: str = "embedding"
+) -> tuple[DataFrame, DataFrame]:
+    """The index half of :func:`semantic_index_probe`: the corpus's
+    centroids (centroid_id, cent_vec) and its members assigned to them
+    (corpus_id, cv, centroid_id)."""
     cents = _seed_cents(corpus, key, vec, centroid_mod)
     settled = _assign_to_centroids(corpus, cents, key, vec).select(
         F.col("vid").alias("corpus_id"), F.col("v").alias("cv"), "centroid_id"
     )
+    return cents, settled
+
+
+def semantic_probe(
+    cents: DataFrame,
+    settled: DataFrame,
+    batch: DataFrame,
+    threshold: float = 0.3,
+    key: str = "vec_id",
+    vec: str = "embedding",
+) -> DataFrame:
+    """The probe half of :func:`semantic_index_probe`: route ``batch``
+    to its nearest centroid and look for a settled member of that
+    cluster at ``threshold`` cosine or more."""
     probes = _assign_to_centroids(batch, cents, key, vec)
     hits = (
         probes.join(settled, "centroid_id")

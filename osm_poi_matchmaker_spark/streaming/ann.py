@@ -1,26 +1,9 @@
-"""Streaming ANN probe at the retrieval edge.
-
-Streaming twin of ``operators/similarity.ivf_topk``: arriving query
-vectors probe a STATIC IVF-indexed corpus snapshot with ZERO streaming
-state — the ``streaming/semantic.py`` design generalized from a
-boolean near-dup verdict to a ranked top-k.
-
-No watermark, no aggregation, no stream-side join keyed by data: the
-centroid set collapses to a broadcast ONE-ROW array (row-local
-``nprobe`` routing via ``array_sort``) and the inverted lists to a
-broadcast ONE-ROW map (centroid_id → member array), so each arriving
-vector emits its k result rows in the same micro-batch, entirely
-inside whole-stage codegen. Tie semantics ((-sim, match_id) ascending
-= desc cosine, asc id) are identical to the batch operator's window,
-which is what the stream==batch test pins. Index refresh is a restart
-with a new snapshot, not a state update — the Iceberg-snapshot
-read-side of the checkpoint contract (plans/checkpoint.py).
-
-Scale note: the broadcast index bounds this twin to list sets that fit
-an executor (fine for the √N-centroid × bounded-list layout at probe
-tiers); a planet-scale corpus instead serves the stream through a
-stream-static join against the (centroid_id)-bucketed list table —
-same plan shape as the batch probe, still zero streaming state.
+"""Streaming ANN probe at the retrieval edge: the twin of
+``operators/similarity.ivf_topk`` as a cached index + ``foreachBatch``
+over the batch operator's body (:mod:`.per_batch`). The index is the
+centroids and the corpus's list assignment (``_nearest_centroids``);
+each micro-batch runs ``ivf_topk``'s ``_topk(_probe(...))``. Output
+rows carry a ``batch_id`` partition column.
 """
 
 from __future__ import annotations
@@ -28,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import _assign_to_centroids, cosine
+from ..operators.similarity import _nearest_centroids, _probe, _seed_cents, _topk
+from .per_batch import read_stream, run_per_batch
 
 
 def ann_probe_stream(
@@ -51,105 +35,24 @@ def ann_probe_stream(
     cosine_sim, rank — self-matches by id excluded, short lists when
     the probed slice holds fewer than k candidates)."""
     if cents is None:
-        cents = corpus.where(F.col(key) % centroid_mod == 1).select(
-            F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-        )
+        cents = _seed_cents(corpus, key, vec, centroid_mod)
     if not cents.limit(1).take(1):
-        # Same empty-corpus contract as semantic_probe_stream: the batch
-        # twin returns zero rows; a silently NULL-routing stream would
-        # diverge. Refuse loudly.
-        raise ValueError(
-            "ann_probe_stream: corpus has no centroids — the stream "
-            "would diverge from the batch twin's empty result"
-        )
-    clusters = (
-        _assign_to_centroids(corpus, cents, key, vec)
-        .groupBy("centroid_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("vid").alias("mid"), F.col("v").alias("mv"))
-                )
-            ).alias("members")
-        )
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("centroid_id"), F.collect_list("members")
-            ).alias("_lists")
-        )
-    )
-    cent_row = cents.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("centroid_id").alias("cid"),
-                    F.col("cent_vec").alias("cv"),
-                )
-            )
-        ).alias("_cents")
+        # a probe stream against an empty index is a wiring bug: refuse loudly
+        raise ValueError("ann_probe_stream: corpus has no centroids — nothing to probe")
+    assigned = _nearest_centroids(
+        corpus.select(F.col(key).alias("match_id"), F.col(vec).alias("c_vec")),
+        cents,
+        "c_vec",
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    s = (
-        reader.parquet(batch_dir)
-        .crossJoin(F.broadcast(cent_row))
-        .crossJoin(F.broadcast(clusters))
-    )
-    # Row-local nprobe routing: (-sim, cid) sorts to (desc sim, asc id).
-    probe_ids = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    F.col("_cents"),
-                    lambda c: F.struct(
-                        (-cosine(F.col(vec), c.cv)).alias("negsim"),
-                        c.cid.alias("cid"),
-                    ),
-                )
-            ),
-            1,
-            nprobe,
-        ),
-        lambda t: t.cid,
-    )
-    s = s.withColumn("_probe", probe_ids)
-    cands = F.flatten(
-        F.transform(
-            F.col("_probe"),
-            lambda cid: F.coalesce(F.element_at(F.col("_lists"), cid), F.array()),
-        )
-    )
-    s = s.withColumn(
-        "_scored",
-        F.filter(
-            F.transform(
-                cands,
-                lambda c: F.struct(
-                    (-cosine(F.col(vec), c.mv)).alias("negsim"),
-                    c.mid.alias("mid"),
-                ),
-            ),
-            lambda sc: sc.mid != F.col(key),
-        ),
-    )
-    topk = F.slice(F.array_sort(F.col("_scored")), 1, k)
-    out = s.select(
-        F.col(key).alias("query_id"),
-        F.posexplode(topk).alias("_pos", "_m"),
-    ).select(
-        "query_id",
-        F.col("_m.mid").alias("match_id"),
-        F.round(-F.col("_m.negsim"), 6).alias("cosine_sim"),
-        (F.col("_pos") + 1).alias("rank"),
-    )
-    (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    def probe(batch: DataFrame) -> DataFrame:
+        q = batch.select(F.col(key).alias("query_id"), F.col(vec).alias("q_vec"))
+        return _topk(_probe(assigned, q, cents, nprobe, "c_vec"), k)
+
+    run_per_batch(
+        read_stream(spark, batch_dir, schema, max_files_per_trigger),
+        probe,
+        out_dir,
+        checkpoint_dir,
+        index=[cents, assigned],
     )

@@ -1,26 +1,14 @@
 """Streaming crawl ingest: match newly-arrived pages per micro-batch.
 
-The reference is a batch pipeline re-run from scratch per harvest
-(``create_db.py:203-314``). At 10^12-document crawl scale the input is
-append-only — new WARC segments land continuously — so the engine also
-exposes the match stage as a Structured Streaming job: ``readStream``
-over the pages table's directory, each micro-batch pushed through the
-SAME ``geotag → tile → match_cascade`` plan via ``foreachBatch`` and
-appended to the matched table.
-
-Correctness note (why stream == batch exactly): the cascade winner is a
-pure per-page function of that page and the (static, broadcast) POI
-candidate side — no cross-page state — so any partition of the input
-into micro-batches yields byte-identical union output. That invariant is
-pinned by tests/test_streaming_match.py. (Operators with cross-row
-state — dedup, sessionization — live in their own modules with explicit
-watermark/state handling instead.)
-
-At cluster scale the parquet file source is the stand-in for an Iceberg
-incremental read of snapshot deltas; checkpointLocation carries the
-already-processed file manifest so a killed stream resumes without
-re-matching old segments (the same resumability story as
-plans/checkpoint.py, driven by Spark's own streaming commit log).
+The reference re-runs its batch pipeline per harvest
+(``create_db.py:203-314``); an append-only crawl instead streams the
+pages directory and runs each micro-batch through the SAME ``geotag →
+tile → match_cascade`` plan via ``foreachBatch`` (:mod:`.per_batch`).
+The cascade winner is a pure per-page function of the page and the
+static POI side, so any split into micro-batches gives the batch result
+(tests/test_streaming_match.py). The checkpoint's commit log lets a
+killed stream resume without re-matching old files. Output rows carry a
+``batch_id`` partition column.
 """
 
 from __future__ import annotations
@@ -29,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..extract.geotag import geotag_pages
 from ..operators.match import match_pages
+from .per_batch import read_stream, run_per_batch
 
 
 def match_crawl_stream(
@@ -43,24 +32,10 @@ def match_crawl_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Run the match pipeline over an append-only pages directory until
-    all currently-available files are processed (availableNow trigger —
-    the batch-parity mode; a production stream drops the trigger and
-    runs continuously)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(pages_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matched = match_pages(
-            geotag_pages(batch_df), pois, common, brand_rows=brand_rows
-        )
-        matched.write.mode("append").parquet(out_dir)
-
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    all currently-available files are processed."""
+    run_per_batch(
+        read_stream(spark, pages_dir, schema, max_files_per_trigger),
+        lambda b: match_pages(geotag_pages(b), pois, common, brand_rows=brand_rows),
+        out_dir,
+        checkpoint_dir,
     )

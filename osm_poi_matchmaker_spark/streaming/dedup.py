@@ -23,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import bucket_claim_verdicts, lsh_index, lsh_probe
+from .per_batch import read_stream, run_per_batch
+
 
 def exact_dedup_stream(
     spark: SparkSession,
@@ -38,11 +41,8 @@ def exact_dedup_stream(
     (``warc_ts``) are dropped. availableNow trigger = batch-parity mode;
     a production stream drops the trigger and runs continuously,
     resuming from the streaming commit log in ``checkpoint_dir``."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     deduped = (
-        reader.parquet(pages_dir)
+        read_stream(spark, pages_dir, schema, max_files_per_trigger)
         .withColumn("text_hash", F.md5("text"))
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
@@ -121,11 +121,8 @@ def lsh_dedup_stream(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     ex = (
-        reader.parquet(pages_dir)
+        read_stream(spark, pages_dir, schema, max_files_per_trigger)
         .select(
             F.col(key).alias("doc_id"),
             F.explode(band_structs_expr(F.col(text), n, num_perm, bands)).alias("b"),
@@ -169,25 +166,10 @@ def lsh_dedup_stream(
 
 
 def claims_to_verdicts(docs, claims, key: str = "doc_id"):
-    """Collapse streamed bucket claims to the per-doc verdict
-    (doc_id, dup_of, is_duplicate) — the same rollup as the tail of
-    ``operators/dedup.lsh_arrival_dedup``; docs with no claims (too
-    short for shingles) survive."""
-    v = claims.groupBy("doc_id").agg(
-        F.min(
-            F.when(F.col("owner") != F.col("doc_id"), F.col("owner"))
-        ).alias("dup_src"),
-        F.max(F.col("owner") != F.col("doc_id")).alias("isd"),
-    )
-    return (
-        docs.select(F.col(key).alias("doc_id"))
-        .join(v, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("dup_src", F.col("doc_id")).alias("dup_of"),
-            F.coalesce("isd", F.lit(False)).alias("is_duplicate"),
-        )
-    )
+    """Collapse streamed bucket claims to the per-doc verdict (doc_id,
+    dup_of, is_duplicate) with the rollup of
+    ``operators/dedup.lsh_arrival_dedup``."""
+    return bucket_claim_verdicts(docs.select(F.col(key).alias("doc_id")), claims)
 
 
 def index_probe_stream(
@@ -204,63 +186,17 @@ def index_probe_stream(
     bands: int = 4,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Streaming twin of ``operators/dedup.lsh_index_probe``: incoming
-    docs probe a STATIC settled-corpus LSH index at the crawl edge,
-    with ZERO streaming state.
-
-    The trick that removes all state: the static index is pre-reduced
-    to one row per bucket carrying ``min(corpus_id)``, and the stream
-    side takes one stream-static LEFT join per band (band fixed per
-    join, so the key is just the band signature) instead of exploding
-    buckets and re-aggregating per doc — ``least()`` over the per-band
-    matches equals the batch op's min over all matching bucket rows.
-    No watermark, no aggregation, no dropDuplicates: every arriving doc
-    emits exactly one verdict row, immediately.
-
-    Each micro-batch re-probes the same static snapshot of ``corpus``;
-    refreshing the index is a restart (the settled corpus changes per
-    release, not per micro-batch).
+    """Streaming twin of ``operators/dedup.lsh_index_probe``: a cached
+    index (``lsh_index``, the settled corpus's bucket rows) +
+    ``foreachBatch`` over the probe half ``lsh_probe`` (:mod:`.per_batch`).
+    Verdicts (key, is_known_dup, matched_id) carry a ``batch_id``
+    partition column.
     """
-    from ..operators.dedup import band_signatures
-
-    idx = (
-        band_signatures(corpus, key, text, n, num_perm, bands)
-        .groupBy("band", "band_sig")
-        .agg(F.min(key).alias("matched_id"))
-        .persist()
+    ci = lsh_index(corpus, key, text, n, num_perm, bands)
+    run_per_batch(
+        read_stream(spark, batch_dir, schema, max_files_per_trigger),
+        lambda b: lsh_probe(ci, b, key, text, n, num_perm, bands),
+        out_dir,
+        checkpoint_dir,
+        index=[ci],
     )
-    idx.count()  # materialize once; every micro-batch reuses the cache
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    s = reader.parquet(batch_dir).withColumn(
-        "_bs", band_structs_expr(F.col(text), n, num_perm, bands)
-    )
-    for b in range(bands):
-        side = (
-            idx.where(F.col("band") == b)
-            .select(
-                F.col("band_sig").alias(f"_sig{b}"),
-                F.col("matched_id").alias(f"_m{b}"),
-            )
-        )
-        s = s.withColumn(
-            f"_sig{b}", F.element_at("_bs", b + 1)["band_sig"]
-        ).join(F.broadcast(side), f"_sig{b}", "left")
-    matched = F.least(*[F.col(f"_m{b}") for b in range(bands)])
-    out = s.select(
-        F.col(key),
-        matched.isNotNull().alias("is_known_dup"),
-        matched.alias("matched_id"),
-    )
-    (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    idx.unpersist()

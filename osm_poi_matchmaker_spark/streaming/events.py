@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .per_batch import read_stream
+
 
 def windowed_event_stats(
     events: DataFrame, window: str = "1 hour", with_watermark: bool = False
@@ -50,26 +52,20 @@ def windowed_event_stats(
     return agg
 
 
-def stream_from_parquet_dir(spark, path: str, schema) -> DataFrame:
-    """File-source stream over a parquet directory (one-file-per-trigger
-    unset: availableNow processing in tests)."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
 def run_stream_once(spark, src_dir: str, schema, out_table: str = "event_stats") -> None:
     """Drive the streaming path to completion over existing files
     (Trigger.AvailableNow) into an in-memory sink — the test/dev harness;
-    production would write an Iceberg sink with checkpointLocation."""
-    stream = windowed_event_stats(
-        stream_from_parquet_dir(spark, src_dir, schema), with_watermark=True
-    )
+    production would write an Iceberg sink with checkpointLocation.
+    Waits with no timeout: availableNow ends on its own, and a timed
+    wait would hand back a partial table."""
+    stream = windowed_event_stats(read_stream(spark, src_dir, schema), with_watermark=True)
     # complete mode: emit every window at the availableNow barrier (append
     # would hold back windows the watermark has not passed yet)
-    q = (
+    (
         stream.writeStream.format("memory")
         .queryName(out_table)
         .outputMode("complete")
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination(120)

@@ -1,20 +1,9 @@
-"""Streaming point-in-polygon enrichment at the crawl edge.
-
-Streaming twin of ``operators/pip.point_in_polygon``: arriving geotagged
-pages resolve their containing polygon (postcode / district / enclave)
-against a STATIC polygon snapshot with ZERO streaming state — the same
-zero-state design as ``streaming/knn.nearest_poi_stream``. The per-cell
-candidate map (polygon fragments aggregated into sorted per-fragment-cell
-lists) is built once, cached, and broadcast into a single 1:1
-stream-static left join; the in-row even-odd ray-cast resolver — the
-IDENTICAL Arrow UDF the batch operator runs, holes and all — picks the
-first containing polygon in (order_key, poly_id) order.
-
-No watermark, no aggregation: each arriving page emits exactly one
-verdict row immediately (poly_id -1 when no polygon contains it, the
-batch operator's miss value). Refreshing the polygon snapshot is a
-restart, not a state update — admin boundaries change on a cadence of
-months, pages arrive at 10^12 scale.
+"""Streaming point-in-polygon enrichment at the crawl edge: the twin of
+``operators/pip.point_in_polygon`` as a cached index + ``foreachBatch``
+over the batch operator (:mod:`.per_batch`). The index is
+``polygon_cell_map``; each micro-batch runs ``locate_points`` with the
+map broadcast, as the batch default does. poly_id is -1 outside every
+polygon. Output rows carry a ``batch_id`` partition column.
 """
 
 from __future__ import annotations
@@ -22,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pip import _frag_coord, _resolve_udf, polygon_fragments
-from ..tiling import X_SPAN
+from ..operators.pip import locate_points, polygon_cell_map
+from .per_batch import read_stream, run_per_batch
 
 
 def pip_stream(
@@ -42,38 +31,11 @@ def pip_stream(
     """Run the resolve as a file-source stream; verdicts land in
     ``out_dir`` (one row per arriving page: key, poly_id — -1 when
     outside every polygon). ``polygons`` is the settled snapshot."""
-    cell_map = (
-        polygon_fragments(polygons, poly_id, wkt_col, order_by)
-        .groupBy("_fcell")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_ord", "_pid", "_wkt"))
-            ).alias("_cands")
-        )
-        .persist()
+    cell_map = polygon_cell_map(polygons, poly_id, wkt_col, order_by)
+    run_per_batch(
+        read_stream(spark, batch_dir, schema, max_files_per_trigger),
+        lambda b: locate_points(b, F.broadcast(cell_map), point_key),
+        out_dir,
+        checkpoint_dir,
+        index=[cell_map],
     )
-    cell_map.count()  # materialize once; every micro-batch reuses the cache
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    px, py = F.col("lon"), F.col("lat")
-    s = (
-        reader.parquet(batch_dir)
-        .withColumn("_fcell", _frag_coord(py) * F.lit(X_SPAN) + _frag_coord(px))
-        .join(F.broadcast(cell_map), "_fcell", "left")
-    )
-    out = s.select(
-        F.col(point_key),
-        _resolve_udf(F.col("_cands"), px, py).alias("poly_id"),
-    )
-    (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    cell_map.unpersist()

@@ -1,29 +1,17 @@
-"""Streaming semantic near-dup probe at the ingest edge.
-
-Streaming twin of ``operators/similarity.semantic_index_probe``:
-arriving embedding batches probe a STATIC semantically-clustered corpus
-snapshot with ZERO streaming state — the ``streaming/dedup.
-index_probe_stream`` design with the LSH bucket lookup replaced by a
-nearest-centroid route plus a row-local scan of the cluster's member
-list.
-
-No watermark, no aggregation, no window: the nearest centroid is an
-``array_max`` over a broadcast ONE-ROW array of all centroids (struct
-(sim, -id): max sim, ties to the smallest id — identical to the batch
-assignment's ORDER BY), and the dominated check is a row-local
-``filter``/``array_min`` over the cluster's collected members. Every
-arriving vector emits exactly one verdict row immediately. Cluster
-member lists are bounded because centroid count scales with the corpus
-(the semantic_dedup contract); the snapshot is cached once and reused
-by every micro-batch — refreshing it is a restart, not a state update.
+"""Streaming semantic near-dup probe at the ingest edge: the twin of
+``operators/similarity.semantic_index_probe`` as a cached index +
+``foreachBatch`` over the batch operator (:mod:`.per_batch`). The index
+is ``semantic_index`` (centroids + cluster members); each micro-batch
+runs ``semantic_probe``. Output rows carry a ``batch_id`` partition
+column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.similarity import _assign_to_centroids, cosine
+from ..operators.similarity import semantic_index, semantic_probe
+from .per_batch import read_stream, run_per_batch
 
 
 def semantic_probe_stream(
@@ -43,74 +31,17 @@ def semantic_probe_stream(
     ``out_dir`` (one row per arriving vector: key, centroid_id,
     is_known_dup, matched_id — matched_id NULL when no settled member
     clears ``threshold``)."""
-    cents = corpus.where(F.col(key) % centroid_mod == 1).select(
-        F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
-    )
+    cents, settled = semantic_index(corpus, centroid_mod, key, vec)
     if not cents.limit(1).take(1):
-        # Empty-corpus contract (ADVICE r3): the batch twin
-        # (similarity.semantic_index_probe) returns zero rows when there
-        # are no centroids; letting the stream start would instead emit
-        # one NULL-centroid verdict per vector (array_max over an empty
-        # centroid array is NULL) — a silent batch/stream divergence.
-        # Refuse loudly: a probe stream against nothing is a wiring bug.
+        # a probe stream against an empty index is a wiring bug: refuse loudly
         raise ValueError(
             "semantic_probe_stream: corpus has no centroids "
-            f"({key} % {centroid_mod} == 1 selects none) — the stream "
-            "would diverge from the batch twin's empty result"
+            f"({key} % {centroid_mod} == 1 selects none) — nothing to probe"
         )
-    clusters = (
-        _assign_to_centroids(corpus, cents, key, vec)
-        .groupBy("centroid_id")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("vid").alias("cid"), F.col("v").alias("cv"))
-            ).alias("members")
-        )
-        .persist()
+    run_per_batch(
+        read_stream(spark, batch_dir, schema, max_files_per_trigger),
+        lambda b: semantic_probe(cents, settled, b, threshold, key, vec),
+        out_dir,
+        checkpoint_dir,
+        index=[cents, settled],
     )
-    clusters.count()  # materialize once; every micro-batch reuses the cache
-    cent_row = cents.agg(
-        F.collect_list(
-            F.struct(
-                F.col("centroid_id").alias("cid"), F.col("cent_vec").alias("cv")
-            )
-        ).alias("cents")
-    )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    s = reader.parquet(batch_dir).crossJoin(F.broadcast(cent_row))
-    best = F.array_max(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                cosine(F.col(vec), c.cv).alias("sim"),
-                (-c.cid).alias("negid"),
-            ),
-        )
-    )
-    s = s.withColumn("centroid_id", -best["negid"]).join(
-        F.broadcast(clusters), "centroid_id", "left"
-    )
-    matches = F.filter(
-        F.coalesce(F.col("members"), F.array()),
-        lambda m: cosine(F.col(vec), m.cv) >= F.lit(threshold),
-    )
-    matched = F.array_min(F.transform(matches, lambda m: m.cid))
-    out = s.select(
-        F.col(key),
-        "centroid_id",
-        matched.isNotNull().alias("is_known_dup"),
-        matched.alias("matched_id"),
-    )
-    (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    clusters.unpersist()

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .per_batch import read_stream
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -183,18 +185,15 @@ def run_sessionize_stream(
 ) -> None:
     """Drive the stateful sessionizer over existing parquet files with
     ``maxFilesPerTrigger=1`` (forces multi-batch → state actually crosses
-    micro-batch boundaries) to an in-memory sink."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        sessionize_stateful(src, gap_minutes)
+    micro-batch boundaries) to an in-memory sink. Waits with no timeout:
+    availableNow ends on its own, and a timed wait would hand back a
+    partial table."""
+    (
+        sessionize_stateful(read_stream(spark, src_dir, schema, 1), gap_minutes)
         .writeStream.format("memory")
         .queryName(out_table)
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination(180)
