@@ -93,9 +93,10 @@ def main() -> None:
     ).collect()[0]
     wall = time.time() - t0
 
-    # final adaptive plan evidence. The ONLY BroadcastHashJoin allowed is
-    # the 12-row brand dim (with_common); every candidate arm must be a
-    # shuffle join (SortMergeJoin / ShuffledHashJoin).
+    # final adaptive plan evidence. The cascade's one page × candidate
+    # join must be a shuffle join (SortMergeJoin / ShuffledHashJoin); the
+    # 12-row brand dimension is a literal map in the page projection, so
+    # no BroadcastHashJoin is expected at all.
     plan = best._jdf.queryExecution().executedPlan().toString()
     skew_split = "skewed=true" in plan or "isSkew=true" in plan or "skew=true" in plan
     n_pages = pages_geo.count()

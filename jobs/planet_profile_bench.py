@@ -9,7 +9,7 @@ and the kNN family's shuffle path (jobs/knn_bench.py). VERDICT r3 ask
 10^8-POI deployment would actually run:
 
 - ``match_pages(..., broadcast_candidates=False,
-  name_arm_radius_m=50_000)``: every cascade arm is a shuffle
+  name_arm_radius_m=50_000)``: the cascade's one key join is a shuffle
   equi-join, ring explode candidate-side, attribute arms bounded by a
   coarse cell ring at 50 km;
 - unmatched pages (``poi_new``) feed
@@ -22,9 +22,8 @@ This is exactly the ``match_cascade_planet`` registry query
 (__spark_entry__.py), oracle-verified at sf0.01; here it runs at
 10^7 candidates. Prints ONE JSON line: wall seconds, matched/new/
 suggested row counts, pages/s, and the plan evidence — zero
-candidate-side broadcast exchanges in the cascade OR the kNN stage
-(page-side dimension broadcasts of the 12-row brand table are fine and
-expected). Paste into BENCH.md.
+broadcast joins in the cascade OR the kNN stage (the 12-row brand
+table is a literal map, not a join). Paste into BENCH.md.
 
 Usage: python3 jobs/planet_profile_bench.py [sf_dir] [amp_pois] [amp_pages] [cpus]
 """
@@ -115,14 +114,13 @@ def main() -> None:
     row = res.collect()[0]
     wall_knn = time.time() - t1
 
-    # Plan evidence, same rule as jobs/degradation_bench.py: the ONLY
-    # BroadcastHashJoin allowed anywhere is the 12-row brand dimension
-    # (with_common, joining poi_name — it must broadcast at any scale);
-    # every candidate arm and every kNN ring must be a shuffle join.
-    # Each component's OWN executed plan is inspected — the composed
-    # frame's plan text re-embeds the cached cascade subtree once per
-    # kNN-round reference, which would multiply-count the same six
-    # brand-dim joins ~30×.
+    # Plan evidence, same rule as jobs/degradation_bench.py: the cascade's
+    # one page × candidate join and every kNN ring must be a shuffle join,
+    # and no BroadcastHashJoin is allowed anywhere (the 12-row brand
+    # dimension is a literal map in the cascade's page projection, not a
+    # join). Each component's OWN executed plan is inspected — the
+    # composed frame's plan text re-embeds the cached cascade subtree once
+    # per kNN-round reference, which would multiply-count its joins ~30×.
     plan_match = m._jdf.queryExecution().executedPlan().toString()
     plan_knn = res._jdf.queryExecution().executedPlan().toString()
     bhj_lines = [
@@ -131,7 +129,6 @@ def main() -> None:
     ]
     n_bhj_match = plan_match.count("BroadcastHashJoin")
     n_bhj_knn = plan_knn.count("BroadcastHashJoin")
-    only_brand_dim = all("poi_name" in ln for ln in bhj_lines)
     n_smj_match = plan_match.count("SortMergeJoin") + plan_match.count(
         "ShuffledHashJoin"
     )
@@ -157,15 +154,10 @@ def main() -> None:
         "nn_checksum": int(row["chk"]),
         # n_bhj counts include textual re-embeddings of the cached
         # cascade inside the kNN plan; the load-bearing assertion is
-        # broadcasts_only_brand_dim (every BroadcastHashJoin line in
-        # BOTH plans builds the 12-row poi_name dimension) and
-        # non_brand_broadcasts == 0.
+        # broadcast_free (no BroadcastHashJoin line in either plan).
         "broadcast_hash_joins_match": n_bhj_match,
         "broadcast_hash_joins_knn": n_bhj_knn,
-        "non_brand_broadcasts": sum(
-            1 for ln in bhj_lines if "poi_name" not in ln
-        ),
-        "broadcasts_only_brand_dim": bool(only_brand_dim),
+        "broadcast_free": not bhj_lines,
         "shuffle_joins_match": n_smj_match,
         "shuffle_joins_knn": n_smj_knn,
         "name_arm_radius_m": 50_000.0,

@@ -41,7 +41,9 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
 
 
-# SQL fragment mirrored by the DuckDB oracles (identical op order).
+# SQL text of haversine_m (identical op order, identical bits): the DuckDB
+# oracles mirror it, and the match and knn plans are built from it — one
+# F.expr is one JVM round trip, the Column form one per operator node.
 HAVERSINE_SQL = (
     "(2.0 * 6371000.0 * ASIN(SQRT("
     "SIN(RADIANS({lat2} - {lat1}) / 2.0) * SIN(RADIANS({lat2} - {lat1}) / 2.0) "

@@ -19,10 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..geo import haversine_m
-from ..tiling import coarse_cell_id, coarse_mult_for_radius, ring_join
+from ..geo import HAVERSINE_SQL
+from ..tiling import coarse_cell_sql, coarse_mult_for_radius, ring_join
 
 
 def nearest_poi(
@@ -49,39 +48,30 @@ def nearest_poi(
     tests/test_knn_family_shuffle.py).
     """
     mult = coarse_mult_for_radius(radius_m)
-    dist = haversine_m(F.col("lat"), F.col("lon"), F.col("o_lat"), F.col("o_lon"))
-    joined = (
-        ring_join(
-            points.select(point_key, "lat", "lon"),
-            pois.select("osm_id", F.col("lat").alias("o_lat"), F.col("lon").alias("o_lon")),
-            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
-            coarse_cell_id(F.col("o_lat"), F.col("o_lon"), mult),
-            broadcast_candidates=broadcast_candidates,
-        )
-        .withColumn("distance", dist)
-        .where(F.col("distance") < F.lit(float(radius_m)))
-    )
+    # SQL text throughout: one JVM round trip per projection
+    dist = HAVERSINE_SQL.format(lat1="lat", lon1="lon", lat2="o_lat", lon2="o_lon")
+    joined = ring_join(
+        points.select(point_key, "lat", "lon"),
+        pois.selectExpr("osm_id", "lat AS o_lat", "lon AS o_lon"),
+        F.expr(coarse_cell_sql("lat", "lon", mult)),
+        F.expr(coarse_cell_sql("o_lat", "o_lon", mult)),
+        broadcast_candidates=broadcast_candidates,
+    ).selectExpr("*", f"{dist} AS distance").where(f"distance < {float(radius_m)!r}")
     if k == 1:
         # min(struct) instead of a row_number window: the aggregate gets
         # map-side partial combining, so each shuffle partition ships one
         # candidate per point instead of every in-radius pair (same trick
         # as match.py's winner selection; identical ordering semantics —
         # struct lexicographic order = ORDER BY distance, osm_id).
-        best = F.min(F.struct("distance", "osm_id")).alias("b")
         return (
             joined.groupBy(point_key)
-            .agg(best)
-            .select(
-                point_key,
-                F.col("b.osm_id").alias("osm_id"),
-                F.col("b.distance").alias("distance"),
-                F.lit(1).alias("knn_rank"),
-            )
+            .agg(F.expr("min(struct(distance, osm_id)) AS b"))
+            .selectExpr(point_key, "b.osm_id AS osm_id", "b.distance AS distance", "1 AS knn_rank")
         )
-    w = Window.partitionBy(point_key).orderBy("distance", "osm_id")
+    rank = f"row_number() OVER (PARTITION BY {point_key} ORDER BY distance, osm_id)"
     return (
-        joined.withColumn("knn_rank", F.row_number().over(w))
-        .where(F.col("knn_rank") <= k)
+        joined.selectExpr("*", f"{rank} AS knn_rank")
+        .where(f"knn_rank <= {int(k)}")
         .select(point_key, "osm_id", "distance", "knn_rank")
     )
 
@@ -158,32 +148,22 @@ def nearest_competitor(
     (winner-identical by ring symmetry — see nearest_poi).
     """
     mult = coarse_mult_for_radius(radius_m)
-    cand = pois.select(
-        F.col(key).alias("b_id"),
-        F.col(name).alias("b_name"),
-        F.col("lat").alias("b_lat"),
-        F.col("lon").alias("b_lon"),
-    )
-    dist = haversine_m(F.col("lat"), F.col("lon"), F.col("b_lat"), F.col("b_lon"))
+    dist = HAVERSINE_SQL.format(lat1="lat", lon1="lon", lat2="b_lat", lon2="b_lon")
     return (
         ring_join(
             pois.select(key, name, "lat", "lon"),
-            cand,
-            coarse_cell_id(F.col("lat"), F.col("lon"), mult),
-            coarse_cell_id(F.col("b_lat"), F.col("b_lon"), mult),
+            pois.selectExpr(f"{key} AS b_id", f"{name} AS b_name", "lat AS b_lat", "lon AS b_lon"),
+            F.expr(coarse_cell_sql("lat", "lon", mult)),
+            F.expr(coarse_cell_sql("b_lat", "b_lon", mult)),
             broadcast_candidates=broadcast_candidates,
         )
-        .where(
-            (F.col(key) != F.col("b_id"))
-            & ~F.col(name).eqNullSafe(F.col("b_name"))
-            & (dist < F.lit(float(radius_m)))
-        )
+        .where(f"{key} != b_id AND NOT ({name} <=> b_name) AND {dist} < {float(radius_m)!r}")
         .groupBy(key)
-        .agg(F.min(F.struct(dist.alias("d"), F.col("b_id"), F.col("b_name"))).alias("b"))
-        .select(
+        .agg(F.expr(f"min(struct({dist} AS d, b_id, b_name)) AS b"))
+        .selectExpr(
             key,
-            F.col("b.b_id").alias("competitor_id"),
-            F.col("b.b_name").alias("competitor_name"),
-            F.round("b.d", 2).alias("distance_m"),
+            "b.b_id AS competitor_id",
+            "b.b_name AS competitor_name",
+            "round(b.d, 2) AS distance_m",
         )
     )

@@ -42,6 +42,11 @@ def run_per_batch(
     again on restart — and the overwrite makes that replay replace the
     batch's output instead of adding a second copy.
 
+    The micro-batch itself is persisted while ``fn`` runs and released
+    after its write: a batch operator that reads its input in two
+    branches (a probe plus a left join back, say) would otherwise re-read
+    the batch's source files once per branch.
+
     ``index`` holds the frames ``fn`` reads on every micro-batch. Those
     not cached yet are persisted and materialized here, in order (a
     frame built on an earlier one reads the earlier one's cache), and
@@ -50,7 +55,11 @@ def run_per_batch(
     owned = [df for df in index if df.storageLevel == StorageLevel.NONE]
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        fn(batch).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        batch.persist()
+        try:
+            fn(batch).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        finally:
+            batch.unpersist()
 
     try:
         for df in owned:

@@ -40,11 +40,21 @@ X_SPAN = 1 << 18  # row-major stride: cell = y * X_SPAN + x
 # northernmost latitude 48.6°N = 111320 * cos(48.6°) / 640 = 115.0 m.
 MIN_CELL_METERS = 115.0
 
+
+def coarse_cell_sql(lat: str, lon: str, mult: int) -> str:
+    """SQL text of :func:`coarse_cell_id` over the SQL expressions ``lat``
+    and ``lon``: the same IEEE double arithmetic, valid in Spark SQL and
+    DuckDB alike. One ``F.expr`` of it is one JVM round trip, where the
+    Column form costs one per operator node."""
+    m = float(mult)
+    return (
+        f"(CAST(FLOOR(({lat} + 90.0) * {m}) AS BIGINT) * {X_SPAN} "
+        f"+ CAST(FLOOR(({lon} + 180.0) * {m}) AS BIGINT))"
+    )
+
+
 # SQL fragment mirrored by the DuckDB oracles (keep in sync with cell_id()).
-CELL_ID_SQL = (
-    "(CAST(FLOOR(({lat} + 90.0) * 640.0) AS BIGINT) * 262144 "
-    "+ CAST(FLOOR(({lon} + 180.0) * 640.0) AS BIGINT))"
-)
+CELL_ID_SQL = coarse_cell_sql("{lat}", "{lon}", int(GRID_MULT))
 
 
 def cell_x(lon: Column) -> Column:
@@ -162,19 +172,30 @@ def ring_offsets(k: int) -> list[int]:
     return [dy * X_SPAN + dx for dy in range(-k, k + 1) for dx in range(-k, k + 1)]
 
 
-def explode_ring(df: DataFrame, cell: Column, k: int, out: str) -> DataFrame:
+def explode_ring(df: DataFrame, cell: Column, k: int | str, out: str) -> DataFrame:
     """One row per cell of the k-ring around ``cell``, in column ``out``.
 
     The cell is computed once per row as a column, and the explode only
     adds each offset to it: in the ``transform`` lambda body a cell
     expression would be re-evaluated for every offset. Fan-out is
     (2k+1)² rows per input row; the 0-ring is the cell itself, so
-    k=0 adds the cell column and explodes nothing."""
+    k=0 adds the cell column and explodes nothing.
+
+    ``k`` may instead name an int column holding each row's own ring
+    radius (0 for an exact-key row: one row, the cell itself); the
+    offsets are then :func:`ring_offsets` of that radius, built per row
+    in the same row-major order."""
     df = df.withColumn(out, cell)
     if k == 0:
         return df
-    offsets = F.array(*[F.lit(o) for o in ring_offsets(k)])
-    return df.withColumn(out, F.explode(F.transform(offsets, lambda o: F.col(out) + o)))
+    if isinstance(k, str):
+        offsets = (
+            f"flatten(transform(sequence(-{k}, {k}), dy -> "
+            f"transform(sequence(-{k}, {k}), dx -> dy * {X_SPAN}L + dx)))"
+        )
+    else:
+        offsets = f"array({', '.join(map(str, ring_offsets(k)))})"
+    return df.withColumn(out, F.expr(f"explode(transform({offsets}, o -> {out} + o))"))
 
 
 def ring_join(
@@ -182,7 +203,7 @@ def ring_join(
     cand: DataFrame,
     probe_cell: Column,
     cand_cell: Column,
-    k: int = 1,
+    k: int | str = 1,
     on: Column | None = None,
     broadcast_candidates: bool | None = None,
 ) -> DataFrame:
@@ -192,7 +213,11 @@ def ring_join(
     hash keys of the same join). ``probe_cell``/``cand_cell`` are the
     two sides' cell expressions on ONE grid; the result carries both
     frames' columns plus ``probe_cell`` and ``cand_cell``. Distance,
-    tier and winner logic stay with the caller.
+    tier and winner logic stay with the caller. ``k`` is the ring
+    radius, or the name of an int column BOTH sides carry with each
+    row's own radius (see :func:`explode_ring`): one join can then mix
+    exact-key rows (radius 0) with ring rows; the column is dropped from
+    both sides once the ring is exploded.
 
     Which side carries the (2k+1)² ring explode is decided here and
     nowhere else. Both sides are valid — a point is within k ring steps
@@ -225,8 +250,10 @@ def ring_join(
     else:
         probe = explode_ring(probe, probe_cell, k, "probe_cell")
         cand = cand.withColumn("cand_cell", cand_cell)
-        if broadcast_candidates:
-            cand = F.broadcast(cand)
+    if isinstance(k, str):
+        probe, cand = probe.drop(k), cand.drop(k)
+    if broadcast_candidates:
+        cand = F.broadcast(cand)
     key = F.col("probe_cell") == F.col("cand_cell")
     return probe.join(cand, key if on is None else key & on)
 

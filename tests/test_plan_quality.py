@@ -38,6 +38,29 @@ def test_match_broadcasts_brand_dim(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_match_one_poi_scan_one_broadcast(spark):
+    """The cascade is key rows and one join: the executed broadcast plan
+    reads the POI table once, broadcasts one candidate side, and looks
+    the brand dimension up as a literal map instead of joining it."""
+    from osm_poi_matchmaker_spark import synth
+    from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
+    from osm_poi_matchmaker_spark.operators.match import match_cascade
+
+    df = match_cascade(
+        geotag_pages(synth.pages(spark, SF)),
+        synth.osm_pois(spark, SF),
+        synth.poi_common_df(spark),
+        brand_rows=synth.BRAND_ROWS,
+    )
+    assert df.collect()
+    final = plan_of(df, mode="simple").split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    assert sum("FileScan parquet" in l and "osm_pois" in l for l in lines) == 1, final
+    assert sum("BroadcastExchange" in l for l in lines) == 1, final
+    # the dimension is a VALUES relation: joining it would scan a LocalTableScan
+    assert "LocalTableScan" not in final and "poi_name" not in final, final
+
+
 def test_knn_no_cartesian(spark):
     plan = plan_of(entry_mod._q_knn_nearest(spark, SF), mode="simple")
     assert "CartesianProduct" not in plan
