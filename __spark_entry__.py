@@ -943,8 +943,9 @@ def _q_ivf_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ann_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe over Lloyd-TRAINED centroids — same nprobe, same probe
     structure as ann_topk_ivf, recall@5 0.54 → 0.62 on the synth
-    embeddings (ann_recall_kmeans is the read-off). The training chain
-    stays inside the plan: no driver-side k-means, no collect."""
+    embeddings (ann_recall_kmeans is the read-off). Each training round
+    is one job with no shuffle: the partitions' integer sums meet on the
+    driver, which takes the exact micro-unit mean."""
     emb = _embeddings(spark, sf_dir)
     return similarity.ivf_topk(
         emb.where(F.col("vec_id") % 50 == 0),

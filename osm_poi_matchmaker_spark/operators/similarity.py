@@ -1,17 +1,31 @@
 """Embedding similarity search (ANN) over ``array<float>`` columns.
 
 Baseline: brute-force cosine top-k via built-in array expressions
-(``zip_with`` dot product — JVM-side, no Python). Scale path: LSH-style
-bucketing on sign-random-projections so candidate generation is a bucket
-join instead of all-pairs (same structure as the tiling layer's cell join:
-bucket key = quantized signature).
+(``zip_with`` dot product, JVM-side). Scale paths: LSH-style bucketing on
+sign-random-projections, so candidate generation is a bucket join
+instead of all-pairs (the tiling layer's cell join with bucket key =
+quantized signature); and the IVF family, whose nearest-centroid routing
+and one-level k-means rounds are the NumPy kernel of
+:mod:`.centroid_kernel` over Arrow batches (``mapInArrow``), bit-identical
+to the SQL fold.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from . import centroid_kernel
+
+# The kernel ships to the Python workers by value: they need numpy and
+# pyarrow, not this package on their path.
+cloudpickle.register_pickle_by_value(centroid_kernel)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -150,10 +164,13 @@ def _cent_row(cents: DataFrame) -> DataFrame:
 
 
 def _top_centroids(cands: Column, v: Column, n: int, unit: bool = False) -> Column:
-    """THE nearest-centroid ranking: the ``n`` best entries of ``cands``
-    (array<(centroid_id, cent_vec, cn)>) for the vector ``v``, ordered
-    desc cosine then asc centroid_id, as array<(cent_sim, negid)> with
-    ``negid`` = -centroid_id. Row-local: no explode, no shuffle.
+    """The nearest-centroid ranking in SQL, for :func:`assign_two_level`
+    (its candidates differ per row) and as the reference the NumPy
+    kernel of :func:`_nearest_centroids` is tested against: the ``n``
+    best entries of ``cands`` (array<(centroid_id, cent_vec, cn)>) for
+    the vector ``v``, ordered desc cosine then asc centroid_id, as
+    array<(cent_sim, negid)> with ``negid`` = -centroid_id. Row-local:
+    no explode, no shuffle.
 
     Cosine is the same ``dot / (norm(v) * norm(c))`` double fold as
     :func:`cosine`, so every score is bit-identical to the crossJoin +
@@ -180,28 +197,51 @@ def _top_centroids(cands: Column, v: Column, n: int, unit: bool = False) -> Colu
     return F.transform(F.array(F.lit(1.0) if unit else norm(v)), rank)[0]
 
 
+def _centroid_arrays(cents: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """The centroids collected to the driver: (ids, matrix)."""
+    return centroid_kernel.centroid_arrays(cents.select("centroid_id", "cent_vec").toArrow())
+
+
+def _ansi(df: DataFrame) -> bool:
+    return df.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+
+
 def _nearest_centroids(
     vectors: DataFrame, cents: DataFrame, vec: str, n: int = 1
 ) -> DataFrame:
-    """Top-``n`` centroids of every row of ``vectors`` against the
-    broadcast one-row centroid array (the small partitioning structure
-    goes to every row, each row routes locally). Returns the input
+    """Top-``n`` centroids of every row of ``vectors``. Returns the input
     columns plus ``centroid_id``, ``cent_sim`` and ``crank`` (1 =
-    nearest): one row per vector when ``n`` == 1, up to ``n`` otherwise."""
-    cols = vectors.columns
-    return (
-        vectors.crossJoin(F.broadcast(_cent_row(cents)))
-        .select(
-            *cols,
-            F.posexplode(_top_centroids(F.col("_cents"), F.col(vec), n)).alias("_p", "_t"),
-        )
-        .select(
-            *cols,
-            (-F.col("_t.negid")).alias("centroid_id"),
-            F.col("_t.cent_sim").alias("cent_sim"),
-            (F.col("_p") + 1).alias("crank"),
-        )
+    nearest): one row per vector when ``n`` == 1, ``min(n, K)``
+    otherwise; no centroids, no rows.
+
+    Scale shape: the ~√N centroids are collected to the driver once per
+    call and travel inside the task closure; every partition scores its
+    rows in NumPy over Arrow batches
+    (:func:`.centroid_kernel.top_centroids`, the same double arithmetic
+    and order as :func:`_top_centroids`), so the vectors are routed
+    where they lie: no join, no shuffle, and the rows x K score block
+    stays a few MB at any K. A NULL vector, a NULL component or a
+    length other than the centroids' raises, naming the row by the
+    first column other than ``vec``."""
+    ids, cmat = _centroid_arrays(cents)
+    schema = T.StructType(
+        vectors.schema.fields
+        + [
+            T.StructField("centroid_id", cents.schema["centroid_id"].dataType),
+            T.StructField("cent_sim", T.DoubleType()),
+            T.StructField("crank", T.IntegerType()),
+        ]
     )
+    kernel = partial(
+        centroid_kernel.top_centroids,
+        vec=vec,
+        id_col=next((c for c in vectors.columns if c != vec), None),
+        ids=ids,
+        cmat=cmat,
+        n=n,
+        ansi=_ansi(vectors),
+    )
+    return vectors.mapInArrow(kernel, schema)
 
 
 def _assign_to_centroids(
@@ -214,7 +254,7 @@ def _assign_to_centroids(
     ).select("vid", "v", "centroid_id")
 
 
-_MICRO = 1_000_000.0  # integer micro-units of the exact k-means mean
+_MICRO = centroid_kernel.MICRO  # integer micro-units of the exact k-means mean
 
 
 def _micro_mean(rows: DataFrame, keys: list[str], v: str) -> DataFrame:
@@ -285,25 +325,32 @@ def kmeans_centroids(
       micro-unit mean of :func:`_micro_mean` — bit-identical on any
       engine, any partitioning, any core count; the 1e-6 quantization
       is far below any recall-relevant resolution.
-    * empty clusters keep their previous centroid (left join + coalesce).
+    * empty clusters keep their previous centroid.
 
-    Scale shape: centroids are ~√N rows and broadcast as one array; each
-    round is one row-local assignment pass (:func:`_nearest_centroids`,
-    no corpus shuffle) plus one ``groupBy(centroid_id, pos)`` over the
-    posexploded vectors whose integer sums combine map-side, so the
-    shuffle carries ~K·dim (id, pos, n, sum) rows per map partition, not
-    data, and the plan has the same few expressions at any ``dim``
-    (``dim`` no longer shapes the plan; it stays for call
-    compatibility). Each round's K rows are persisted; once the last
-    round is materialized the earlier ones are released, so a call
-    leaves one cached frame — the result.
+    Scale shape (one level): the ~√N seeds are collected to the driver
+    once, and each round is ONE job with no shuffle, the MLlib Lloyd
+    shape. Every partition assigns its vectors with the NumPy kernel
+    (:func:`.centroid_kernel.centroid_sums`, the arithmetic of
+    :func:`_nearest_centroids`) and emits one row of exact BIGINT
+    micro-unit sums per touched centroid; the driver adds the K·dim
+    partials and divides once (:func:`.centroid_kernel.lloyd_means`),
+    the same ``s / (1e6 · n)`` as :func:`_micro_mean`. A call runs
+    ``iters`` + 1 jobs and returns the K rows as a local relation.
+    Training refuses what it cannot place: a NULL vector, a NULL,
+    NaN or infinite component, a length other than the centroids', or
+    a sum that leaves BIGINT raises, naming the vector where there is
+    one. ``dim`` does not shape the work; it stays for call
+    compatibility.
 
     With ``two_level=True`` the per-round assignment goes through
     :func:`assign_two_level` (every ``super_stride``-th centroid becomes a
     super-centroid; vectors route super-first) — the build-cost cut of
-    VERDICT r4 ask #2. Default off: the oracle pins the exact one-level
-    assignment, and the pytest equality check (test_ann_kmeans) is what
-    licenses flipping it on at scale.
+    VERDICT r4 ask #2 — and the mean is the SQL :func:`_micro_mean`: a
+    ``groupBy(centroid_id, pos)`` whose integer sums combine map-side.
+    Each of its rounds is persisted and the earlier ones released once
+    the last is materialized. Default off: the oracle pins the exact
+    one-level assignment, and the pytest equality check (test_ann_kmeans)
+    is what licenses flipping it on at scale.
 
     Returns (centroid_id, cent_vec array<double>) — centroid ids remain
     the seed vec_ids, so downstream list/bucket naming is stable across
@@ -312,14 +359,27 @@ def kmeans_centroids(
     cents = _seed_cents(corpus, key, vec, centroid_mod).select(
         "centroid_id", _to_double(F.col("cent_vec")).alias("cent_vec")
     )
+    if not two_level:
+        ids, cmat = _centroid_arrays(cents)
+        kernel = partial(
+            centroid_kernel.centroid_sums, vec=vec, id_col=key, ansi=_ansi(corpus)
+        )
+        vectors = corpus.select(key, vec)
+        for _ in range(iters):
+            parts = vectors.mapInArrow(
+                partial(kernel, cmat=cmat), centroid_kernel.CENTROID_SUMS_DDL
+            ).toArrow()
+            cmat = centroid_kernel.lloyd_means(cmat, parts)
+        # from Arrow the K rows are a LocalRelation, which later
+        # collects read without a job
+        return corpus.sparkSession.createDataFrame(
+            centroid_kernel.centroid_table(ids, cmat), cents.schema
+        )
     rounds = []
     for _ in range(iters):
-        if two_level:
-            assigned = assign_two_level(
-                corpus, cents, key=key, vec=vec, super_stride=super_stride
-            )
-        else:
-            assigned = _assign_to_centroids(corpus, cents, key, vec)
+        assigned = assign_two_level(
+            corpus, cents, key=key, vec=vec, super_stride=super_stride
+        )
         means = _micro_mean(assigned, ["centroid_id"], "v")
         cents = (
             cents.join(means, "centroid_id", "left")
@@ -453,10 +513,10 @@ def ivf_topk(
     scale structure (assign once, bucket the corpus by ``centroid_id``,
     probe few lists per query) is identical to a trained-centroid IVF.
 
-    Scale shape: the ~√N centroids broadcast as ONE row (ids, vectors and
-    norms); list assignment and probe selection are both row-local
-    top-n over that array (:func:`_nearest_centroids`), so neither the
-    corpus nor the queries shuffle to be routed. At 100 TB the corpus is
+    Scale shape: the ~√N centroids go to every task with the kernel;
+    list assignment and probe selection are both row-local top-n in
+    NumPy (:func:`_nearest_centroids`), so neither the corpus nor the
+    queries shuffle to be routed. At 100 TB the corpus is
     written bucketed by ``centroid_id`` so probing is a partition-pruned
     scan; the one remaining shuffle is the final per-query top-k window
     over the scored candidates.
@@ -869,8 +929,8 @@ def ivf_index_append(
 ) -> DataFrame:
     """Incremental IVF ingest: assign an arriving batch to the SETTLED
     index's lists — centroids come from the corpus snapshot, cost is
-    proportional to the BATCH (|batch| × K cosines against broadcast
-    centroids), the corpus is never re-scanned or re-shuffled. The
+    proportional to the BATCH (|batch| × K cosines against the
+    collected centroids), the corpus is never re-scanned or re-shuffled. The
     ANN-family member of the ``lsh_index_probe`` /
     ``semantic_index_probe`` ingest shape; at 100 TB the returned
     assignments append straight into the (centroid_id)-bucketed list

@@ -282,6 +282,133 @@ def test_nearest_centroids_zero_vector_matches_window_form(spark):
         spark.conf.unset("spark.sql.ansi.enabled")
 
 
+def _sql_top_n(vectors, cents, n):
+    """The SQL ranking the kernel replaced (``_top_centroids`` over the
+    one-row centroid array, kept for assign_two_level):
+    (vid, crank, centroid_id, cent_sim)."""
+    return (
+        vectors.crossJoin(F.broadcast(S._cent_row(cents)))
+        .select(
+            "vid",
+            F.posexplode(S._top_centroids(F.col("_cents"), F.col("v"), n)).alias("_p", "_t"),
+        )
+        .select(
+            "vid",
+            (F.col("_p") + 1).alias("crank"),
+            (-F.col("_t.negid")).alias("centroid_id"),
+            F.col("_t.cent_sim").alias("cent_sim"),
+        )
+    )
+
+
+def _bits(x):
+    return None if x is None else "nan" if math.isnan(x) else x.hex()
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_kernel_matches_sql_reference(spark, elem):
+    """The NumPy kernel returns the SQL form's rows, ranks, ids and
+    bit-identical cosines: random float32 and double vectors, an exact
+    tie (centroid 4 duplicates -2, so -2 ranks first), a NaN vector,
+    negative ids, and n = 1, 3, K and K + 2 (K rows per vector)."""
+    rng = random.Random(13)
+    vec = lambda: [rng.uniform(-1.0, 1.0) for _ in range(8)]  # noqa: E731
+    base = {cid: vec() for cid in (-7, -2, 0, 3, 11)}
+    base[4] = list(base[-2])
+    k = len(base)
+    cents = spark.createDataFrame(
+        sorted(base.items()), f"centroid_id long, cent_vec array<{elem}>"
+    )
+    rows = [(i, vec()) for i in range(60)] + [
+        (60, list(base[3])),
+        (61, [float("nan")] + [0.25] * 7),
+        (-62, vec()),
+    ]
+    vectors = spark.createDataFrame(rows, f"vid long, v array<{elem}>")
+    for n in (1, 3, k, k + 2):
+        want = sorted(
+            (r[0], r[1], r[2], _bits(r[3])) for r in _sql_top_n(vectors, cents, n).collect()
+        )
+        kernel = S._nearest_centroids(vectors, cents, "v", n)
+        assert "MapInArrow" in kernel._jdf.queryExecution().executedPlan().toString()
+        got = sorted(
+            (r[0], r[1], r[2], _bits(r[3]))
+            for r in kernel.select("vid", "crank", "centroid_id", "cent_sim").collect()
+        )
+        assert got == want, n
+        assert len(got) == len(rows) * min(n, k)
+
+
+def _kmeans_corpus(spark, extra):
+    """Centroid seeds 1 and 21 (centroid_mod=20) with two members each,
+    plus ``extra`` rows."""
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0, 0.0]),
+        (21, [0.0, 1.0, 5.0, 0.0]),
+        (22, [0.0, 1.1, 4.9, 0.1]),
+    ] + extra
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        (None, "vec_id=7: NULL"),
+        ([0.0, None, 5.0, 0.0], "vec_id=7: NULL component"),
+        ([0.0, 1.0, 5.0], "vec_id=7: length 3"),
+        ([0.0, float("nan"), 5.0, 0.0], "vec_id=7: non-finite"),
+        ([0.0, float("inf"), 5.0, 0.0], "vec_id=7: non-finite"),
+    ],
+)
+def test_kmeans_rejects_malformed_vectors(spark, bad, match):
+    """k-means fails loud, naming the vector, on one it cannot place. The
+    SQL form scored a NULL, NULL-holding or short vector NULL against
+    every centroid (NaN for a non-finite one), put it in the smallest-id
+    cluster and trained on it: [0, 1, 5], next to centroid 21, made
+    centroid 1 the 3-element [0.475, 0.525, 5.0]."""
+    df = _kmeans_corpus(spark, [(7, bad)])
+    with pytest.raises(Exception, match=match):
+        S.kmeans_centroids(df, dim=4, centroid_mod=20, iters=2)
+
+
+def test_kmeans_sum_overflow_raises(spark):
+    """A cluster whose micro-unit sum leaves BIGINT raises; the int64
+    partials never wrap (three 4e12 components sum to 1.2e19 > 2^63)."""
+    big = [(i, [4e12, 0.0, 0.0, 0.0]) for i in (3, 4, 5)]
+    with pytest.raises(OverflowError, match="exceeds BIGINT"):
+        S.kmeans_centroids(_kmeans_corpus(spark, big), dim=4, centroid_mod=20, iters=1)
+
+
+def test_kmeans_round_is_one_job_without_shuffle(spark):
+    """A one-level Lloyd round is one job: each partition assigns its
+    vectors and sums them, and the driver adds the K x dim partials.
+    A call runs iters + 1 jobs (the seed collect, then one per round)
+    and shuffles nothing; the SQL form ran 24 jobs and shuffled
+    744,005 B on the perfbench corpus."""
+    from py4j.protocol import Py4JJavaError
+
+    emb = _emb(spark)  # outside the group: reading the footer is a job
+    sc = spark.sparkContext
+    group = "kmeans-one-job-per-round"
+    sc.setJobGroup(group, "kmeans_centroids iters=3")
+    try:
+        S.kmeans_centroids(emb, dim=64, centroid_mod=100, iters=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    shuffled = 0
+    for sid in {s for j in jobs for s in tracker.getJobInfo(j).stageIds}:
+        try:
+            shuffled += store.lastStageAttempt(sid).shuffleWriteBytes()
+        except Py4JJavaError:  # skipped: its shuffle output was reused
+            shuffled += 1
+    assert 0 < len(jobs) <= 4, sorted(jobs)
+    assert shuffled == 0
+
+
 def test_two_level_empty_candidates_fail_loud(spark):
     """A vector routed to a super that no centroid hangs under must fail
     the query, not come back with a NULL centroid_id (which silently

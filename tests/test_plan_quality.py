@@ -83,10 +83,16 @@ def test_pricing_agg_partial_aggregation(spark):
 
 
 def test_ivf_broadcasts_centroids_and_probes(spark):
-    # the corpus side must never shuffle for the centroid assignment —
-    # centroids and probe lists are the broadcast sides
+    # the corpus side must never shuffle for the centroid assignment: the
+    # centroids travel in the kernel's closure, so list assignment and
+    # probe routing are one MapInArrow each over their own scan, the
+    # probe lists are the broadcast side of the one join, and the only
+    # shuffle is the per-query top-k window
     plan = plan_of(entry_mod._q_ann_topk_ivf(spark, SF), mode="simple")
-    assert plan.count("BroadcastNestedLoopJoin") + plan.count("BroadcastHashJoin") >= 3
+    assert plan.count("MapInArrow") == 2, plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
+    assert plan.count("Exchange") == 2, plan  # the shuffle and the broadcast
     assert "CartesianProduct" not in plan
 
 
@@ -359,10 +365,12 @@ def _aggregate_exprs(df) -> int:
 
 
 def test_kmeans_round_plan_size_independent_of_dim(spark):
-    """One k-means round builds the same plan at dim=8 and dim=64: the
-    mean is posexploded and grouped by (centroid_id, pos), not one sum
-    and one divide column per dimension — Column-tree building on the
-    driver was the dominant cost of a round."""
+    """One SQL k-means round (the two-level path; the one-level path is
+    the NumPy kernel and builds no aggregate plan) builds the same plan
+    at dim=8 and dim=64: the mean is posexploded and grouped by
+    (centroid_id, pos), not one sum and one divide column per dimension
+    — Column-tree building on the driver was the dominant cost of a
+    round."""
     from osm_poi_matchmaker_spark.operators import similarity as S
 
     counts = []
@@ -371,7 +379,7 @@ def test_kmeans_round_plan_size_independent_of_dim(spark):
             (i, [float((i * 7 + d) % 13) - 6.0 for d in range(dim)]) for i in range(30)
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        cents = S.kmeans_centroids(df, dim=dim, centroid_mod=10, iters=1)
+        cents = S.kmeans_centroids(df, dim=dim, centroid_mod=10, iters=1, two_level=True)
         cents.unpersist(blocking=True)
         counts.append(_aggregate_exprs(cents))
     assert counts[0] == counts[1], counts
