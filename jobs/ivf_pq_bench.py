@@ -217,7 +217,7 @@ def main() -> None:
 
     # PQ probe from disk: reconstruct via broadcast codebook map
     stored_books = spark.read.parquet(f"{work}/pq_books")
-    bkv = similarity._books_map(stored_books).select("_bkv")
+    bkv = similarity._books_map(stored_books)
     recon = F.flatten(
         F.transform(
             F.sequence(F.lit(0), F.lit(m - 1)),

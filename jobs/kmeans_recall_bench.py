@@ -4,10 +4,11 @@
 
 Corpus: the ivf_sq8_bench generator (hash-mixed full-mantissa floats
 with planted near-copies so top-k has signal). Index build is the
-PRODUCTION path both times — two-level assignment (licensed by the
-synth equality test) over K=√N lists — once with the modulo-seeded
-centroids, once with centroids refined by 2 distributed Lloyd rounds.
-64 queries probe nprobe=2 lists; recall is against the exact
+PRODUCTION path both times — flat nearest-centroid assignment
+(``_assign_to_centroids``, the NumPy kernel) over K=√N lists — once
+with the modulo-seeded centroids, once with centroids refined by 2
+distributed Lloyd rounds. 64 queries probe their nprobe=2 nearest
+lists (``_nearest_centroids``); recall is against the exact
 brute-force top-5.
 
 Prints ONE JSON line; paste into BENCH.md.
@@ -34,7 +35,6 @@ def main() -> None:
     dim = 64
     n_q = 64
     centroid_mod = max(2, round(n ** 0.5))
-    stride = max(2, round(n ** 0.25))
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -110,20 +110,10 @@ def main() -> None:
         t0 = time.time()
         cents = cents.persist()
         cents.count()
-        assigned = similarity.assign_two_level(
-            cnorm, cents, key="vec_id", vec="u",
-            super_stride=stride, nprobe_super=2, assume_normalized=True,
-        ).persist()
+        assigned = similarity._assign_to_centroids(cnorm, cents, "vec_id", "u").persist()
         assigned.count()
-        w_probe = Window.partitionBy("query_id").orderBy(
-            F.desc("cs"), F.asc("centroid_id")
-        )
-        probes = (
-            queries.crossJoin(F.broadcast(cents))
-            .withColumn("cs", similarity.dot(F.col("q"), F.col("cent_vec")))
-            .withColumn("pr", F.row_number().over(w_probe))
-            .where(F.col("pr") <= nprobe)
-            .select("query_id", "q", "centroid_id")
+        probes = similarity._nearest_centroids(queries, cents, "q", nprobe).select(
+            "query_id", "q", "centroid_id"
         )
         approx = (
             assigned.join(F.broadcast(probes), "centroid_id")
@@ -157,7 +147,7 @@ def main() -> None:
     t0 = time.time()
     trained = similarity.kmeans_centroids(
         cnorm, dim=dim, centroid_mod=centroid_mod, iters=2,
-        key="vec_id", vec="u", two_level=True, super_stride=stride,
+        key="vec_id", vec="u",
     )
     trained.count()
     t_train = round(time.time() - t0, 1)
@@ -173,7 +163,7 @@ def main() -> None:
                 "exact_sec": t_exact,
                 "recall_modulo": r_mod,
                 "recall_kmeans": r_km,
-                "train_sec_2iters_two_level": t_train,
+                "train_sec_2iters": t_train,
                 "probe_sec_modulo": t_mod,
                 "probe_sec_kmeans": t_km,
                 "cpus": cpus,

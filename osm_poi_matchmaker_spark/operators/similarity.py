@@ -4,8 +4,8 @@ Baseline: brute-force cosine top-k via built-in array expressions
 (``zip_with`` dot product, JVM-side). Scale paths: LSH-style bucketing on
 sign-random-projections, so candidate generation is a bucket join
 instead of all-pairs (the tiling layer's cell join with bucket key =
-quantized signature); and the IVF family, whose nearest-centroid routing
-and one-level k-means rounds are the NumPy kernel of
+quantized signature); and the IVF family, whose nearest-centroid routing,
+k-means and PQ rounds and PQ encoding are the NumPy kernel of
 :mod:`.centroid_kernel` over Arrow batches (``mapInArrow``), bit-identical
 to the SQL fold.
 """
@@ -150,53 +150,6 @@ def _seed_cents(corpus: DataFrame, key: str, vec: str, centroid_mod: int) -> Dat
     )
 
 
-def _cent_row(cents: DataFrame) -> DataFrame:
-    """The K centroids as ONE broadcastable row ``_cents`` =
-    array<(centroid_id, cent_vec, cn)>, each centroid's norm ``cn``
-    computed once here rather than once per scored pair. No centroids
-    → no row, so a cross join against it drops every vector (what the
-    crossJoin + window assigner did)."""
-    return cents.agg(
-        F.collect_list(
-            F.struct("centroid_id", "cent_vec", norm(F.col("cent_vec")).alias("cn"))
-        ).alias("_cents")
-    ).where(F.size("_cents") > 0)
-
-
-def _top_centroids(cands: Column, v: Column, n: int, unit: bool = False) -> Column:
-    """The nearest-centroid ranking in SQL, for :func:`assign_two_level`
-    (its candidates differ per row) and as the reference the NumPy
-    kernel of :func:`_nearest_centroids` is tested against: the ``n``
-    best entries of ``cands`` (array<(centroid_id, cent_vec, cn)>) for
-    the vector ``v``, ordered desc cosine then asc centroid_id, as
-    array<(cent_sim, negid)> with ``negid`` = -centroid_id. Row-local:
-    no explode, no shuffle.
-
-    Cosine is the same ``dot / (norm(v) * norm(c))`` double fold as
-    :func:`cosine`, so every score is bit-identical to the crossJoin +
-    ``row_number`` form it replaces, and struct ordering puts NaN first
-    and NULL last exactly like ``desc(cent_sim)``. ``norm(v)`` is the
-    argument of a one-element ``transform`` — evaluated once per row; in
-    the lambda body it would be re-evaluated for every centroid.
-    ``unit=True`` scores with the plain dot product (unit vectors)."""
-
-    def rank(vn: Column) -> Column:
-        scored = F.transform(
-            cands,
-            lambda c: F.struct(
-                (dot(v, c.cent_vec) if unit else dot(v, c.cent_vec) / (vn * c.cn)).alias(
-                    "cent_sim"
-                ),
-                (-c.centroid_id).alias("negid"),
-            ),
-        )
-        if n == 1:
-            return F.array(F.array_max(scored))
-        return F.slice(F.sort_array(scored, asc=False), 1, n)
-
-    return F.transform(F.array(F.lit(1.0) if unit else norm(v)), rank)[0]
-
-
 def _centroid_arrays(cents: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """The centroids collected to the driver: (ids, matrix)."""
     return centroid_kernel.centroid_arrays(cents.select("centroid_id", "cent_vec").toArrow())
@@ -217,9 +170,9 @@ def _nearest_centroids(
     Scale shape: the ~√N centroids are collected to the driver once per
     call and travel inside the task closure; every partition scores its
     rows in NumPy over Arrow batches
-    (:func:`.centroid_kernel.top_centroids`, the same double arithmetic
-    and order as :func:`_top_centroids`), so the vectors are routed
-    where they lie: no join, no shuffle, and the rows x K score block
+    (:func:`.centroid_kernel.top_centroids`, the double arithmetic of
+    :func:`cosine` and the order of a ``desc`` sort), so the vectors are
+    routed where they lie: no join, no shuffle, and the rows x K score block
     stays a few MB at any K. A NULL vector, a NULL component or a
     length other than the centroids' raises, naming the row by the
     first column other than ``vec``."""
@@ -239,6 +192,7 @@ def _nearest_centroids(
         ids=ids,
         cmat=cmat,
         n=n,
+        metric=centroid_kernel.COSINE,
         ansi=_ansi(vectors),
     )
     return vectors.mapInArrow(kernel, schema)
@@ -254,47 +208,6 @@ def _assign_to_centroids(
     ).select("vid", "v", "centroid_id")
 
 
-_MICRO = centroid_kernel.MICRO  # integer micro-units of the exact k-means mean
-
-
-def _micro_mean(rows: DataFrame, keys: list[str], v: str) -> DataFrame:
-    """Per-group component mean of the array column ``v``, exact on any
-    engine and partitioning: each component is quantized to
-    ``floor(x · 1e6)`` BIGINT, summed (integer addition commutes) and
-    divided once, ``sum / (1e6 · n)``.
-
-    ``posexplode`` + ``groupBy(keys…, pos)`` keeps the plan two columns
-    wide for any ``dim`` (one ``sum`` and one divide column per
-    dimension cost ~1 s of driver-side plan building per round at
-    dim=64) and still aggregates partially on the map side; the per-pos
-    means regroup into an array ordered by ``pos``. Returns (keys…,
-    new_vec)."""
-    sums = (
-        rows.select(*keys, F.posexplode(v).alias("_pos", "_x"))
-        .groupBy(*keys, "_pos")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(F.floor(F.col("_x").cast("double") * F.lit(_MICRO))).alias("_s"),
-        )
-    )
-    return (
-        sums.groupBy(*keys)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        "_pos",
-                        (F.col("_s").cast("double") / (F.lit(_MICRO) * F.col("_n"))).alias(
-                            "_m"
-                        ),
-                    )
-                )
-            ).alias("_ms")
-        )
-        .select(*keys, F.transform("_ms", lambda e: e["_m"]).alias("new_vec"))
-    )
-
-
 def kmeans_centroids(
     corpus: DataFrame,
     dim: int,
@@ -302,8 +215,6 @@ def kmeans_centroids(
     iters: int = 2,
     key: str = "vec_id",
     vec: str = "embedding",
-    two_level: bool = False,
-    super_stride: int = 4,
 ) -> DataFrame:
     """Fixed-iteration distributed Lloyd refinement of the modulo-seeded
     centroids (VERDICT r4 "Next round" #1): start from the deterministic
@@ -321,36 +232,21 @@ def kmeans_centroids(
       arithmetic both engines execute identically;
     * the MEAN is the one step where naive float summation would be
       aggregation-order-dependent (Spark partial aggregates sum in
-      shuffle order; DuckDB in scan order), so it is the integer
-      micro-unit mean of :func:`_micro_mean` — bit-identical on any
-      engine, any partitioning, any core count; the 1e-6 quantization
-      is far below any recall-relevant resolution.
+      shuffle order; DuckDB in scan order), so each component is
+      quantized to ``floor(x · 1e6)`` BIGINT, summed exactly and divided
+      once, ``s / (1e6 · n)`` — bit-identical on any engine, any
+      partitioning, any core count; the 1e-6 quantization is far below
+      any recall-relevant resolution.
     * empty clusters keep their previous centroid.
 
-    Scale shape (one level): the ~√N seeds are collected to the driver
-    once, and each round is ONE job with no shuffle, the MLlib Lloyd
-    shape. Every partition assigns its vectors with the NumPy kernel
-    (:func:`.centroid_kernel.centroid_sums`, the arithmetic of
-    :func:`_nearest_centroids`) and emits one row of exact BIGINT
-    micro-unit sums per touched centroid; the driver adds the K·dim
-    partials and divides once (:func:`.centroid_kernel.lloyd_means`),
-    the same ``s / (1e6 · n)`` as :func:`_micro_mean`. A call runs
-    ``iters`` + 1 jobs and returns the K rows as a local relation.
-    Training refuses what it cannot place: a NULL vector, a NULL,
-    NaN or infinite component, a length other than the centroids', or
-    a sum that leaves BIGINT raises, naming the vector where there is
-    one. ``dim`` does not shape the work; it stays for call
-    compatibility.
-
-    With ``two_level=True`` the per-round assignment goes through
-    :func:`assign_two_level` (every ``super_stride``-th centroid becomes a
-    super-centroid; vectors route super-first) — the build-cost cut of
-    VERDICT r4 ask #2 — and the mean is the SQL :func:`_micro_mean`: a
-    ``groupBy(centroid_id, pos)`` whose integer sums combine map-side.
-    Each of its rounds is persisted and the earlier ones released once
-    the last is materialized. Default off: the oracle pins the exact
-    one-level assignment, and the pytest equality check (test_ann_kmeans)
-    is what licenses flipping it on at scale.
+    Scale shape: the ~√N seeds are collected to the driver once, and
+    each round is ONE job with no shuffle, the MLlib Lloyd shape
+    (:func:`_lloyd`). A call runs ``iters`` + 1 jobs and returns the K
+    rows as a local relation. Training refuses what it cannot place: a
+    NULL vector, a NULL, NaN or infinite component, a length other than
+    the centroids', or a sum that leaves BIGINT raises, naming the
+    vector where there is one. ``dim`` does not shape the work; it
+    stays for call compatibility.
 
     Returns (centroid_id, cent_vec array<double>) — centroid ids remain
     the seed vec_ids, so downstream list/bucket naming is stable across
@@ -359,138 +255,33 @@ def kmeans_centroids(
     cents = _seed_cents(corpus, key, vec, centroid_mod).select(
         "centroid_id", _to_double(F.col("cent_vec")).alias("cent_vec")
     )
-    if not two_level:
-        ids, cmat = _centroid_arrays(cents)
-        kernel = partial(
-            centroid_kernel.centroid_sums, vec=vec, id_col=key, ansi=_ansi(corpus)
-        )
-        vectors = corpus.select(key, vec)
-        for _ in range(iters):
-            parts = vectors.mapInArrow(
-                partial(kernel, cmat=cmat), centroid_kernel.CENTROID_SUMS_DDL
-            ).toArrow()
-            cmat = centroid_kernel.lloyd_means(cmat, parts)
-        # from Arrow the K rows are a LocalRelation, which later
-        # collects read without a job
-        return corpus.sparkSession.createDataFrame(
-            centroid_kernel.centroid_table(ids, cmat), cents.schema
-        )
-    rounds = []
+    ids, cmat = _centroid_arrays(cents)
+    books = _lloyd(corpus.select(key, vec), cmat[None], iters, key, vec, centroid_kernel.COSINE)
+    # from Arrow the K rows are a LocalRelation, which later collects
+    # read without a job
+    return corpus.sparkSession.createDataFrame(
+        centroid_kernel.codebook_table(ids, books).drop_columns(["subspace"]), cents.schema
+    )
+
+
+def _lloyd(
+    vectors: DataFrame, books: np.ndarray, iters: int, key: str, vec: str, metric: str
+) -> np.ndarray:
+    """``iters`` Lloyd rounds of the (m, k, d0) codebooks ``books`` over
+    ``vectors`` under ``metric``, each ONE job with no shuffle: every
+    partition assigns its vectors with the NumPy kernel and emits one
+    row of exact BIGINT micro-unit sums per touched centroid
+    (:func:`.centroid_kernel.centroid_sums`); the driver adds the
+    partials and divides once (:func:`.centroid_kernel.lloyd_means`)."""
+    kernel = partial(
+        centroid_kernel.centroid_sums, vec=vec, id_col=key, metric=metric, ansi=_ansi(vectors)
+    )
     for _ in range(iters):
-        assigned = assign_two_level(
-            corpus, cents, key=key, vec=vec, super_stride=super_stride
-        )
-        means = _micro_mean(assigned, ["centroid_id"], "v")
-        cents = (
-            cents.join(means, "centroid_id", "left")
-            .select(
-                "centroid_id",
-                F.coalesce("new_vec", "cent_vec").alias("cent_vec"),
-            )
-            .persist()
-        )
-        rounds.append(cents)
-    return _release_rounds(rounds, cents)
-
-
-def _release_rounds(rounds: list[DataFrame], result: DataFrame) -> DataFrame:
-    """Materialize ``result`` — the last of the persisted training
-    ``rounds`` — then release the rounds before it: building the last
-    round's cache reads (and so builds) every earlier one in the same
-    job, and a loaded cache no longer needs the plans it was built from.
-    One cached frame per training call instead of one per round."""
-    if rounds:
-        result.count()
-        for r in rounds[:-1]:
-            r.unpersist()
-    return result
-
-
-def assign_two_level(
-    vectors: DataFrame,
-    cents: DataFrame,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    super_stride: int = 4,
-    nprobe_super: int = 2,
-    assume_normalized: bool = False,
-) -> DataFrame:
-    """Two-level nearest-centroid assignment (VERDICT r4 ask #2): route
-    each vector to its ``nprobe_super`` nearest SUPER-centroids first
-    (every ``super_stride``-th centroid by rank order — ~K/stride rows),
-    then rank only the centroids grouped under those supers. Cuts the
-    N×K flat assignment to ~N×(K/stride + nprobe_super·stride) cosine
-    evaluations — at K=√N, stride=∜N this is the N×(∜N + √N/∜N) shape
-    the round-4 verdict asked for.
-
-    Approximate in general (the true nearest centroid may hang under an
-    unprobed super); ``nprobe_super=2`` recovers exactness on the synth
-    corpus (pinned by test_ann_kmeans's equality check), which is the
-    evidence that licenses the fast path at build time. Same output
-    schema as the flat assigner: (vid, v, centroid_id). A vector whose
-    probed supers hold no centroids fails the query (``raise_error``)
-    instead of leaving training with a NULL centroid_id.
-
-    SHUFFLE-FREE on the corpus side: the super set and the
-    centroid→super map collapse to broadcast ONE-ROW arrays, and both
-    the routing and the final argmax are :func:`_top_centroids` over
-    them — row-local array expressions, no exploded candidate rows
-    cross an exchange, which is what makes this the build path at 10⁶+
-    vectors.
-
-    ``assume_normalized=True`` scores with a plain dot product
-    (callers pass unit vectors) — skips the norm division.
-    """
-    # Supers: every super_stride-th centroid in centroid_id rank order —
-    # deterministic, no new hyperparameter surface. INTENTIONAL
-    # single-partition window: it runs over the CENTROID table (~√N
-    # rows, broadcast-sized dim), never the corpus — do not copy this
-    # shape to a corpus-scale plan (see plans/export.global_rank_by).
-    w_rank = Window.orderBy(F.asc("centroid_id"))
-    supers = (
-        cents.select("centroid_id", "cent_vec", F.row_number().over(w_rank).alias("_r"))
-        .where((F.col("_r") % super_stride) == 1)
-        .select("centroid_id", "cent_vec")
-    )
-    cent = F.struct("centroid_id", "cent_vec", norm(F.col("cent_vec")).alias("cn"))
-    # Each centroid hangs under its nearest super (K×(K/stride) work on
-    # the K-row centroid table); super_id → its centroids is a one-row
-    # broadcast MAP, so routing does one map lookup per probed super.
-    cmap = (
-        cents.crossJoin(F.broadcast(_cent_row(supers)))
-        .select(
-            cent.alias("c"),
-            (-_top_centroids(F.col("_cents"), F.col("cent_vec"), 1, assume_normalized)[0].negid)
-            .alias("super_id"),
-        )
-        .groupBy("super_id")
-        .agg(F.collect_list("c").alias("cs"))
-        .agg(F.map_from_arrays(F.collect_list("super_id"), F.collect_list("cs")).alias("_cmap"))
-    )
-    v = F.col("v")
-    top_supers = _top_centroids(F.col("_cents"), v, nprobe_super, assume_normalized)
-    cands = F.flatten(
-        F.transform(
-            top_supers,
-            lambda t: F.coalesce(F.element_at(F.col("_cmap"), -t.negid), F.array()),
-        )
-    )
-    best = _top_centroids(cands, v, 1, assume_normalized)[0]
-    return (
-        vectors.select(F.col(key).alias("vid"), F.col(vec).alias("v"))
-        .crossJoin(F.broadcast(_cent_row(supers)))
-        .crossJoin(F.broadcast(cmap))
-        .select(
-            "vid",
-            "v",
-            F.coalesce(
-                -best.negid,
-                F.raise_error(
-                    F.lit("assign_two_level: no candidate centroids under the probed supers")
-                ),
-            ).alias("centroid_id"),
-        )
-    )
+        parts = vectors.mapInArrow(
+            partial(kernel, books=books), centroid_kernel.CENTROID_SUMS_DDL
+        ).toArrow()
+        books = centroid_kernel.lloyd_means(books, parts)
+    return books
 
 
 def ivf_topk(
@@ -948,19 +739,6 @@ def ivf_index_append(
     )
 
 
-def _l2(a: Column, b: Column) -> Column:
-    """Squared euclidean distance, element-ordered double fold (the PQ
-    sub-assignment metric — FAISS PQ trains/assigns in L2)."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_codebooks(
     corpus: DataFrame,
     dim: int,
@@ -981,14 +759,12 @@ def pq_codebooks(
     quantization — so the DuckDB oracle reproduces every codebook
     component bit-for-bit.
 
-    Scale shape: codebooks are m×k rows of dim/m doubles (KB — always
-    broadcast); per iteration the ASSIGNMENT is row-local array math
-    against the broadcast codebook (no explode before the argmin), and
-    the UPDATE is the shared :func:`_micro_mean` over (subspace, code)
-    sub-vectors — one partially-aggregated (subspace, code, pos) row per
-    map partition, and a plan of the same size for any dim/m. Rounds
-    are released as in :func:`kmeans_centroids`: a call leaves one
-    cached frame — the result.
+    Scale shape: codebooks are m×k rows of dim/m doubles (KB); the
+    seeds are collected to the driver once and each round is one job
+    with no shuffle (:func:`_lloyd`, every subspace in the same pass),
+    so a call runs ``iters`` + 1 jobs and returns the codebooks as a
+    local relation. Training refuses the same malformed vectors as
+    :func:`kmeans_centroids`, naming the vector.
 
     Returns (subspace, centroid_id, cent_vec array<double>) —
     centroid ids remain the seed vec_ids.
@@ -997,83 +773,47 @@ def pq_codebooks(
     if d0 * m != dim:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     seeds = corpus.where(F.col(key) % sub_mod == 1).select(
-        F.col(key).alias("centroid_id"), _to_double(F.col(vec)).alias("_v")
+        F.col(key).alias("centroid_id"), F.col(vec).alias("cent_vec")
     )
-    if not seeds.limit(1).take(1):
-        # An empty seed set would propagate as NULL codes and silently
-        # garbage every downstream score (seen when a training subsample's
-        # id residues don't intersect `% sub_mod == 1`). Fail loudly —
-        # same contract as the streaming twins' empty-corpus refusal.
+    ids, smat = _centroid_arrays(seeds)
+    if not len(ids):
+        # An empty seed set would leave every code undefined (seen when
+        # a training subsample's id residues don't intersect
+        # `% sub_mod == 1`). Fail loudly — same contract as the
+        # streaming twins' empty-corpus refusal.
         raise ValueError(
             f"pq_codebooks: no seed rows ({key} % {sub_mod} == 1 selects "
             "none of the training corpus) — check the subsample scheme"
         )
-    books = seeds.select(
-        "centroid_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("subspace"),
-                        F.slice("_v", s * d0 + 1, d0).alias("cent_vec"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("_e"),
-    ).select(
-        F.col("_e.subspace").alias("subspace"),
-        "centroid_id",
-        F.col("_e.cent_vec").alias("cent_vec"),
+    if smat.shape[1] != dim:
+        raise ValueError(f"vector {key}={ids[0]}: length {smat.shape[1]}, dim is {dim}")
+    books = _lloyd(
+        corpus.select(key, vec),
+        smat.reshape(len(ids), m, d0).transpose(1, 0, 2).copy(),
+        iters,
+        key,
+        vec,
+        centroid_kernel.L2,
     )
-    rounds = []
-    for _ in range(iters):
-        sub = pq_encode(corpus, books, dim=dim, m=m, key=key, vec=vec).select(
-            "_vd", F.posexplode("codes").alias("subspace", "centroid_id")
-        )
-        means = _micro_mean(
-            sub.select(
-                "subspace",
-                "centroid_id",
-                F.slice("_vd", F.col("subspace") * d0 + 1, F.lit(d0)).alias("_x"),
-            ),
-            ["subspace", "centroid_id"],
-            "_x",
-        )
-        books = (
-            books.join(means, ["subspace", "centroid_id"], "left")
-            .select(
-                "subspace",
-                "centroid_id",
-                F.coalesce("new_vec", "cent_vec").alias("cent_vec"),
-            )
-            .persist()
-        )
-        rounds.append(books)
-    return _release_rounds(rounds, books)
+    schema = T.StructType(
+        [
+            T.StructField("subspace", T.IntegerType()),
+            T.StructField("centroid_id", seeds.schema["centroid_id"].dataType),
+            T.StructField("cent_vec", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    return corpus.sparkSession.createDataFrame(
+        centroid_kernel.codebook_table(ids, books), schema
+    )
 
 
 def _books_map(books: DataFrame) -> DataFrame:
-    """One-row broadcastable forms of a codebook: ``_bmap`` (subspace →
-    sorted array of (centroid_id, cent_vec)) for the argmin, ``_bkv``
-    (subspace → (centroid_id → cent_vec)) for reconstruction. Nested
-    maps, so no composite key can collide at any codeword id."""
-    return (
-        books.groupBy("subspace")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("centroid_id", "cent_vec"))
-            ).alias("arr")
-        )
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("subspace"), F.collect_list("arr")
-            ).alias("_bmap"),
-            F.map_from_arrays(
-                F.collect_list("subspace"), F.collect_list(F.map_from_entries("arr"))
-            ).alias("_bkv"),
-        )
-    )
+    """A codebook as one broadcastable row ``_bkv`` (subspace →
+    (centroid_id → cent_vec)) for reconstruction. Nested maps, so no
+    composite key can collide at any codeword id."""
+    return books.groupBy("subspace").agg(
+        F.map_from_entries(F.collect_list(F.struct("centroid_id", "cent_vec"))).alias("kv")
+    ).agg(F.map_from_arrays(F.collect_list("subspace"), F.collect_list("kv")).alias("_bkv"))
 
 
 def pq_encode(
@@ -1085,32 +825,27 @@ def pq_encode(
     vec: str = "embedding",
 ) -> DataFrame:
     """Encode each vector as ``m`` sub-centroid ids (the PQ code —
-    m bytes at k≤256 where float32 storage is 4·dim). Row-local:
-    the codebook broadcasts as a one-row map and the per-subspace
-    argmin is an array expression (asc L2, asc centroid_id ties), so
-    encoding is a projection — no join, no shuffle.
+    m bytes at k≤256 where float32 storage is 4·dim). The codebook is
+    collected to the driver once and the per-subspace argmin (asc L2,
+    asc centroid_id ties) is the NumPy kernel
+    (:func:`.centroid_kernel.pq_codes`), so encoding is one
+    ``mapInArrow`` projection — no join, no shuffle. A NULL vector, a
+    NULL component or a length other than ``dim`` raises, naming the
+    vector.
 
     Returns (key, _vd array<double>, codes array<int>)."""
-    d0 = dim // m
-    v = corpus.select(
-        F.col(key), _to_double(F.col(vec)).alias("_vd")
-    ).crossJoin(F.broadcast(_books_map(books).select("_bmap")))
-    code_s = lambda s: -F.array_max(  # noqa: E731
-        F.transform(
-            F.element_at(F.col("_bmap"), s),
-            lambda c: F.struct(
-                (-_l2(F.slice(F.col("_vd"), s * d0 + 1, d0), c.cent_vec)).alias(
-                    "negd"
-                ),
-                (-c.centroid_id).alias("negid"),
-            ),
-        )
-    )["negid"]
-    return v.select(
-        key,
-        "_vd",
-        F.array(*[code_s(s).cast("int") for s in range(m)]).alias("codes"),
+    ids, mats = centroid_kernel.codebook_arrays(
+        books.select("subspace", "centroid_id", "cent_vec").toArrow(), m, dim // m
     )
+    schema = T.StructType(
+        [
+            corpus.schema[key],
+            T.StructField("_vd", T.ArrayType(T.DoubleType())),
+            T.StructField("codes", T.ArrayType(T.IntegerType())),
+        ]
+    )
+    kernel = partial(centroid_kernel.pq_codes, vec=vec, id_col=key, ids=ids, books=mats)
+    return corpus.select(key, vec).mapInArrow(kernel, schema)
 
 
 def ivf_pq_topk(
@@ -1185,7 +920,7 @@ def ivf_pq_topk(
         _nearest_centroids(
             coded.select(F.col(corpus_key).alias("match_id"), "_vd", "codes"), cents, "_vd"
         )
-        .crossJoin(F.broadcast(_books_map(books).select("_bkv")))
+        .crossJoin(F.broadcast(_books_map(books)))
         .select("match_id", recon.alias("r_vec"), "centroid_id")
     )
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))

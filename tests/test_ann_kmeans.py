@@ -1,17 +1,18 @@
-"""Lloyd-trained IVF centroids (VERDICT r4 asks #1 and #2): training
-buys recall at equal nprobe, the two-level assignment fast path is
-output-identical on the synth corpus, and empty clusters keep their
-previous centroid."""
+"""Lloyd-trained IVF centroids and PQ codebooks: training buys recall at
+equal nprobe, empty clusters keep their previous centroid, and the
+NumPy kernel under both is the SQL fold's ranking bit for bit."""
 
 from __future__ import annotations
 
 import math
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from osm_poi_matchmaker_spark.operators import centroid_kernel as K
 from osm_poi_matchmaker_spark.operators import similarity as S
 from tests.conftest import SF_SMALL as SF
 
@@ -35,32 +36,6 @@ def test_kmeans_recall_beats_modulo_seeds(spark):
     r_trained = trained.agg(F.avg("recall")).collect()[0][0]
     assert r_trained > r_base, (r_trained, r_base)
     exact.unpersist()
-
-
-def test_two_level_assignment_identical(spark):
-    """The build-cost fast path (super-first routing) must produce the
-    exact flat-assignment output on the synth corpus — the evidence that
-    licenses it at scale (oracle pins the flat path)."""
-    emb = _emb(spark)
-    cents = S.kmeans_centroids(emb, dim=64, centroid_mod=100, iters=3)
-    flat = S._assign_to_centroids(emb, cents, "vec_id", "embedding").select(
-        "vid", "centroid_id"
-    )
-    two = S.assign_two_level(emb, cents).select("vid", "centroid_id")
-    assert flat.exceptAll(two).count() == 0
-    assert two.exceptAll(flat).count() == 0
-
-
-def test_kmeans_two_level_training_identical(spark):
-    """kmeans_centroids(two_level=True) trains to the same centroids."""
-    emb = _emb(spark)
-    a = S.kmeans_centroids(emb, dim=64, centroid_mod=100, iters=3)
-    b = S.kmeans_centroids(
-        emb, dim=64, centroid_mod=100, iters=3, two_level=True
-    )
-    rows_a = {r["centroid_id"]: r["cent_vec"] for r in a.collect()}
-    rows_b = {r["centroid_id"]: r["cent_vec"] for r in b.collect()}
-    assert rows_a == rows_b
 
 
 def test_kmeans_empty_cluster_keeps_seed(spark):
@@ -206,16 +181,17 @@ def test_index_stats_and_append_semantics(spark):
     assert {r["vec_id"]: r["centroid_id"] for r in out} == want
 
 
-def _window_top_n(vectors, cents, n):
+def _window_top_n(vectors, cents, n, *extra):
     """The crossJoin + row_number assigner the row-local primitive
-    replaced: (vid, crank, centroid_id) for the n nearest centroids."""
+    replaced: (vid, crank, centroid_id, *extra) for the n nearest
+    centroids; ``extra`` may name ``cent_sim``."""
     w = Window.partitionBy("vid").orderBy(F.desc("cent_sim"), F.asc("centroid_id"))
     return (
         vectors.crossJoin(F.broadcast(cents))
         .withColumn("cent_sim", S.cosine(F.col("v"), F.col("cent_vec")))
         .withColumn("crank", F.row_number().over(w))
         .where(F.col("crank") <= n)
-        .select("vid", "crank", "centroid_id")
+        .select("vid", "crank", "centroid_id", *extra)
     )
 
 
@@ -282,35 +258,17 @@ def test_nearest_centroids_zero_vector_matches_window_form(spark):
         spark.conf.unset("spark.sql.ansi.enabled")
 
 
-def _sql_top_n(vectors, cents, n):
-    """The SQL ranking the kernel replaced (``_top_centroids`` over the
-    one-row centroid array, kept for assign_two_level):
-    (vid, crank, centroid_id, cent_sim)."""
-    return (
-        vectors.crossJoin(F.broadcast(S._cent_row(cents)))
-        .select(
-            "vid",
-            F.posexplode(S._top_centroids(F.col("_cents"), F.col("v"), n)).alias("_p", "_t"),
-        )
-        .select(
-            "vid",
-            (F.col("_p") + 1).alias("crank"),
-            (-F.col("_t.negid")).alias("centroid_id"),
-            F.col("_t.cent_sim").alias("cent_sim"),
-        )
-    )
-
-
 def _bits(x):
     return None if x is None else "nan" if math.isnan(x) else x.hex()
 
 
 @pytest.mark.parametrize("elem", ["float", "double"])
 def test_kernel_matches_sql_reference(spark, elem):
-    """The NumPy kernel returns the SQL form's rows, ranks, ids and
-    bit-identical cosines: random float32 and double vectors, an exact
-    tie (centroid 4 duplicates -2, so -2 ranks first), a NaN vector,
-    negative ids, and n = 1, 3, K and K + 2 (K rows per vector)."""
+    """The NumPy kernel returns the crossJoin + row_number form's rows,
+    ranks, ids and bit-identical cosines: random float32 and double
+    vectors, an exact tie (centroid 4 duplicates -2, so -2 ranks first),
+    a NaN vector, negative ids, and n = 1, 3, K and K + 2 (K rows per
+    vector)."""
     rng = random.Random(13)
     vec = lambda: [rng.uniform(-1.0, 1.0) for _ in range(8)]  # noqa: E731
     base = {cid: vec() for cid in (-7, -2, 0, 3, 11)}
@@ -327,7 +285,8 @@ def test_kernel_matches_sql_reference(spark, elem):
     vectors = spark.createDataFrame(rows, f"vid long, v array<{elem}>")
     for n in (1, 3, k, k + 2):
         want = sorted(
-            (r[0], r[1], r[2], _bits(r[3])) for r in _sql_top_n(vectors, cents, n).collect()
+            (r[0], r[1], r[2], _bits(r[3]))
+            for r in _window_top_n(vectors, cents, n, "cent_sim").collect()
         )
         kernel = S._nearest_centroids(vectors, cents, "v", n)
         assert "MapInArrow" in kernel._jdf.queryExecution().executedPlan().toString()
@@ -337,6 +296,55 @@ def test_kernel_matches_sql_reference(spark, elem):
         )
         assert got == want, n
         assert len(got) == len(rows) * min(n, k)
+
+
+def test_pq_encode_matches_sql_l2_fold(spark):
+    """pq_encode's per-subspace argmin is the ``aggregate(zip_with)``
+    squared-distance fold ranked like ``array_max(struct(-d, -id))``:
+    a NaN distance first, ties to the ascending id. Subspace 0:
+    codeword 4 duplicates 2 and vector 40 equals it (exact tie, 2
+    wins); vector 41 holds a NaN there (every distance NaN, 1 wins).
+    Subspace 1: codeword 9 holds a NaN, so it wins for every vector.
+    Every kernel distance is bit-identical to the fold."""
+    rng = random.Random(17)
+    vec = lambda: [rng.uniform(-1.0, 1.0) for _ in range(4)]  # noqa: E731
+    words = {(s, cid): vec() for s in (0, 1) for cid in (1, 2, 7)}
+    words[0, 4] = list(words[0, 2])
+    words[1, 9] = [0.5, float("nan"), 0.5, 0.5]
+    books = spark.createDataFrame(
+        [(s, cid, v) for (s, cid), v in sorted(words.items())],
+        "subspace int, centroid_id long, cent_vec array<double>",
+    )
+    rows = [(i, vec() + vec()) for i in range(40)]
+    rows += [(40, words[0, 2] + vec()), (41, [0.1, float("nan"), 0.1, 0.1] + vec())]
+    vectors = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    sub = F.slice("embedding", F.col("subspace") * 4 + 1, 4)
+    dist = F.aggregate(
+        F.zip_with(sub, "cent_vec", lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
+    scored = vectors.crossJoin(books).select("vec_id", "subspace", "centroid_id", dist.alias("d"))
+    want = {
+        (r[0], r[1]): -r[2]["negid"]
+        for r in scored.groupBy("vec_id", "subspace")
+        .agg(F.max(F.struct((-F.col("d")).alias("negd"), (-F.col("centroid_id")).alias("negid"))))
+        .collect()
+    }
+    got = {
+        (r["vec_id"], s): code
+        for r in S.pq_encode(vectors, books, dim=8, m=2).collect()
+        for s, code in enumerate(r["codes"])
+    }
+    assert got == want
+    assert want[40, 0] == 2 and want[41, 0] == 1
+    assert {c for (_, s), c in want.items() if s == 1} == {9}
+    ids, mats = K.codebook_arrays(books.toArrow(), 2, 4)
+    emb = {r[0]: np.array(r[1], dtype=np.float32).astype(np.float64) for r in rows}
+    for vid, s, cid, d in scored.collect():
+        j = int(np.flatnonzero(ids[s] == cid)[0])
+        kd = K._sqdist(emb[vid][None, s * 4 : (s + 1) * 4], mats[s][j : j + 1])[0, 0]
+        assert _bits(float(kd)) == _bits(d), (vid, s, cid)
 
 
 def _kmeans_corpus(spark, extra):
@@ -362,14 +370,20 @@ def _kmeans_corpus(spark, extra):
     ],
 )
 def test_kmeans_rejects_malformed_vectors(spark, bad, match):
-    """k-means fails loud, naming the vector, on one it cannot place. The
-    SQL form scored a NULL, NULL-holding or short vector NULL against
-    every centroid (NaN for a non-finite one), put it in the smallest-id
-    cluster and trained on it: [0, 1, 5], next to centroid 21, made
-    centroid 1 the 3-element [0.475, 0.525, 5.0]."""
+    """k-means and PQ training fail loud, naming the vector, on one they
+    cannot place. The SQL k-means scored a NULL, NULL-holding or short
+    vector NULL against every centroid (NaN for a non-finite one), put
+    it in the smallest-id cluster and trained on it: [0, 1, 5], next to
+    centroid 21, made centroid 1 the 3-element [0.475, 0.525, 5.0]. The
+    SQL PQ raised on none of the first four: it trained through the
+    NULL row, and a NULL-holding or NaN row moved codeword 1 of
+    subspace 0 from [0.95, 0.05] to [0.633, 0.033]; inf failed with an
+    ARITHMETIC_OVERFLOW that named no vector."""
     df = _kmeans_corpus(spark, [(7, bad)])
     with pytest.raises(Exception, match=match):
         S.kmeans_centroids(df, dim=4, centroid_mod=20, iters=2)
+    with pytest.raises(Exception, match=match):
+        S.pq_codebooks(df, dim=4, m=2, sub_mod=20, iters=2)
 
 
 def test_kmeans_sum_overflow_raises(spark):
@@ -380,20 +394,15 @@ def test_kmeans_sum_overflow_raises(spark):
         S.kmeans_centroids(_kmeans_corpus(spark, big), dim=4, centroid_mod=20, iters=1)
 
 
-def test_kmeans_round_is_one_job_without_shuffle(spark):
-    """A one-level Lloyd round is one job: each partition assigns its
-    vectors and sums them, and the driver adds the K x dim partials.
-    A call runs iters + 1 jobs (the seed collect, then one per round)
-    and shuffles nothing; the SQL form ran 24 jobs and shuffled
-    744,005 B on the perfbench corpus."""
+def _jobs_and_shuffle(spark, group, run) -> tuple[list[int], int]:
+    """The Spark jobs ``run()`` starts and the bytes their stages write
+    to shuffle."""
     from py4j.protocol import Py4JJavaError
 
-    emb = _emb(spark)  # outside the group: reading the footer is a job
     sc = spark.sparkContext
-    group = "kmeans-one-job-per-round"
-    sc.setJobGroup(group, "kmeans_centroids iters=3")
+    sc.setJobGroup(group, group)
     try:
-        S.kmeans_centroids(emb, dim=64, centroid_mod=100, iters=3)
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -405,26 +414,23 @@ def test_kmeans_round_is_one_job_without_shuffle(spark):
             shuffled += store.lastStageAttempt(sid).shuffleWriteBytes()
         except Py4JJavaError:  # skipped: its shuffle output was reused
             shuffled += 1
-    assert 0 < len(jobs) <= 4, sorted(jobs)
-    assert shuffled == 0
+    return sorted(jobs), shuffled
 
 
-def test_two_level_empty_candidates_fail_loud(spark):
-    """A vector routed to a super that no centroid hangs under must fail
-    the query, not come back with a NULL centroid_id (which silently
-    drops it from the k-means sums). Unit-vector scoring on non-unit
-    input: super 1 = (1, 0) hangs under super 3 = (2, -1) (dot 2 > 1),
-    yet (0.5, 1) prefers super 1 (0.5 > 0)."""
-    cents = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, -1.0]), (3, [2.0, -1.0])],
-        "centroid_id long, cent_vec array<double>",
-    )
-    vectors = spark.createDataFrame([(7, [0.5, 1.0])], "vec_id long, embedding array<double>")
-    out = S.assign_two_level(
-        vectors, cents, super_stride=2, nprobe_super=1, assume_normalized=True
-    )
-    with pytest.raises(Exception, match="no candidate centroids"):
-        out.collect()
+def test_kmeans_round_is_one_job_without_shuffle(spark):
+    """A Lloyd round of kmeans_centroids or pq_codebooks is one job: each
+    partition assigns its vectors and sums them, and the driver adds the
+    partials. A call runs iters + 1 jobs (the seed collect, then one per
+    round) and shuffles nothing; the SQL k-means ran 24 jobs and
+    shuffled 744,005 B on the perfbench corpus."""
+    emb = _emb(spark)  # outside the group: reading the footer is a job
+    for group, run in (
+        ("kmeans-rounds", lambda: S.kmeans_centroids(emb, dim=64, centroid_mod=100, iters=3)),
+        ("pq-rounds", lambda: S.pq_codebooks(emb, dim=64, m=8, sub_mod=5, iters=3)),
+    ):
+        jobs, shuffled = _jobs_and_shuffle(spark, group, run)
+        assert len(jobs) == 4, (group, jobs)
+        assert shuffled == 0, group
 
 
 def _persistent_rdds(spark) -> int:

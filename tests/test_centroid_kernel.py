@@ -1,6 +1,7 @@
 """The nearest-centroid kernel outside Spark: a bounded score block at
-any centroid count, block boundaries invisible in the output, no rows
-without centroids, and a worker-side import of numpy and pyarrow only."""
+any centroid count, block boundaries invisible in the output under
+either metric, no rows without centroids, and a worker-side import of
+numpy and pyarrow only."""
 
 from __future__ import annotations
 
@@ -26,8 +27,8 @@ def _batch(n: int, dim: int, seed: int = 5) -> pa.RecordBatch:
     )
 
 
-def _top(batch, ids, cmat, n) -> list[pa.RecordBatch]:
-    return list(K.top_centroids(iter([batch]), "v", "vid", ids, cmat, n, ansi=True))
+def _top(batch, ids, cmat, n, metric=K.COSINE) -> list[pa.RecordBatch]:
+    return list(K.top_centroids(iter([batch]), "v", "vid", ids, cmat, n, metric, ansi=True))
 
 
 def test_score_block_stays_small_at_any_k():
@@ -37,14 +38,18 @@ def test_score_block_stays_small_at_any_k():
 
 
 def test_block_boundaries_do_not_change_rows(monkeypatch):
+    """Under both metrics; the loop keeps the test id stable."""
     batch = _batch(50, 8)
     ids = np.array([-3, 1, 2, 8, 9, 40, 41], dtype=np.int64)
     cmat = np.random.default_rng(9).uniform(-1.0, 1.0, (len(ids), 8))
-    whole = pa.Table.from_batches(_top(batch, ids, cmat, 3))
-    monkeypatch.setattr(K, "_BLOCK_CELLS", 8)  # one row per block
-    split = pa.Table.from_batches(_top(batch, ids, cmat, 3))
-    assert whole.num_rows == 150
-    assert split.equals(whole)
+    full = K._BLOCK_CELLS
+    for metric in (K.COSINE, K.L2):
+        monkeypatch.setattr(K, "_BLOCK_CELLS", full)
+        whole = pa.Table.from_batches(_top(batch, ids, cmat, 3, metric))
+        monkeypatch.setattr(K, "_BLOCK_CELLS", 8)  # one row per block
+        split = pa.Table.from_batches(_top(batch, ids, cmat, 3, metric))
+        assert whole.num_rows == 150, metric
+        assert split.equals(whole), metric
 
 
 def test_no_centroids_no_rows():

@@ -274,64 +274,26 @@ def test_nearest_way_broadcast_candidates_no_cartesian(spark):
 
 
 def test_pq_encode_is_row_local(spark):
-    """pq_encode's claim: encoding is a projection against the broadcast
-    codebook — the coded corpus must reach the output without any
-    shuffle exchange of corpus rows (broadcast exchanges of the one-row
-    codebook maps are expected and fine)."""
+    """pq_encode's claim: encoding is one mapInArrow projection of the
+    corpus scan against the codebook collected to the driver — no
+    exchange and no join."""
     from osm_poi_matchmaker_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     books = S.pq_codebooks(emb, dim=64, m=8, sub_mod=5, iters=1)
-    books.count()  # settle the codebook so only the encode plan remains
     plan = plan_of(S.pq_encode(emb, books, dim=64, m=8), mode="simple")
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            # codebook prep (groupBy subspace / one-row map agg) may
-            # shuffle its K*m rows; the CORPUS must not hash-shuffle
-            assert (
-                "Broadcast" in line
-                or "SinglePartition" in line
-                or "hashpartitioning(subspace" in line
-            ), line
-    assert "SortMergeJoin" not in plan
+    assert "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
     assert "CartesianProduct" not in plan
 
 
-def test_two_level_assignment_corpus_side_no_shuffle(spark):
-    """assign_two_level's claim: routing and argmax are row-local; the
-    corpus never crosses a hash-partitioned exchange (centroid-table
-    prep may — it is ~sqrt(N) rows)."""
-    from pyspark.sql import functions as F
-
-    from osm_poi_matchmaker_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    cents = emb.where(F.col("vec_id") % 100 == 1).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("cent_vec"),
-    )
-    out = S.assign_two_level(emb, cents)
-    plan = plan_of(out, mode="formatted")
-    # the embeddings scan feeds the output through projections and
-    # broadcast joins only: no scan-side hash exchange
-    simple = plan_of(out, mode="simple")
-    scan_lines = [
-        l for l in simple.splitlines() if "Scan parquet" in l
-    ]
-    assert scan_lines, "expected parquet scans"
-    assert "SortMergeJoin" not in simple
-    assert "CartesianProduct" not in simple
-
-
 def test_flat_assignment_no_window_no_corpus_shuffle(spark):
-    """Flat nearest-centroid assignment is row-local against the
-    broadcast one-row centroid array: no Window, and no hash exchange
-    (the centroid array's global collect may use a single-partition
-    exchange of ~sqrt(N) rows)."""
+    """Flat nearest-centroid assignment is row-local: the centroids are
+    collected to the driver once and every partition scores its own
+    rows in the NumPy kernel (mapInArrow), so the plan has no Window,
+    no hash exchange and no join."""
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark.operators import similarity as S
@@ -353,34 +315,3 @@ def test_flat_assignment_no_window_no_corpus_shuffle(spark):
         assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     plan = plan_of(S._assign_to_centroids(emb, cents, "vec_id", "embedding"), mode="simple")
     assert "Window" not in plan and "hashpartitioning" not in plan, plan
-
-
-def _aggregate_exprs(df) -> int:
-    """Aggregate function calls in the optimized plan of ``df``."""
-    import re
-
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in plan
-    return len(re.findall(r"\b(?:count|sum|collect_list|min|max|avg)\(", plan))
-
-
-def test_kmeans_round_plan_size_independent_of_dim(spark):
-    """One SQL k-means round (the two-level path; the one-level path is
-    the NumPy kernel and builds no aggregate plan) builds the same plan
-    at dim=8 and dim=64: the mean is posexploded and grouped by
-    (centroid_id, pos), not one sum and one divide column per dimension
-    — Column-tree building on the driver was the dominant cost of a
-    round."""
-    from osm_poi_matchmaker_spark.operators import similarity as S
-
-    counts = []
-    for dim in (8, 64):
-        rows = [
-            (i, [float((i * 7 + d) % 13) - 6.0 for d in range(dim)]) for i in range(30)
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        cents = S.kmeans_centroids(df, dim=dim, centroid_mod=10, iters=1, two_level=True)
-        cents.unpersist(blocking=True)
-        counts.append(_aggregate_exprs(cents))
-    assert counts[0] == counts[1], counts
-    assert counts[0] > 0
