@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from osm_poi_matchmaker_spark import oracles_docs, synth, synth_sql
 
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
 from osm_poi_matchmaker_spark.functions.textstats import doc_stats
 from osm_poi_matchmaker_spark.functions import urls
 from osm_poi_matchmaker_spark.operators import (
@@ -31,8 +30,8 @@ from osm_poi_matchmaker_spark.operators import (
     similarity,
 )
 from osm_poi_matchmaker_spark.operators.knn import nearest_poi_expanding
-from osm_poi_matchmaker_spark.operators.match import match_pages
 from osm_poi_matchmaker_spark.plans.lineage import match_lineage
+from osm_poi_matchmaker_spark.plans.pipeline import extract_stage, match_stage
 from osm_poi_matchmaker_spark.tiling import cell_id
 
 
@@ -50,8 +49,9 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this, each of the ~15 export/enrich/metric queries re-runs the full
 # geotag parse + cascade from scratch — pure recomputation, not extra
 # verification, since the frames are deterministic functions of the stored
-# inputs. bench.py does NOT go through these helpers (it builds fresh
-# persists per pass), so headline timings still pay every stage.
+# inputs. bench.py calls the same stage functions but not this memo (it
+# builds fresh persists per pass), so headline timings still pay every
+# stage.
 _MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -81,19 +81,14 @@ def _memoized(key: tuple, spark: SparkSession, build: Callable[[], DataFrame]) -
 def _pages_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memoized(
         ("pages_geo", sf_dir), spark,
-        lambda: geotag_pages(synth.pages(spark, sf_dir)),
+        lambda: extract_stage(spark, sf_dir),
     )
 
 
 def _match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memoized(
         ("match", sf_dir), spark,
-        lambda: match_pages(
-            _pages_geo(spark, sf_dir),
-            synth.osm_pois(spark, sf_dir),
-            synth.poi_common_df(spark),
-            brand_rows=synth.BRAND_ROWS,
-        ),
+        lambda: match_stage(spark, sf_dir, _pages_geo(spark, sf_dir)),
     )
 
 
@@ -207,13 +202,7 @@ def _q_match_cascade_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic relaxation that bounds the same-name join blowup on the
     10^8-POI shuffle path (BENCH.md "Shuffle-degradation cascade"); the
     oracle applies the identical distance predicate."""
-    m = match_pages(
-        _pages_geo(spark, sf_dir),
-        synth.osm_pois(spark, sf_dir),
-        synth.poi_common_df(spark),
-        brand_rows=synth.BRAND_ROWS,
-        name_arm_radius_m=_BOUND_RADIUS_M,
-    )
+    m = match_stage(spark, sf_dir, _pages_geo(spark, sf_dir), name_arm_radius_m=_BOUND_RADIUS_M)
     return m.select(
         "page_id",
         "osm_id",
@@ -229,11 +218,10 @@ def _q_match_cascade_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _match_planet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memoized(
         ("match_planet", sf_dir), spark,
-        lambda: match_pages(
+        lambda: match_stage(
+            spark,
+            sf_dir,
             _pages_geo(spark, sf_dir),
-            synth.osm_pois(spark, sf_dir),
-            synth.poi_common_df(spark),
-            brand_rows=synth.BRAND_ROWS,
             broadcast_candidates=False,
             name_arm_radius_m=_BOUND_RADIUS_M,
         ),

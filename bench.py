@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Headline benchmark: runs the engine's flagship pipeline at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(default: the cores this process may run on) and prints ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "pages_per_sec_match": ...}
@@ -10,9 +10,10 @@ Timing excludes the one-time synthetic-input materialization (input data is
 a stored table in production; the cache build is data prep, not the query).
 
 Stage timings reflect the production pipeline shape (plans/pipeline.py —
-checkpointed extract → match → metrics jobs): each stage materializes ONCE
-(persist) and downstream stages consume the materialized frame. The extract
-cost is paid — and timed — in the geotag_extract stage; match_lineage is an
+checkpointed extract → match → metrics jobs, built by its stage
+functions): each stage materializes ONCE (persist) and downstream stages
+consume the materialized frame. The extract cost is paid — and timed — in
+the geotag_extract stage; match_lineage is an
 aggregation over the persisted match output, exactly as the metrics job
 runs it, not an independent recomputation of the whole cascade.
 
@@ -22,44 +23,31 @@ so Catalyst can't prune the interesting work.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import functions as F
-
-
-def force(df) -> int:
-    """Evaluate the full result (all columns) and return the row count."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*df.columns)).alias("checksum"),
-    ).collect()[0]
-    return row["n"]
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = rig.host_cpus()
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
 
-    from osm_poi_matchmaker_spark import synth
-    from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
-    from osm_poi_matchmaker_spark.operators.knn import nearest_poi_expanding
-    from osm_poi_matchmaker_spark.operators.match import match_pages
-    from osm_poi_matchmaker_spark.plans.lineage import match_lineage
-    from osm_poi_matchmaker_spark.session import get_spark
+    from pyspark.sql import functions as F
 
-    spark = get_spark("opm-bench", cpus=cpus, shuffle_partitions=cpus)
+    from osm_poi_matchmaker_spark import synth
+    from osm_poi_matchmaker_spark.operators.knn import nearest_poi_expanding
+    from osm_poi_matchmaker_spark.plans.lineage import match_lineage
+    from osm_poi_matchmaker_spark.plans.pipeline import extract_stage, match_stage
+
+    spark = rig.session("opm-bench", cpus, cpus)
 
     # Warm the synthetic input tables (one-time data prep, untimed).
     n_pages = synth.pages(spark, sf_dir).count()
     pois = synth.osm_pois(spark, sf_dir)
     pois.count()
-    common = synth.poi_common_df(spark)
 
     def run_pipeline() -> tuple[dict, dict]:
         """One full pass of the staged pipeline; fresh persists each call so
@@ -74,13 +62,12 @@ def main() -> None:
         rows: dict[str, int] = {}
 
         def stage(name: str, df) -> None:
-            t0 = time.time()
-            rows[name] = force(df)
-            timings[name] = round(time.time() - t0, 3)
+            sec, (rows[name], _) = rig.timed(lambda: rig.force(df))
+            timings[name] = round(sec, 3)
 
         # stage 1: geotag extraction (pandas-UDF parse of every page) — the
         # persisted frame is the pipeline's extract checkpoint
-        pages_geo = geotag_pages(synth.pages(spark, sf_dir)).persist()
+        pages_geo = extract_stage(spark, sf_dir).persist()
         stage(
             "geotag_extract",
             pages_geo.select(
@@ -96,7 +83,7 @@ def main() -> None:
         )
 
         # stage 3: the match cascade — persisted as the match checkpoint
-        matched = match_pages(pages_geo, pois, common, brand_rows=synth.BRAND_ROWS).persist()
+        matched = match_stage(spark, sf_dir, pages_geo).persist()
         stage(
             "match_cascade",
             matched.select(
@@ -138,20 +125,17 @@ def main() -> None:
     # frequency throttle), and every pass still pays every stage's full
     # compute (fresh persists per pass), so min is the honest steady-state.
     run_pipeline()
-    timings, rows = run_pipeline()
-    for _ in range(2):
-        t2, r2 = run_pipeline()
-        for k, v in t2.items():
-            if v < timings.get(k, float("inf")):
-                timings[k] = v
-        rows = r2
+    passes = [run_pipeline() for _ in range(3)]
+    timings = {k: min(t[k] for t, _ in passes) for k in passes[0][0]}
+    rows = passes[-1][1]
 
     control_after = round(cpu_control(), 3)
     drift = abs(control_after - control_before) / control_before
 
     total = round(sum(timings.values()), 3)
     match_sec = timings.get("match_cascade", total) or total
-    result = {
+    spark.stop()
+    rig.emit({
         "metric": "poi_match_pipeline_headline",
         "value": total,
         "unit": "sec",
@@ -166,9 +150,7 @@ def main() -> None:
         },
         "control_drift": round(drift, 3),
         "window_ok": drift < 0.10,
-    }
-    spark.stop()
-    print(json.dumps(result))
+    })
 
 
 if __name__ == "__main__":

@@ -21,101 +21,54 @@ Prints ONE JSON line; paste into BENCH.md.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from jobs.corpus_bench import BANNER, VOCAB  # noqa: E402  (same corpus)
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    n_docs, cpus = rig.argv(1_000_000, None)
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark.operators.dedup import lsh_arrival_dedup
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("arrival-bench", cpus=cpus, shuffle_partitions=cpus * 2)
-
-    vocab = F.array(*[F.lit(w) for w in VOCAB])
-    is_banner = F.col("id") % 10 == 0
-    doc_len = F.when(is_banner, F.lit(4)).otherwise(
-        (F.col("id") % 100 + 20).cast("int")
-    )
-    body = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), doc_len - 1),
-            lambda i: F.element_at(
-                vocab,
-                (
-                    F.crc32(
-                        F.concat(
-                            F.col("id").cast("string"), F.lit("-"), i.cast("string")
-                        )
-                    )
-                    % 30
-                    + 1
-                ).cast("int"),
-            ),
-        ),
-    )
+    spark = rig.session("arrival-bench", cpus)
     # banner docs are byte-identical here (no organic tail): the whole
     # 100k-doc family lands in literally the same buckets, the worst
     # mega-bucket a crawl can produce, and the flag rate is closed-form
     # ((family-1)/family). corpus_bench.py keeps the tailed variant for
     # the boilerplate-detection checks.
-    text = F.when(is_banner, F.lit(BANNER)).otherwise(body)
-    docs = (
-        spark.range(n_docs, numPartitions=cpus * 2)
-        .select(F.col("id").alias("doc_id"), text.alias("text"))
-        .persist()
-    )
-    docs.count()
+    docs = rig.cached(rig.vocab_corpus(spark, n_docs, cpus * 2, banner_tail=False))
 
     # 4-row bands (bands=2): the synthetic 30-word vocab gives only ~27k
     # distinct trigrams, so 2-row bands collide spuriously (43% organic
     # flag rate measured) in a way real web text's shingle space never
     # would; 4-row bands restore a realistic operating point while the
     # banner family still collapses into shared buckets.
-    t0 = time.time()
-    verdicts = lsh_arrival_dedup(docs, num_perm=8, bands=2).persist()
+    sec, verdicts = rig.timed(lambda: rig.cached(lsh_arrival_dedup(docs, num_perm=8, bands=2)))
+    sec = round(sec, 3)
     n_out = verdicts.count()
-    sec = round(time.time() - t0, 3)
 
     banner = verdicts.where(F.col("doc_id") % 10 == 0)
-    organic = verdicts.where(F.col("doc_id") % 10 != 0)
     banner_total = banner.count()
     banner_flagged = banner.where("is_duplicate").count()
-    organic_flagged = organic.where("is_duplicate").count()
+    organic_flagged = verdicts.where(F.col("doc_id") % 10 != 0).where("is_duplicate").count()
 
-    print(
-        json.dumps(
-            {
-                "metric": "lsh_arrival_dedup_1M",
-                "value": sec,
-                "unit": "sec",
-                "docs": n_out,
-                "docs_per_sec": round(n_out / sec, 1),
-                "banner_family": banner_total,
-                "banner_flag_rate": round(banner_flagged / banner_total, 6),
-                "organic_flag_rate": round(
-                    organic_flagged / (n_out - banner_total), 6
-                ),
-                "pairs_avoided_lower_bound": banner_flagged
-                * (banner_flagged - 1)
-                // 2,
-                "cpus": cpus,
-            }
-        )
-    )
+    rig.emit({
+        "metric": "lsh_arrival_dedup_1M",
+        "value": sec,
+        "unit": "sec",
+        "docs": n_out,
+        "docs_per_sec": round(n_out / sec, 1),
+        "banner_family": banner_total,
+        "banner_flag_rate": round(banner_flagged / banner_total, 6),
+        "organic_flag_rate": round(organic_flagged / (n_out - banner_total), 6),
+        "pairs_avoided_lower_bound": banner_flagged * (banner_flagged - 1) // 2,
+        "cpus": cpus,
+    })
     spark.stop()
 
 

@@ -23,12 +23,11 @@ Usage: python3 jobs/bpe_bench.py [n_docs] [n_merges] [cpus]
 from __future__ import annotations
 
 import collections
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def _ref_learn(word_counts, n_merges):
@@ -60,20 +59,15 @@ def _ref_learn(word_counts, n_merges):
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    n_docs, n_merges, cpus = rig.argv(1_000_000, 16, None)
     words_per_doc = 40
     vocab_n = 10_000
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark.operators.bpe import apply_bpe, learn_bpe
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("bpe-bench", cpus=cpus, shuffle_partitions=cpus * 2)
+    spark = rig.session("bpe-bench", cpus)
 
     # word id per slot: Zipf-ish two bands — 90% of slots draw from the
     # 100 hot words, 10% from the full 10^4 tail. Words render as
@@ -94,18 +88,15 @@ def main() -> None:
             )
         return F.concat(*reversed(parts))
 
-    docs = (
+    docs = rig.cached(
         slots.withColumn("w", b26(wid))
         .groupBy("doc_id")
         .agg(F.concat_ws(" ", F.collect_list("w")).alias("text"))
         .repartition(cpus * 2)
-        .persist()
     )
     n = docs.count()
 
-    t0 = time.time()
-    merges, _ = learn_bpe(docs, n_merges=n_merges)
-    t_learn = time.time() - t0
+    t_learn, (merges, _) = rig.timed(lambda: learn_bpe(docs, n_merges=n_merges))
 
     # exact reference check on the Spark-aggregated word counts
     wc_rows = (
@@ -118,12 +109,11 @@ def main() -> None:
     want = _ref_learn({r["w"]: r["c"] for r in wc_rows}, n_merges)
     exact = merges == want
 
-    t0 = time.time()
-    toks = apply_bpe(docs, merges)
-    total_tokens = toks.agg(F.sum("n_tokens")).collect()[0][0]
-    t_apply = time.time() - t0
+    t_apply, total_tokens = rig.timed(
+        lambda: apply_bpe(docs, merges).agg(F.sum("n_tokens")).collect()[0][0]
+    )
 
-    print(json.dumps({
+    rig.emit({
         "metric": "bpe_bench",
         "docs": n,
         "distinct_words": len(wc_rows),
@@ -134,7 +124,7 @@ def main() -> None:
         "docs_per_sec_apply": round(n / t_apply, 1),
         "merges_exact_vs_reference": exact,
         "cpus": cpus,
-    }))
+    })
     spark.stop()
     if not exact:
         sys.exit(1)

@@ -37,41 +37,27 @@ Usage: python3 jobs/bucketed_join_bench.py [sf_dir] [amp] [cpus] [buckets]
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-import tempfile
-import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    amp = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-    buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 128
+    sf_dir, amp, cpus, buckets = rig.argv("/root/testdata/sf0.1", 100, None, 128)
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark import synth
-    from osm_poi_matchmaker_spark.session import get_spark
+    from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
     from osm_poi_matchmaker_spark.tiling import coarse_cell_id
 
-    warehouse = tempfile.mkdtemp(prefix="opm_bucketed_")
-    spark = get_spark(
-        "bucketed-join-bench",
-        cpus=cpus,
-        shuffle_partitions=cpus * 4,
-        extra_conf={
-            "spark.sql.warehouse.dir": warehouse,
-            # planet-scale stats: no broadcast escape hatch anywhere
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
+    warehouse = rig.workdir("bucketed_join_bench")
+    # planet-scale stats: no broadcast escape hatch anywhere
+    spark = rig.session(
+        "bucketed-join-bench", cpus, cpus * 4,
+        {"spark.sql.warehouse.dir": warehouse, **rig.NO_BROADCAST},
     )
     mult = 64
 
@@ -128,25 +114,18 @@ def main() -> None:
         .saveAsTable("pois_cell_bucketed")
     )
 
-    from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
-
-    probe = (
+    probe = rig.cached(
         geotag_pages(synth.pages(spark, sf_dir))
         .where(F.col("lat").isNotNull())
         .select("page_id", "lat", "lon")
         .withColumn("cell", coarse_cell_id(F.col("lat"), F.col("lon"), mult))
-        .persist()
     )
-    probe.count()
 
     def run(df) -> tuple[float, int, int, str]:
-        t0 = time.time()
-        row = df.collect()[0]
-        sec = time.time() - t0
+        sec, row = rig.timed(lambda: df.collect()[0])
         # executed plan AFTER the action — AQE decisions are invisible
         # in the static plan (the megacell_bench lesson)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return sec, row["n"], row["chk"], plan
+        return sec, row["n"], row["chk"], rig.executed_plan(df)
 
     def enrich_join(pois_t: str, enrich_t: str):
         j = spark.table(pois_t).join(spark.table(enrich_t), "osm_id")
@@ -178,7 +157,7 @@ def main() -> None:
     def nexch(plan: str) -> int:
         return plan.count("Exchange hashpartitioning")
 
-    result = {
+    rig.emit({
         "amp": amp,
         "pois": big.count(),
         "buckets": buckets,
@@ -205,10 +184,8 @@ def main() -> None:
             "skew_markers_plain": c_plain[3].count("skew=true"),
             "skew_markers_bucketed": c_bucket[3].count("skew=true"),
         },
-    }
-    print("RESULT " + json.dumps(result))
+    })
     spark.stop()
-    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -22,29 +22,21 @@ Usage: python3 jobs/components_bench.py [n_chains] [chain_len] [n_stars] [star_s
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    n_chains = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000
-    chain_len = int(sys.argv[2]) if len(sys.argv) > 2 else 500
-    n_stars = int(sys.argv[3]) if len(sys.argv) > 3 else 200
-    star_size = int(sys.argv[4]) if len(sys.argv) > 4 else 5_000
-    cpus = int(sys.argv[5]) if len(sys.argv) > 5 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    n_chains, chain_len, n_stars, star_size, cpus = rig.argv(2_000, 500, 200, 5_000, None)
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark.operators.dedup import connected_components
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("components-bench", cpus=cpus, shuffle_partitions=cpus * 2)
+    spark = rig.session("components-bench", cpus)
 
     # chains: node ids [c*chain_len, (c+1)*chain_len); edge i -> i+1
     chain_nodes = n_chains * chain_len
@@ -54,28 +46,23 @@ def main() -> None:
         .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
     )
     # stars: hub h owns leaves; ids offset past the chain range
-    star_base = chain_nodes
-    leaves = spark.range(n_stars * star_size)
-    stars = leaves.select(
-        (F.lit(star_base) + (F.col("id") / star_size).cast("long") * (star_size + 1)
-         ).alias("doc_a"),
-        (F.lit(star_base) + (F.col("id") / star_size).cast("long") * (star_size + 1)
-         + 1 + F.col("id") % star_size).alias("doc_b"),
+    hub = F.lit(chain_nodes) + (F.col("id") / star_size).cast("long") * (star_size + 1)
+    stars = spark.range(n_stars * star_size).select(
+        hub.alias("doc_a"), (hub + 1 + F.col("id") % star_size).alias("doc_b")
     )
-    pairs = chains.union(stars).repartition(cpus * 2).persist()
+    pairs = rig.cached(chains.union(stars).repartition(cpus * 2))
     n_edges = pairs.count()  # untimed: input materialization
 
-    t0 = time.time()
-    comp = connected_components(pairs)
-    agg = comp.agg(
-        F.countDistinct("component").alias("n_components"),
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum(F.hash("node", "component").cast("long")).alias("membership_hash"),
-    ).collect()[0]
-    sec = time.time() - t0
+    sec, agg = rig.timed(
+        lambda: connected_components(pairs).agg(
+            F.countDistinct("component").alias("n_components"),
+            F.count(F.lit(1)).alias("n_nodes"),
+            F.sum(F.hash("node", "component").cast("long")).alias("membership_hash"),
+        ).collect()[0]
+    )
 
     expected = n_chains + n_stars
-    out = {
+    rig.emit({
         "metric": "connected_components",
         "value": round(sec, 2),
         "unit": "sec",
@@ -89,8 +76,7 @@ def main() -> None:
         "chain_len": chain_len,
         "star_size": star_size,
         "cpus": cpus,
-    }
-    print(json.dumps(out))
+    })
     spark.stop()
 
 

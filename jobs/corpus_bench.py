@@ -10,7 +10,8 @@ that those shapes dominate (default 1M docs, ~60M tokens) and times
 each stage to a noop sink (full materialization — count() would let
 column pruning skip the actual work).
 
-Corpus construction (all column exprs, no driver data):
+Corpus construction (``rig.vocab_corpus``, all column exprs, no driver
+data):
 - organic doc text = length-varying word sequence from a 30-word vocab,
   token chosen by crc32(id-position) so trigrams are pseudo-random
   (stride-mixed tokens would collapse to ~30 distinct trigrams and the
@@ -33,87 +34,40 @@ Usage: python3 jobs/corpus_bench.py [n_docs] [cpus]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-VOCAB = [
-    "key", "agg", "row", "scan", "slow", "fast", "table", "value", "part",
-    "hash", "merge", "batch", "spark", "order", "data", "column", "join",
-    "small", "line", "customer", "query", "big", "window", "stream", "sort",
-    "group", "vector", "filter", "the", "a",
-]
-BANNER = "accept all cookies to continue browsing this site"
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    n_docs, cpus = rig.argv(1_000_000, None)
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark.operators.packing import pack_sequences
     from osm_poi_matchmaker_spark.operators.quality import (
+        bigram_lm_score,
         boilerplate_ngrams,
         pii_redact,
         repetition_stats,
     )
-    from osm_poi_matchmaker_spark.session import get_spark
-
-    spark = get_spark("corpus-bench", cpus=cpus, shuffle_partitions=cpus * 2)
-
-    vocab = F.array(*[F.lit(w) for w in VOCAB])
-    is_banner = F.col("id") % 10 == 0
-    doc_len = F.when(is_banner, F.lit(4)).otherwise(
-        (F.col("id") % 100 + 20).cast("int")
-    )
-    body = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), doc_len - 1),
-            lambda i: F.element_at(
-                vocab,
-                (
-                    F.crc32(
-                        F.concat(
-                            F.col("id").cast("string"), F.lit("-"), i.cast("string")
-                        )
-                    )
-                    % 30
-                    + 1
-                ).cast("int"),
-            ),
-        ),
-    )
-    text = F.when(is_banner, F.concat(F.lit(BANNER + " "), body)).otherwise(body)
-    docs = (
-        spark.range(n_docs, numPartitions=cpus * 2)
-        .select(F.col("id").alias("doc_id"), text.alias("text"))
-        .persist()
-    )
-    n_total = docs.count()  # materialize the corpus before timing
-
-    def run(name, df):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    from osm_poi_matchmaker_spark.operators.quality import bigram_lm_score
     from osm_poi_matchmaker_spark.operators.retrieval import bm25_topk
 
-    stages = {}
-    stages["repetition_stats"] = run("rep", repetition_stats(docs))
-    stages["boilerplate_ngrams"] = run("boil", boilerplate_ngrams(docs, top_k=20))
-    stages["pack_sequences"] = run("pack", pack_sequences(docs, ctx=2048))
-    stages["pii_redact"] = run("pii", pii_redact(docs))
-    stages["bigram_lm_score"] = run("lm", bigram_lm_score(docs))
+    spark = rig.session("corpus-bench", cpus)
+    docs = rig.cached(rig.vocab_corpus(spark, n_docs, cpus * 2))
+    n_total = docs.count()
+
     bm25_queries = [(1, "cookies"), (2, "spark join"), (3, "fast table scan")]
-    stages["bm25_topk"] = run("bm25", bm25_topk(docs, bm25_queries))
+    stages = {
+        "repetition_stats": rig.noop_sec(repetition_stats(docs)),
+        "boilerplate_ngrams": rig.noop_sec(boilerplate_ngrams(docs, top_k=20)),
+        "pack_sequences": rig.noop_sec(pack_sequences(docs, ctx=2048)),
+        "pii_redact": rig.noop_sec(pii_redact(docs)),
+        "bigram_lm_score": rig.noop_sec(bigram_lm_score(docs)),
+        "bm25_topk": rig.noop_sec(bm25_topk(docs, bm25_queries)),
+    }
 
     # correctness 1: the boilerplate flag recovers EXACTLY the banner
     # docs (banner shingle df is n/10, organic trigram df ~n/300)
@@ -124,7 +78,7 @@ def main() -> None:
     expected_banner_docs = (n_docs + 9) // 10
     flagged = boil.where(F.col("is_boilerplate")).count()
     # correctness 2: exact total token count vs a Python-side sum
-    banner_len = len(BANNER.split()) + 4
+    banner_len = len(rig.BANNER.split()) + 4
     expected_tokens = sum(
         banner_len if i % 10 == 0 else 20 + i % 100 for i in range(n_docs)
     )
@@ -152,29 +106,25 @@ def main() -> None:
     lm_ordered = bool(ppl[True] < ppl[False])
 
     wall = sum(stages.values())
-    print(
-        json.dumps(
-            {
-                "metric": "corpus_hygiene_pipeline",
-                "value": wall,
-                "unit": "sec",
-                "stages": stages,
-                "docs": n_total,
-                "docs_per_sec_pipeline": round(n_total / wall, 1),
-                "tokens": int(total_tokens),
-                "tokens_expected": int(expected_tokens),
-                "tokens_exact": bool(int(total_tokens) == int(expected_tokens)),
-                "boiler_flagged": flagged,
-                "boiler_expected": expected_banner_docs,
-                "boiler_exact": bool(flag_err == 0),
-                "bm25_exact": bool(bm25_exact),
-                "lm_banner_ppl": round(ppl[True], 3),
-                "lm_organic_ppl": round(ppl[False], 3),
-                "lm_ordered": lm_ordered,
-                "cpus": cpus,
-            }
-        )
-    )
+    rig.emit({
+        "metric": "corpus_hygiene_pipeline",
+        "value": wall,
+        "unit": "sec",
+        "stages": stages,
+        "docs": n_total,
+        "docs_per_sec_pipeline": round(n_total / wall, 1),
+        "tokens": int(total_tokens),
+        "tokens_expected": int(expected_tokens),
+        "tokens_exact": bool(int(total_tokens) == int(expected_tokens)),
+        "boiler_flagged": flagged,
+        "boiler_expected": expected_banner_docs,
+        "boiler_exact": bool(flag_err == 0),
+        "bm25_exact": bool(bm25_exact),
+        "lm_banner_ppl": round(ppl[True], 3),
+        "lm_organic_ppl": round(ppl[False], 3),
+        "lm_ordered": lm_ordered,
+        "cpus": cpus,
+    })
     spark.stop()
 
 

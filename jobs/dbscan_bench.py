@@ -29,21 +29,15 @@ driver overhead that only amortizes at much larger inputs).
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    slots = int(sys.argv[1]) if len(sys.argv) > 1 else 580_000
-    blob_size = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-    mode = sys.argv[4] if len(sys.argv) > 4 else "all"
+    slots, blob_size, cpus, mode = rig.argv(580_000, 50, None, "all")
 
     from pyspark.sql import functions as F
 
@@ -52,16 +46,13 @@ def main() -> None:
         dbscan_clusters_contracted,
         distance_band_pairs,
     )
-    from osm_poi_matchmaker_spark.session import get_spark
 
     # Partitioning is pinned INDEPENDENT of the parallelism level (fixed
     # split plan + fixed shuffle width), so a 2-core vs 8-core run
     # differs only in cores — the same-input rule the scaling_bench.py
     # protocol uses. cpus*2 partitions at cpus=2 would make the low
     # level pay spill costs the high level never sees.
-    spark = get_spark(
-        "dbscan-bench", cpus=cpus, shuffle_partitions=max(32, cpus * 2)
-    )
+    spark = rig.session("dbscan-bench", cpus, max(32, cpus * 2))
 
     width = 2000  # lattice columns; pitch 0.02 deg (~2.2 km lat, ~1.5 km lon)
     pitch = 0.02
@@ -88,18 +79,16 @@ def main() -> None:
             (F.col("clon") + (F.col("i") / 7).cast("long") * F.lit(0.0004)).alias("lon"),
         )
     )
-    points = noise.unionByName(blobs).repartition(64).persist()
+    points = rig.cached(noise.unionByName(blobs).repartition(64))
     n_points = points.count()
     n_blobs = (slots + 19) // 20
     n_noise = slots - n_blobs
+    expect_pairs = n_blobs * blob_size * (blob_size - 1) // 2
 
-    t0 = time.time()
-    n_pairs = distance_band_pairs(points, eps_m=400.0).count()
-    t_pairs = time.time() - t0
+    t_pairs, n_pairs = rig.timed(lambda: distance_band_pairs(points, eps_m=400.0).count())
 
     if mode == "pairs":
-        expect_pairs = n_blobs * blob_size * (blob_size - 1) // 2
-        print(json.dumps({
+        rig.emit({
             "metric": "dbscan_bench_pairs",
             "points": n_points,
             "pairs": n_pairs,
@@ -107,19 +96,20 @@ def main() -> None:
             "points_per_sec": round(n_points / t_pairs, 1),
             "exact": n_pairs == expect_pairs,
             "cpus": cpus,
-        }))
+        })
         spark.stop()
         sys.exit(0 if n_pairs == expect_pairs else 1)
 
     def run(fn):
-        t0 = time.time()
-        out = fn(points, eps_m=400.0, min_pts=4).persist()
-        agg = out.groupBy("role").agg(
-            F.count("*").alias("n"), F.countDistinct("cluster").alias("clusters")
-        )
-        stats = {r["role"]: (r["n"], r["clusters"]) for r in agg.collect()}
-        dt = time.time() - t0
-        out.unpersist()
+        def roles():
+            out = fn(points, eps_m=400.0, min_pts=4).persist()
+            rows = out.groupBy("role").agg(
+                F.count("*").alias("n"), F.countDistinct("cluster").alias("clusters")
+            ).collect()
+            out.unpersist()
+            return {r["role"]: (r["n"], r["clusters"]) for r in rows}
+
+        dt, stats = rig.timed(roles)
         good = (
             stats.get("core", (0, 0)) == (n_blobs * blob_size, n_blobs)
             and stats.get("noise", (0, 0))[0] == n_noise
@@ -130,9 +120,8 @@ def main() -> None:
     t_naive, ok_naive = run(dbscan_clusters)
     t_fast, ok_fast = run(dbscan_clusters_contracted)
 
-    expect_pairs = n_blobs * blob_size * (blob_size - 1) // 2
     ok = n_pairs == expect_pairs and ok_naive and ok_fast
-    print(json.dumps({
+    rig.emit({
         "metric": "dbscan_bench",
         "points": n_points,
         "pairs": n_pairs,
@@ -143,7 +132,7 @@ def main() -> None:
         "points_per_sec_contracted": round(n_points / t_fast, 1),
         "exact": ok,
         "cpus": cpus,
-    }))
+    })
     spark.stop()
     if not ok:
         sys.exit(1)

@@ -10,8 +10,9 @@ shuffle), reweighting is one tiny per-source agg broadcast onto a
 narrow filter, the probe is shingle explode + one bucket equi-join —
 so per-stage timing shows where an ingest budget actually goes.
 
-Corpus: organic tokens "t<xxhash64(id-pos)>" (corpus-unique shingles —
-see substring_bench.py for why NOT crc32), length cycling 20..119;
+Corpus (``rig.hash_corpus``): organic tokens "t<xxhash64(id-pos)>"
+(corpus-unique shingles — see ``rig.hash_tokens`` for why NOT crc32),
+length cycling 20..119;
 every 7th doc is a punctuation-bomb (quality 0/3) while organic docs
 score 2/3 (length+punct ok, stopword ratio 0 fails), so sources (id %
 10, cutting across the spam cycle) get distinct closed-form rates. The
@@ -29,19 +30,15 @@ Usage: python3 jobs/ingest_bench.py [n_docs] [cpus]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    n_docs, cpus = rig.argv(1_000_000, None)
 
     from pyspark.sql import functions as F
 
@@ -50,67 +47,34 @@ def main() -> None:
     from osm_poi_matchmaker_spark.operators.sampling import (
         quality_weighted_sample,
     )
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("ingest-bench", cpus=cpus, shuffle_partitions=cpus * 2)
+    spark = rig.session("ingest-bench", cpus)
 
     n_corpus = (n_docs * 9) // 10  # ids [0, n_corpus) settled, rest batch
-    pid = F.col("id")
-    is_spam = pid % 7 == 0
-    tail_len = (pid % 100 + 20).cast("int")
-    organic = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), tail_len - 1),
-            lambda i: F.concat(
-                F.lit("t"),
-                F.xxhash64(
-                    F.concat(pid.cast("string"), F.lit("-"), i.cast("string"))
-                ).cast("string"),
-            ),
-        ),
+    docs = rig.cached(
+        rig.hash_corpus(spark, n_docs, cpus * 2, 7, F.lit("!!! ??? ;;; !!! ???")).withColumn(
+            "source", F.concat(F.lit("src"), (F.col("doc_id") % 10).cast("string"))
+        )
     )
-    text = F.when(is_spam, F.lit("!!! ??? ;;; !!! ???")).otherwise(organic)
-    source = F.concat(F.lit("src"), (pid % 10).cast("string"))
-    docs = (
-        spark.range(n_docs, numPartitions=cpus * 2)
-        .select(pid.alias("doc_id"), text.alias("text"), source.alias("source"))
-        .persist()
-    )
-    docs.count()
 
     corpus = docs.where(F.col("doc_id") < n_corpus).select("doc_id", "text")
     # batch: every 5th is an exact copy of a corpus doc's organic text
     bid = F.col("doc_id")
     copy_src = bid % n_corpus
-    batch_raw = docs.where(F.col("doc_id") >= n_corpus).select("doc_id", "text")
-    organic_of = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), (copy_src % 100 + 20).cast("int") - 1),
-            lambda i: F.concat(
-                F.lit("t"),
-                F.xxhash64(
-                    F.concat(copy_src.cast("string"), F.lit("-"), i.cast("string"))
-                ).cast("string"),
-            ),
-        ),
+    batch = rig.cached(
+        docs.where(bid >= n_corpus).select(
+            "doc_id",
+            F.when(bid % 5 == 0, rig.hash_tokens(copy_src, rig.organic_len(copy_src)))
+            .otherwise(F.col("text"))
+            .alias("text"),
+        )
     )
-    batch = batch_raw.select(
-        "doc_id",
-        F.when(bid % 5 == 0, organic_of).otherwise(F.col("text")).alias("text"),
-    ).persist()
-    batch.count()
 
-    def run(df):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    stages = {}
-    stages["chunk_documents"] = run(chunk_documents(docs, ctx=32, stride=24))
-    stages["quality_weighted_sample"] = run(quality_weighted_sample(docs))
-    stages["lsh_index_probe"] = run(lsh_index_probe(corpus, batch))
+    stages = {
+        "chunk_documents": rig.noop_sec(chunk_documents(docs, ctx=32, stride=24)),
+        "quality_weighted_sample": rig.noop_sec(quality_weighted_sample(docs)),
+        "lsh_index_probe": rig.noop_sec(lsh_index_probe(corpus, batch)),
+    }
 
     # closed-form checks: spam text (5 tokens, punct-heavy, no
     # stopwords) scores ok3=0; organic (20..119 tokens, no punct, no
@@ -158,26 +122,22 @@ def main() -> None:
     )
 
     wall = sum(stages.values())
-    print(
-        json.dumps(
-            {
-                "metric": "ingest_pipeline_bench",
-                "value": wall,
-                "unit": "sec",
-                "stages": stages,
-                "docs": n_docs,
-                "docs_per_sec_ingest": round(n_docs / wall, 1),
-                "rates_exact": bool(rates_exact),
-                "probe_flagged": flagged,
-                "probe_expected": expected_flagged,
-                "probe_exact": bool(mism == 0 and flagged == expected_flagged),
-                "chunks": int(n_chunks),
-                "chunks_expected": int(expected_chunks),
-                "chunks_exact": bool(int(n_chunks) == int(expected_chunks)),
-                "cpus": cpus,
-            }
-        )
-    )
+    rig.emit({
+        "metric": "ingest_pipeline_bench",
+        "value": wall,
+        "unit": "sec",
+        "stages": stages,
+        "docs": n_docs,
+        "docs_per_sec_ingest": round(n_docs / wall, 1),
+        "rates_exact": bool(rates_exact),
+        "probe_flagged": flagged,
+        "probe_expected": expected_flagged,
+        "probe_exact": bool(mism == 0 and flagged == expected_flagged),
+        "chunks": int(n_chunks),
+        "chunks_expected": int(expected_chunks),
+        "chunks_exact": bool(int(n_chunks) == int(expected_chunks)),
+        "cpus": cpus,
+    })
     spark.stop()
 
 

@@ -7,256 +7,103 @@ lists, only nprobe/√N of the corpus scanned per query) AND compress
 composition against its two parents at 1 M vectors / 64 dims:
 
 - STORAGE: the stored inverted-list table (centroid_id, vec_id, codes)
-  range-partitioned + sorted by centroid_id (parquet min/max stats make
-  the probe a row-group-skipping scan — the local analogue of a
-  centroid-bucketed Iceberg table) vs the same layout with float32
-  payloads.
+  range-partitioned + sorted by centroid_id (``rig.write_lists``) vs
+  the same layout with float32 payloads.
 - LATENCY: end-to-end top-5 from disk for a 64-query shard — exact
   brute-force float scan, IVF float (prune only), IVF×SQ8 (prune +
-  compress), all at the same nprobe.
+  compress), all at the same nprobe. Each probe routes its queries and
+  scores its lists with the engine's ``similarity._probe``.
 - RECALL@5 vs exact for both approximate paths (the IVF assignment is
   shared, so the recall delta isolates the quantization cost).
 
-Corpus is the sq8_bench generator (hash-mixed full-mantissa floats,
-planted near-copies so top-k has signal). Prints ONE JSON line; paste
-into BENCH.md.
+Lists are assigned by the engine's nearest-centroid kernel
+(``similarity._assign_to_centroids``) over the ~√N modulo-seeded
+centroids. Corpus is ``rig.vector_corpus``. Prints ONE JSON line;
+paste into BENCH.md.
 
 Usage: python3 jobs/ivf_sq8_bench.py [n_vectors] [n_queries] [cpus] [nprobe]
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _du(path: str) -> int:
-    total = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-    nprobe = int(sys.argv[4]) if len(sys.argv) > 4 else 2
+    n, n_q, cpus, nprobe = rig.argv(1_000_000, 64, None, 2)
     dim = 64
     centroid_mod = max(2, round(n ** 0.5))  # ~√N lists
-    work = "/tmp/ivf_sq8_bench"
-    shutil.rmtree(work, ignore_errors=True)
+    work = rig.workdir("ivf_sq8_bench")
 
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from osm_poi_matchmaker_spark.operators import similarity
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("ivf-sq8-bench", cpus=cpus, shuffle_partitions=cpus * 2)
+    spark = rig.session("ivf-sq8-bench", cpus)
+    corpus = rig.stored(rig.vector_corpus(spark, n, n_q, dim), f"{work}/float32")
+    cents = rig.cached(similarity._seed_cents(corpus, "vec_id", "embedding", centroid_mod))
 
-    step = n // n_q
-    base = spark.range(n).select(F.col("id").alias("vec_id"))
-    elem = lambda vid, i: (  # noqa: E731
-        (F.xxhash64(vid * F.lit(dim) + F.lit(i)) % 2000003) / F.lit(1000001.0)
-        - F.lit(1.0)
-    ).cast("float")
-    planted = (F.col("vec_id") % step == 1) & (F.col("vec_id") > 1)
-    vec = F.array(
-        elem(F.col("vec_id"), 0),
-        *[
-            F.when(planted, elem(F.col("vec_id") - 1, i)).otherwise(
-                elem(F.col("vec_id"), i)
+    def build():
+        # one full-precision assignment, persisted: both list layouts
+        # serialize it
+        assigned = rig.cached(
+            similarity._assign_to_centroids(corpus, cents, "vec_id", "embedding").select(
+                F.col("vid").alias("vec_id"), F.col("v").alias("embedding"), "centroid_id"
             )
-            for i in range(1, dim)
-        ],
-    )
-    corpus = base.select("vec_id", vec.alias("embedding"))
-    corpus.write.mode("overwrite").parquet(f"{work}/float32")
-    corpus = spark.read.parquet(f"{work}/float32")
-
-    # ---- build the shared IVF assignment (full-precision, once) -----
-    cents = corpus.where(F.col("vec_id") % centroid_mod == 1).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cent_vec")
-    ).persist()
-    n_cents = cents.count()
-    t0 = time.time()
-    # argmax per vector via max_by on a (sim, -centroid_id) struct —
-    # partial aggregation combines the N×√N candidate rows map-side, so
-    # only one row per vector crosses the exchange (a row_number window
-    # here would shuffle all 10^9 scored pairs). Persisted: both list
-    # layouts below serialize the same assignment.
-    # Per-pair work is the whole build cost (N × √N = 10^9 pairs), so
-    # normalize BOTH sides once and score with a single dot per pair —
-    # cosine() would re-derive each side's norm per pair (3× the
-    # higher-order-function work, measured to dominate the build).
-    cnorm = (
-        corpus.select(
-            "vec_id", "embedding", similarity.norm(F.col("embedding")).alias("_n")
         )
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: x.cast("double") / F.col("_n")
-            ).alias("u"),
+        dims = rig.cached(similarity._sq8_dims(corpus, "embedding"))
+        rig.write_lists(assigned, f"{work}/ivf_float", cpus * 2)
+        rig.write_lists(
+            assigned.crossJoin(F.broadcast(dims)).select(
+                "vec_id", "centroid_id", rig.sq8_codes(F.col("embedding")).alias("codes")
+            ),
+            f"{work}/ivf_sq8",
+            cpus * 2,
         )
-        .persist()
-    )
-    cents_u = (
-        cnorm.where(F.col("vec_id") % centroid_mod == 1)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("u").alias("cu"))
-    )
-    best = (
-        cnorm.crossJoin(F.broadcast(cents_u))
-        .withColumn("cent_sim", similarity.dot(F.col("u"), F.col("cu")))
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("cent_sim"), (-F.col("centroid_id")).alias("negid"))
-            ).alias("best")
+        dims.write.mode("overwrite").parquet(f"{work}/sq8_stats")
+
+    t_build, _ = rig.timed(build)
+    bytes_float = rig.du(f"{work}/ivf_float")
+    bytes_sq8 = rig.du(f"{work}/ivf_sq8") + rig.du(f"{work}/sq8_stats")
+
+    queries = rig.query_shard(corpus, n, n_q)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+
+    def probe(lists, payload):
+        return rig.cached(similarity._topk(similarity._probe(lists, q, cents, nprobe, payload), 5))
+
+    t_exact, exact = rig.timed(lambda: rig.cached(similarity.brute_force_topk(queries, corpus)))
+    t_ivf, ivf_f = rig.timed(
+        lambda: probe(
+            spark.read.parquet(f"{work}/ivf_float").withColumnRenamed("vec_id", "match_id"),
+            "embedding",
         )
-        .select("vec_id", (-F.col("best.negid")).alias("centroid_id"))
     )
-    assigned = corpus.join(best, "vec_id").persist()
-
-    # per-dim stats for SQ8 codes
-    ex = corpus.select(F.posexplode("embedding").alias("pos", "x"))
-    dims = (
-        ex.groupBy("pos")
-        .agg(F.min(F.col("x").cast("double")).alias("mn"),
-             F.max(F.col("x").cast("double")).alias("mx"))
-        .groupBy()
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mn"))).alias("_a"),
-             F.array_sort(F.collect_list(F.struct("pos", "mx"))).alias("_b"))
-        .select(F.transform("_a", lambda s: s.mn).alias("mn"),
-                F.transform("_b", lambda s: s.mx).alias("mx"))
-    ).persist()
-    mn_i = lambda i: F.element_at(F.col("mn"), i + 1)  # noqa: E731
-    mx_i = lambda i: F.element_at(F.col("mx"), i + 1)  # noqa: E731
-    codes = F.transform(
-        F.col("embedding"),
-        lambda x, i: F.when(
-            mx_i(i) > mn_i(i),
-            F.floor((x.cast("double") - mn_i(i)) / (mx_i(i) - mn_i(i))
-                    * F.lit(255.0) + F.lit(0.5)) - F.lit(128),
-        ).otherwise(F.lit(0)).cast("byte"),
-    )
-
-    # ---- stored inverted lists: float payload vs int8 payload -------
-    parts = cpus * 2
-    (
-        assigned.repartitionByRange(parts, "centroid_id")
-        .sortWithinPartitions("centroid_id", "vec_id")
-        .write.mode("overwrite").parquet(f"{work}/ivf_float")
-    )
-    (
-        assigned.crossJoin(F.broadcast(dims))
-        .select("vec_id", "centroid_id", codes.alias("codes"))
-        .repartitionByRange(parts, "centroid_id")
-        .sortWithinPartitions("centroid_id", "vec_id")
-        .write.mode("overwrite").parquet(f"{work}/ivf_sq8")
-    )
-    dims.write.mode("overwrite").parquet(f"{work}/sq8_stats")
-    t_build = time.time() - t0
-    bytes_float = _du(f"{work}/ivf_float")
-    bytes_sq8 = _du(f"{work}/ivf_sq8") + _du(f"{work}/sq8_stats")
-
-    # ---- query shard + its nprobe lists -----------------------------
-    queries = corpus.where(F.col("vec_id") % step == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cent_sim"), F.asc("centroid_id")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .withColumn("cent_sim", similarity.cosine(F.col("q_vec"), F.col("cent_vec")))
-        .withColumn("prank", F.row_number().over(w_probe))
-        .where(F.col("prank") <= nprobe)
-        .select("query_id", "q_vec", "centroid_id")
-    ).persist()
-    probes.count()
-
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("match_id")
-    )
-
-    def topk(scored):
-        return (
-            scored.withColumn("rank", F.row_number().over(w_rank))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "match_id", "cosine_sim", "rank")
-        )
-
-    # exact brute force (baseline)
-    t0 = time.time()
-    exact = topk(
-        corpus.select(F.col("vec_id").alias("match_id"), F.col("embedding").alias("c_vec"))
-        .crossJoin(F.broadcast(queries))
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", similarity.cosine(F.col("q_vec"), F.col("c_vec")))
-    ).persist()
-    exact.count()
-    t_exact = time.time() - t0
-
-    # IVF float probe
-    t0 = time.time()
-    ivf_f = topk(
-        spark.read.parquet(f"{work}/ivf_float")
-        .join(F.broadcast(probes), "centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .withColumn(
-            "cosine_sim", similarity.cosine(F.col("q_vec"), F.col("embedding"))
-        )
-        .withColumnRenamed("vec_id", "match_id")
-    ).persist()
-    ivf_f.count()
-    t_ivf = time.time() - t0
-
     # IVF×SQ8 probe (asymmetric: reconstruct inside the scan)
-    t0 = time.time()
-    stats = spark.read.parquet(f"{work}/sq8_stats")
-    recon = F.transform(
-        F.col("codes"),
-        lambda q, i: F.when(
-            mx_i(i) > mn_i(i),
-            mn_i(i) + ((q.cast("double") + F.lit(128.0))
-                       * (mx_i(i) - mn_i(i))) / F.lit(255.0),
-        ).otherwise(mn_i(i)),
+    t_ivf_sq8, ivf_q = rig.timed(
+        lambda: probe(
+            spark.read.parquet(f"{work}/ivf_sq8")
+            .crossJoin(F.broadcast(spark.read.parquet(f"{work}/sq8_stats")))
+            .select(
+                F.col("vec_id").alias("match_id"),
+                rig.sq8_values(F.col("codes")).alias("r_vec"),
+                "centroid_id",
+            ),
+            "r_vec",
+        )
     )
-    ivf_q = topk(
-        spark.read.parquet(f"{work}/ivf_sq8")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(probes), "centroid_id")
-        .where(F.col("query_id") != F.col("vec_id"))
-        .withColumn("cosine_sim", similarity.cosine(F.col("q_vec"), recon))
-        .withColumnRenamed("vec_id", "match_id")
-    ).persist()
-    ivf_q.count()
-    t_ivf_sq8 = time.time() - t0
 
-    r_ivf = similarity.ann_recall(exact, ivf_f, "ivf").agg(
-        F.avg("recall").alias("r")
-    ).collect()[0]["r"]
-    r_ivf_sq8 = similarity.ann_recall(exact, ivf_q, "ivf_sq8").agg(
-        F.avg("recall").alias("r")
-    ).collect()[0]["r"]
-
-    out = {
+    rig.emit({
         "metric": "ann_ivf_sq8_composed",
         "value": round(t_ivf_sq8, 2),
         "unit": "sec",
         "n_vectors": n,
         "dim": dim,
-        "n_centroids": n_cents,
+        "n_centroids": cents.count(),
         "nprobe": nprobe,
         "n_queries": n_q,
         "build_sec": round(t_build, 2),
@@ -266,10 +113,9 @@ def main() -> None:
         "sec_exact": round(t_exact, 2),
         "sec_ivf_float": round(t_ivf, 2),
         "sec_ivf_sq8": round(t_ivf_sq8, 2),
-        "recall_ivf_float": round(float(r_ivf), 4),
-        "recall_ivf_sq8": round(float(r_ivf_sq8), 4),
-    }
-    print(json.dumps(out))
+        "recall_ivf_float": rig.mean_recall(exact, ivf_f),
+        "recall_ivf_sq8": rig.mean_recall(exact, ivf_q),
+    })
     spark.stop()
 
 

@@ -7,7 +7,8 @@ equi-join on the ring cell, 9× explode on the candidate side) — this
 job MEASURES it at a scale where the broadcast hint would be the wrong
 plan, exactly like jobs/degradation_bench.py does for the cascade:
 
-- POIs amplified A× (default 500× → 10^7 candidates, ±0.01° jitter);
+- POIs amplified A× by ``rig.amplify`` (default 500× → 10^7
+  candidates, ±0.01° jitter);
 - geotagged pages amplified P× (default 20× → ~2.4·10^5 probes);
 - auto-broadcast disabled (simulating planet-scale candidate stats);
 - both paths run on identical inputs; winner identity asserted via
@@ -20,68 +21,38 @@ Usage: python3 jobs/knn_bench.py [sf_dir] [amp_pois] [amp_pages] [cpus] [radius_
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    amp_pois = int(sys.argv[2]) if len(sys.argv) > 2 else 500
-    amp_pages = int(sys.argv[3]) if len(sys.argv) > 3 else 20
-    cpus = int(sys.argv[4]) if len(sys.argv) > 4 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir, amp_pois, amp_pages, cpus, radius_m = rig.argv(
+        "/root/testdata/sf0.1", 500, 20, None, 250.0
     )
-    radius_m = float(sys.argv[5]) if len(sys.argv) > 5 else 250.0
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark import synth
     from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
     from osm_poi_matchmaker_spark.operators.knn import nearest_poi
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("knn-bench", cpus=cpus, shuffle_partitions=cpus * 8)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    def amplify(df, times, id_col):
-        rep = df.withColumn("_r", F.explode(F.sequence(F.lit(0), F.lit(times - 1))))
-        jitter = (F.col("_r") % 21 - 10) * 0.001
-        return (
-            rep.withColumn(
-                id_col,
-                F.col(id_col).cast("long")
-                + F.col("_r").cast("long") * F.lit(10_000_000).cast("long"),
-            )
-            .withColumn("lat", F.col("lat") + jitter)
-            .withColumn("lon", F.col("lon") - jitter)
-            .drop("_r")
-        )
-
-    pois = amplify(synth.osm_pois(spark, sf_dir), amp_pois, "osm_id")
-    pages = amplify(geotag_pages(synth.pages(spark, sf_dir)), amp_pages, "page_id").where(
+    spark = rig.session("knn-bench", cpus, cpus * 8, rig.NO_BROADCAST)
+    pois = rig.amplify(synth.osm_pois(spark, sf_dir), amp_pois, "osm_id")
+    pages = rig.amplify(geotag_pages(synth.pages(spark, sf_dir)), amp_pages, "page_id").where(
         F.col("lat").isNotNull() & F.col("lon").isNotNull()
     ).select("page_id", "lat", "lon")
 
     def run(broadcast: bool):
-        nn = nearest_poi(
-            pages, pois, radius_m, k=1, broadcast_candidates=broadcast
-        )
-        res = nn.agg(
+        res = nearest_poi(pages, pois, radius_m, k=1, broadcast_candidates=broadcast).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("osm_id") % 97).alias("chk"),
             F.sum(F.round(F.col("distance"), 2)).alias("dsum"),
         )
-        t0 = time.time()
-        row = res.collect()[0]
-        wall = time.time() - t0
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        return wall, row, plan
+        wall, row = rig.timed(lambda: res.collect()[0])
+        return wall, row, rig.executed_plan(res)
 
     wall_b, row_b, _ = run(broadcast=True)
     wall_s, row_s, plan_s = run(broadcast=False)
@@ -92,7 +63,7 @@ def main() -> None:
         and abs(float(row_b["dsum"]) - float(row_s["dsum"])) < 1e-6
     )
     n_pages = pages.count()
-    print(json.dumps({
+    rig.emit({
         "metric": "knn_nearest_shuffle_degradation",
         "value": round(wall_s, 2),
         "unit": "sec",
@@ -103,13 +74,12 @@ def main() -> None:
         "matched": row_s["n"],
         "winners_identical": bool(identical),
         "pages_per_sec_shuffle": round(n_pages / wall_s, 1),
-        "shuffle_joins_in_plan": plan_s.count("SortMergeJoin")
-        + plan_s.count("ShuffledHashJoin"),
+        "shuffle_joins_in_plan": rig.shuffle_joins(plan_s),
         "broadcast_joins_in_plan": plan_s.count("BroadcastHashJoin"),
         "radius_m": radius_m,
         "cpus": cpus,
         "sf_dir": sf_dir,
-    }))
+    })
     spark.stop()
 
 

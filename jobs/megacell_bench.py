@@ -10,8 +10,9 @@ handling on the match path itself was still undemonstrated. This job
 closes that:
 
 - POIs amplified A× like jobs/degradation_bench.py, but every 10th
-  replica is RELOCATED into one Budapest-center coarse cell (±0.002°
-  jitter — inside a single mult=128 radius-arm cell): a true mega-cell
+  replica is RELOCATED (``rig.amplify(..., mega=...)``) into one
+  Budapest-center coarse cell (±0.002° jitter — inside a single
+  mult=128 radius-arm cell): a true mega-cell
   holding ~10% of all candidates, the city-center shape at planet scale.
 - Pages amplified P×, with every 10th replica probing the same cell.
 - Cascade runs the planet configuration: ``broadcast_candidates=False``
@@ -38,90 +39,50 @@ Usage: python3 jobs/megacell_bench.py [sf_dir] [amp_pois] [amp_pages] [cpus]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
-MEGA_LAT = 47.4979  # Budapest city center
-MEGA_LON = 19.0402
+MEGA = (47.4979, 19.0402)  # Budapest city center
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    amp_pois = int(sys.argv[2]) if len(sys.argv) > 2 else 500
-    amp_pages = int(sys.argv[3]) if len(sys.argv) > 3 else 20
-    cpus = int(sys.argv[4]) if len(sys.argv) > 4 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    sf_dir, amp_pois, amp_pages, cpus = rig.argv("/root/testdata/sf0.1", 500, 20, None)
 
     from pyspark.sql import functions as F
 
     from osm_poi_matchmaker_spark import synth
     from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
     from osm_poi_matchmaker_spark.operators.match import match_cascade
-    from osm_poi_matchmaker_spark.session import get_spark
 
     shuffle_parts = int(os.environ.get("MEGA_SHUFFLE_PARTS", cpus * 8))
-    spark = get_spark("megacell-bench", cpus=cpus, shuffle_partitions=shuffle_parts)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # Sandbox-scaled skew thresholds (see module docstring): a partition
     # is "skewed" past 5x median AND past the byte threshold; the
     # mega-cell partition is tens of MB here vs hundreds of GB at
     # planet scale, so the threshold scales down with it.
-    thresh = os.environ.get("MEGA_SKEW_THRESHOLD", "4MB")
-    advisory = os.environ.get("MEGA_SKEW_ADVISORY", "2MB")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", thresh
-    )
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-    # keep AQE from folding the split back together via coalescing
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    # the cascade aggregates winners right after the skewed joins, so the
-    # split adds a shuffle; without force, AQE silently declines exactly
-    # on the plans that need it most
-    spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-
-    def amplify(df, times, id_col, id_stride):
-        rep = df.withColumn("_r", F.explode(F.sequence(F.lit(0), F.lit(times - 1))))
-        jitter = (F.col("_r") % 21 - 10) * 0.001
-        in_mega = (F.col("_r") % 10 == 0) & (F.col("_r") > 0)
-        mega_jit = (F.col("_r") % 41 - 20) * 0.0001  # ±0.002° — one cell
-        return (
-            rep.withColumn(
-                id_col,
-                F.col(id_col).cast("long")
-                + F.col("_r").cast("long") * F.lit(int(id_stride)).cast("long"),
-            )
-            .withColumn(
-                "lat",
-                F.when(in_mega, F.lit(MEGA_LAT) + mega_jit).otherwise(
-                    F.col("lat") + jitter
-                ),
-            )
-            .withColumn(
-                "lon",
-                F.when(in_mega, F.lit(MEGA_LON) - mega_jit).otherwise(
-                    F.col("lon") - jitter
-                ),
-            )
-            .drop("_r")
-        )
-
-    pois = amplify(synth.osm_pois(spark, sf_dir), amp_pois, "osm_id", 10_000_000)
-    pages_geo = amplify(
-        geotag_pages(synth.pages(spark, sf_dir)), amp_pages, "page_id", 10_000_000
+    spark = rig.session("megacell-bench", cpus, shuffle_parts, {
+        **rig.NO_BROADCAST,
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+            os.environ.get("MEGA_SKEW_THRESHOLD", "4MB"),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes":
+            os.environ.get("MEGA_SKEW_ADVISORY", "2MB"),
+        # keep AQE from folding the split back together via coalescing
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        # the cascade aggregates winners right after the skewed joins, so
+        # the split adds a shuffle; without force, AQE silently declines
+        # exactly on the plans that need it most
+        "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+    })
+    pois = rig.amplify(synth.osm_pois(spark, sf_dir), amp_pois, "osm_id", mega=MEGA)
+    pages_geo = rig.amplify(
+        geotag_pages(synth.pages(spark, sf_dir)), amp_pages, "page_id", mega=MEGA
     )
 
     def run(skew_enabled: bool):
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.enabled", str(skew_enabled).lower()
-        )
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew_enabled).lower())
         best = match_cascade(
             pages_geo, pois, synth.poi_common_df(spark),
             brand_rows=synth.BRAND_ROWS, broadcast_candidates=False,
@@ -132,21 +93,15 @@ def main() -> None:
             F.sum(F.col("osm_id") % 97).alias("chk_osm"),
             F.sum(F.col("page_id") % 101).alias("chk_page"),
         )
-        t0 = time.time()
-        agg = res.collect()[0]
-        wall = time.time() - t0
+        wall, agg = rig.timed(lambda: res.collect()[0])
         # the EXECUTED plan of the query that actually ran — after AQE
         # re-planning, so skew-split markers are visible (reading the
         # un-executed `best` frame's plan would always show the initial
         # static plan with no AQE decisions in it)
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        return wall, agg, plan
+        return wall, agg, rig.executed_plan(res)
 
     wall_split, agg_split, plan_split = run(skew_enabled=True)
     wall_ctrl, agg_ctrl, plan_ctrl = run(skew_enabled=False)
-
-    def skew_markers(plan: str) -> int:
-        return sum(plan.count(m) for m in ("skewed=true", "isSkew=true", "skew=true"))
 
     identical = (
         agg_split["n"] == agg_ctrl["n"]
@@ -154,7 +109,7 @@ def main() -> None:
         and int(agg_split["chk_page"]) == int(agg_ctrl["chk_page"])
     )
     n_pages = pages_geo.count()
-    out = {
+    rig.emit({
         "metric": "match_cascade_megacell_skew",
         "value": round(wall_split, 2),
         "unit": "sec",
@@ -167,19 +122,17 @@ def main() -> None:
         "matched_rows": agg_split["n"],
         "checksum_osm": int(agg_split["chk_osm"]),
         "winners_identical_to_unsplit": bool(identical),
-        "aqe_skew_markers_in_plan": skew_markers(plan_split),
-        "aqe_skew_markers_in_control": skew_markers(plan_ctrl),
+        "aqe_skew_markers_in_plan": rig.skew_markers(plan_split),
+        "aqe_skew_markers_in_control": rig.skew_markers(plan_ctrl),
         "broadcast_joins_in_plan": plan_split.count("BroadcastHashJoin"),
-        "shuffle_joins_in_plan": plan_split.count("SortMergeJoin")
-        + plan_split.count("ShuffledHashJoin"),
+        "shuffle_joins_in_plan": rig.shuffle_joins(plan_split),
         "pages_per_sec": round(n_pages / wall_split, 1),
         "cpus": cpus,
         "shuffle_partitions": shuffle_parts,
         "sf_dir": sf_dir,
         "amp_pois": amp_pois,
         "amp_pages": amp_pages,
-    }
-    print(json.dumps(out))
+    })
     spark.stop()
 
 

@@ -30,22 +30,15 @@ Usage: python3 jobs/planet_profile_bench.py [sf_dir] [amp_pois] [amp_pages] [cpu
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    amp_pois = int(sys.argv[2]) if len(sys.argv) > 2 else 500
-    amp_pages = int(sys.argv[3]) if len(sys.argv) > 3 else 20
-    cpus = int(sys.argv[4]) if len(sys.argv) > 4 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    sf_dir, amp_pois, amp_pages, cpus = rig.argv("/root/testdata/sf0.1", 500, 20, None)
 
     from pyspark.sql import functions as F
 
@@ -53,66 +46,39 @@ def main() -> None:
     from osm_poi_matchmaker_spark.extract.geotag import geotag_pages
     from osm_poi_matchmaker_spark.operators.knn import nearest_poi_expanding
     from osm_poi_matchmaker_spark.operators.match import match_pages
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark(
-        "planet-profile-bench", cpus=cpus, shuffle_partitions=cpus * 8
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     # no broadcast escape hatch for the candidate side; the 12-row brand
     # dim resolves to plan-time constants, not a join
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    def amplify(df, times, id_col, id_stride):
-        rep = df.withColumn("_r", F.explode(F.sequence(F.lit(0), F.lit(times - 1))))
-        jitter = (F.col("_r") % 21 - 10) * 0.001
-        return (
-            rep.withColumn(
-                id_col,
-                F.col(id_col).cast("long")
-                + F.col("_r").cast("long") * F.lit(int(id_stride)).cast("long"),
-            )
-            .withColumn("lat", F.col("lat") + jitter)
-            .withColumn("lon", F.col("lon") - jitter)
-            .drop("_r")
-        )
-
-    pois = amplify(synth.osm_pois(spark, sf_dir), amp_pois, "osm_id", 10_000_000)
-    pages_geo = amplify(
-        geotag_pages(synth.pages(spark, sf_dir)), amp_pages, "page_id", 10_000_000
-    ).persist()
-    n_pages = pages_geo.count()
-    n_pois = pois.count()
-
-    t0 = time.time()
-    m = match_pages(
-        pages_geo,
-        pois,
-        synth.poi_common_df(spark),
-        brand_rows=synth.BRAND_ROWS,
-        broadcast_candidates=False,
-        name_arm_radius_m=50_000.0,
-    ).persist()
-    counts = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("poi_new").cast("long")).alias("n_new"),
-    ).collect()[0]
-    wall_match = time.time() - t0
-
-    t1 = time.time()
-    near = nearest_poi_expanding(
-        pages_geo.join(m.where(F.col("poi_new")).select("page_id"), "page_id"),
-        pois,
-        radii=(250.0, 2000.0),
-        broadcast_candidates=False,
+    spark = rig.session("planet-profile-bench", cpus, cpus * 8, rig.NO_BROADCAST)
+    pois = rig.amplify(synth.osm_pois(spark, sf_dir), amp_pois, "osm_id")
+    pages_geo = rig.cached(
+        rig.amplify(geotag_pages(synth.pages(spark, sf_dir)), amp_pages, "page_id")
     )
-    res = near.agg(
-        F.count(F.lit(1)).alias("n_suggest"),
-        F.sum(F.col("osm_id") % 97).alias("chk"),
-    )
-    row = res.collect()[0]
-    wall_knn = time.time() - t1
+
+    def match():
+        m = match_pages(
+            pages_geo,
+            pois,
+            synth.poi_common_df(spark),
+            brand_rows=synth.BRAND_ROWS,
+            broadcast_candidates=False,
+            name_arm_radius_m=50_000.0,
+        ).persist()
+        return m, m.agg(
+            F.count(F.lit(1)).alias("n"), F.sum(F.col("poi_new").cast("long")).alias("n_new")
+        ).collect()[0]
+
+    def knn():
+        res = nearest_poi_expanding(
+            pages_geo.join(m.where(F.col("poi_new")).select("page_id"), "page_id"),
+            pois,
+            radii=(250.0, 2000.0),
+            broadcast_candidates=False,
+        ).agg(F.count(F.lit(1)).alias("n_suggest"), F.sum(F.col("osm_id") % 97).alias("chk"))
+        return res, res.collect()[0]
+
+    wall_match, (m, counts) = rig.timed(match)
+    wall_knn, (res, row) = rig.timed(knn)
 
     # Plan evidence, same rule as jobs/degradation_bench.py: the cascade's
     # one page × candidate join and every kNN ring must be a shuffle join,
@@ -121,29 +87,16 @@ def main() -> None:
     # join). Each component's OWN executed plan is inspected — the
     # composed frame's plan text re-embeds the cached cascade subtree once
     # per kNN-round reference, which would multiply-count its joins ~30×.
-    plan_match = m._jdf.queryExecution().executedPlan().toString()
-    plan_knn = res._jdf.queryExecution().executedPlan().toString()
-    bhj_lines = [
-        ln for p in (plan_match, plan_knn) for ln in p.splitlines()
-        if "BroadcastHashJoin" in ln
-    ]
-    n_bhj_match = plan_match.count("BroadcastHashJoin")
-    n_bhj_knn = plan_knn.count("BroadcastHashJoin")
-    n_smj_match = plan_match.count("SortMergeJoin") + plan_match.count(
-        "ShuffledHashJoin"
-    )
-    n_smj_knn = plan_knn.count("SortMergeJoin") + plan_knn.count(
-        "ShuffledHashJoin"
-    )
-
+    plan_match, plan_knn = rig.executed_plan(m), rig.executed_plan(res)
     wall = wall_match + wall_knn
-    out = {
+    n_pages = pages_geo.count()
+    rig.emit({
         "metric": "match_cascade_planet_profile",
         "value": round(wall, 2),
         "unit": "sec",
         "sf_dir": sf_dir,
         "cpus": cpus,
-        "pois": n_pois,
+        "pois": pois.count(),
         "pages": n_pages,
         "wall_match_sec": round(wall_match, 2),
         "wall_knn_sec": round(wall_knn, 2),
@@ -155,14 +108,13 @@ def main() -> None:
         # n_bhj counts include textual re-embeddings of the cached
         # cascade inside the kNN plan; the load-bearing assertion is
         # broadcast_free (no BroadcastHashJoin line in either plan).
-        "broadcast_hash_joins_match": n_bhj_match,
-        "broadcast_hash_joins_knn": n_bhj_knn,
-        "broadcast_free": not bhj_lines,
-        "shuffle_joins_match": n_smj_match,
-        "shuffle_joins_knn": n_smj_knn,
+        "broadcast_hash_joins_match": plan_match.count("BroadcastHashJoin"),
+        "broadcast_hash_joins_knn": plan_knn.count("BroadcastHashJoin"),
+        "broadcast_free": "BroadcastHashJoin" not in plan_match + plan_knn,
+        "shuffle_joins_match": rig.shuffle_joins(plan_match),
+        "shuffle_joins_knn": rig.shuffle_joins(plan_knn),
         "name_arm_radius_m": 50_000.0,
-    }
-    print(json.dumps(out))
+    })
     spark.stop()
 
 

@@ -8,17 +8,19 @@ Deployment shape per BASELINE.json north_rule:
         --sf-dir /data/pages_sf --checkpoint-root /data/ckpt
 
 On a cluster, master/executor sizing comes from spark-submit; locally this
-falls back to local[*]. The pipeline resumes from the last completed
-checkpoint (see plans/checkpoint.py) — re-running after a failure only
-recomputes incomplete stages.
+falls back to the host's cores (``rig.host_cpus``). The pipeline resumes
+from the last completed checkpoint (see plans/checkpoint.py) — re-running
+after a failure only recomputes incomplete stages.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
+import os
 import sys
-import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
@@ -28,21 +30,18 @@ def main() -> None:
     parser.add_argument("--cpus", type=int, default=None)
     args = parser.parse_args()
 
-    sys.path.insert(0, ".")
     from osm_poi_matchmaker_spark.plans.pipeline import build_poi_pipeline
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("opm-pipeline", cpus=args.cpus)
-    t0 = time.time()
+    cpus = args.cpus or rig.host_cpus()
+    spark = rig.session("opm-pipeline", cpus, max(cpus, 8))
     pipe = build_poi_pipeline(args.checkpoint_root, args.sf_dir)
-    outputs = pipe.run(spark)
-    summary = {
+    sec, match_rows = rig.timed(lambda: pipe.run(spark)["match"].count())
+    rig.emit({
         "executed_stages": pipe.executed,
         "resumed_stages": [s.name for s in pipe.stages if s.name not in pipe.executed],
-        "match_rows": outputs["match"].count(),
-        "elapsed_sec": round(time.time() - t0, 2),
-    }
-    print(json.dumps(summary))
+        "match_rows": match_rows,
+        "elapsed_sec": round(sec, 2),
+    })
     spark.stop()
 
 

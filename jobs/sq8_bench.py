@@ -3,14 +3,14 @@
 
 The 100 TB claim to verify: an int8-quantized embedding column is ~4×
 smaller on disk and in every scan/shuffle that touches it, at a recall
-cost small enough to measure and accept. This job builds a
-deterministic 64-dim corpus (hash-mixed values in [-1,1), plus planted
-near-neighbors so top-k has signal), writes BOTH representations to
-parquet, and measures:
+cost small enough to measure and accept. This job writes the seeded
+64-dim vector corpus (``rig.vector_corpus``, planted near-copies so
+top-k has signal) in BOTH representations to parquet and measures:
 
 - bytes on disk: float32 arrays vs int8 codes (+ the 2×dim stats row);
 - end-to-end top-k seconds from disk: exact float scan vs SQ8 scan
-  with in-scan reconstruction (asymmetric distance);
+  with in-scan reconstruction (asymmetric distance), both ranked by
+  ``similarity.brute_force_topk``;
 - mean recall@5 of SQ8 vs exact over the query shard.
 
 Prints ONE JSON line; paste into BENCH.md.
@@ -20,165 +20,56 @@ Usage: python3 jobs/sq8_bench.py [n_vectors] [n_queries] [cpus]
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _du(path: str) -> int:
-    total = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
+from jobs import rig  # noqa: E402
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    n_q = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-    dim = 64
-    work = "/tmp/sq8_bench"
-    shutil.rmtree(work, ignore_errors=True)
+    n, n_q, cpus = rig.argv(1_000_000, 64, None)
+    work = rig.workdir("sq8_bench")
 
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from osm_poi_matchmaker_spark.operators import similarity
-    from osm_poi_matchmaker_spark.session import get_spark
 
-    spark = get_spark("sq8-bench", cpus=cpus, shuffle_partitions=cpus * 2)
-
-    # corpus: per-element xxhash64 mix → full-mantissa floats in [-1, 1)
-    # (low-entropy grids flatter parquet compression of the float32
-    # layout — real embeddings don't compress). The successor of every
-    # query id is a planted NEAR-copy (one element re-randomized), so
-    # top-1 has a closed-form answer in both paths.
-    step = n // n_q
-    base = spark.range(n).select(F.col("id").alias("vec_id"))
-    elem = lambda vid, i: (  # noqa: E731
-        (F.xxhash64(vid * F.lit(dim) + F.lit(i)) % 2000003) / F.lit(1000001.0)
-        - F.lit(1.0)
-    ).cast("float")
-    planted = (F.col("vec_id") % step == 1) & (F.col("vec_id") > 1)
-    vec = F.array(
-        elem(F.col("vec_id"), 0),  # dim 0 always own-noise
-        *[
-            F.when(planted, elem(F.col("vec_id") - 1, i)).otherwise(
-                elem(F.col("vec_id"), i)
-            )
-            for i in range(1, dim)
-        ],
-    )
-    corpus = base.select("vec_id", vec.alias("embedding"))
-    corpus.write.mode("overwrite").parquet(f"{work}/float32")
+    spark = rig.session("sq8-bench", cpus)
+    corpus = rig.stored(rig.vector_corpus(spark, n, n_q), f"{work}/float32")
 
     # SQ8 codes persisted as array<tinyint> (parquet byte-packs them),
     # stats (per-dim mn/mx) as one side row — the stored layout a real
     # lakehouse table would use.
-    ex = corpus.select(F.posexplode("embedding").alias("pos", "x"))
-    dims = (
-        ex.groupBy("pos")
-        .agg(F.min(F.col("x").cast("double")).alias("mn"),
-             F.max(F.col("x").cast("double")).alias("mx"))
-        .groupBy()
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "mn"))).alias("_a"),
-             F.array_sort(F.collect_list(F.struct("pos", "mx"))).alias("_b"))
-        .select(F.transform("_a", lambda s: s.mn).alias("mn"),
-                F.transform("_b", lambda s: s.mx).alias("mx"))
-    )
-    mn_i = lambda i: F.element_at(F.col("mn"), i + 1)  # noqa: E731
-    mx_i = lambda i: F.element_at(F.col("mx"), i + 1)  # noqa: E731
-    codes = F.transform(
-        F.col("embedding"),
-        lambda x, i: F.when(
-            mx_i(i) > mn_i(i),
-            F.floor((x.cast("double") - mn_i(i)) / (mx_i(i) - mn_i(i))
-                    * F.lit(255.0) + F.lit(0.5)) - F.lit(128),
-        ).otherwise(F.lit(0)).cast("byte"),
-    )
+    dims = similarity._sq8_dims(corpus, "embedding")
     corpus.crossJoin(F.broadcast(dims)).select(
-        "vec_id", codes.alias("codes")
+        "vec_id", rig.sq8_codes(F.col("embedding")).alias("codes")
     ).write.mode("overwrite").parquet(f"{work}/sq8")
     dims.write.mode("overwrite").parquet(f"{work}/sq8_stats")
+    bytes_f32 = rig.du(f"{work}/float32")
+    bytes_sq8 = rig.du(f"{work}/sq8") + rig.du(f"{work}/sq8_stats")
 
-    bytes_f32 = _du(f"{work}/float32")
-    bytes_sq8 = _du(f"{work}/sq8") + _du(f"{work}/sq8_stats")
+    queries = rig.query_shard(corpus, n, n_q)
 
-    queries = (
-        spark.read.parquet(f"{work}/float32")
-        .where(F.col("vec_id") % (n // n_q) == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    )
-    q_b = F.broadcast(queries)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("match_id")
-    )
-
-    def topk(scored):
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select("query_id", "match_id", "cosine_sim", "rank")
+    def sq8_topk():
+        recon = (
+            spark.read.parquet(f"{work}/sq8")
+            .crossJoin(F.broadcast(spark.read.parquet(f"{work}/sq8_stats")))
+            .select("vec_id", rig.sq8_values(F.col("codes")).alias("embedding"))
         )
+        return rig.cached(similarity.brute_force_topk(queries, recon))
 
-    t0 = time.time()
-    c = spark.read.parquet(f"{work}/float32").select(
-        F.col("vec_id").alias("match_id"), F.col("embedding").alias("c_vec")
-    )
-    exact = topk(
-        c.crossJoin(q_b)
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", similarity.cosine(F.col("q_vec"), F.col("c_vec")))
-    ).persist()
-    n_exact = exact.count()
-    t_exact = time.time() - t0
-
-    t0 = time.time()
-    stats = spark.read.parquet(f"{work}/sq8_stats")
-    recon = F.transform(
-        F.col("codes"),
-        lambda q, i: F.when(
-            mx_i(i) > mn_i(i),
-            mn_i(i) + ((q.cast("double") + F.lit(128.0))
-                       * (mx_i(i) - mn_i(i))) / F.lit(255.0),
-        ).otherwise(mn_i(i)),
-    )
-    cq = (
-        spark.read.parquet(f"{work}/sq8")
-        .crossJoin(F.broadcast(stats))
-        .select(F.col("vec_id").alias("match_id"), recon.alias("c_vec"))
-    )
-    approx = topk(
-        cq.crossJoin(q_b)
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", similarity.cosine(F.col("q_vec"), F.col("c_vec")))
-    ).persist()
-    approx.count()
-    t_sq8 = time.time() - t0
-
-    rec = similarity.ann_recall(exact, approx, "sq8").agg(
-        F.avg("recall").alias("r")
-    ).collect()[0]["r"]
+    t_exact, exact = rig.timed(lambda: rig.cached(similarity.brute_force_topk(queries, corpus)))
+    t_sq8, approx = rig.timed(sq8_topk)
 
     # every query's planted near-copy (query_id+1, 63/64 shared dims)
     # must be top-1 in BOTH paths — the closed-form signal check
     def top1_hits(df):
-        return (
-            df.where((F.col("rank") == 1) & (F.col("query_id") > 0))
-            .where(F.col("match_id") == F.col("query_id") + 1)
-            .count()
-        )
+        return df.where(
+            (F.col("rank") == 1) & (F.col("query_id") > 0) & (F.col("match_id") == F.col("query_id") + 1)
+        ).count()
 
-    planted_exact, planted_sq8 = top1_hits(exact), top1_hits(approx)
-
-    print(json.dumps({
+    rig.emit({
         "metric": "sq8_bench",
         "vectors": n,
         "queries": n_q,
@@ -187,14 +78,13 @@ def main() -> None:
         "compression": round(bytes_f32 / bytes_sq8, 2),
         "exact_sec": round(t_exact, 2),
         "sq8_sec": round(t_sq8, 2),
-        "recall_at5": round(float(rec), 4),
-        "n_exact_rows": n_exact,
-        "planted_top1_exact": planted_exact,
-        "planted_top1_sq8": planted_sq8,
+        "recall_at5": rig.mean_recall(exact, approx),
+        "n_exact_rows": exact.count(),
+        "planted_top1_exact": top1_hits(exact),
+        "planted_top1_sq8": top1_hits(approx),
         "cpus": cpus,
-    }))
+    })
     spark.stop()
-    shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -8,15 +8,14 @@ back — the window KEY WIDTH is the knob that matters at 100 TB (a ~50-byte
 8-gram string vs an 8-byte xxhash64 through two shuffles), so this job
 times the string-key plan against the hashed-key plan on the same corpus.
 
-Corpus construction (all column exprs, no driver data):
+Corpus construction (``rig.hash_corpus``, all column exprs, no driver
+data):
 - organic tokens are "t<xxhash64(id-pos)>" — an organic 8-gram repeating
   anywhere in the corpus needs 8 consecutive 64-bit collisions
   (~impossible), so organic windows are unique, giving closed-form
-  expectations. NOT crc32: CRC is linear, so a single collision between
-  crc32(idA-i) and crc32(idB-i) propagates to EVERY aligned position
-  whose index has the same digit length — at 1M docs that manufactured
-  ~7k colliding organic token RUNS (measured), silently breaking the
-  closed form; xxhash64's avalanche has no such structure;
+  expectations (not crc32: at 1M docs its linearity manufactured ~7k
+  colliding organic token RUNS, measured, silently breaking the closed
+  form);
 - every 10th doc is a constant 15-token banner prefix + a 10-token
   organic tail: its k=8 duplicated windows sit at positions 0..7
   (straddling windows contain unique tail tokens), so per banner doc
@@ -38,12 +37,11 @@ Usage: python3 jobs/substring_bench.py [n_docs] [cpus]
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from jobs import rig  # noqa: E402
 
 BANNER = (
     "accept all cookies to continue browsing this site and view fully"
@@ -52,10 +50,7 @@ BANNER = (
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    n_docs, cpus = rig.argv(1_000_000, None)
 
     from pyspark.sql import functions as F
 
@@ -63,45 +58,19 @@ def main() -> None:
         substring_rewrite,
         substring_spans,
     )
-    from osm_poi_matchmaker_spark.session import get_spark
 
     assert len(BANNER.split()) == 15
-    spark = get_spark("substring-bench", cpus=cpus, shuffle_partitions=cpus * 2)
-
-    is_banner = F.col("id") % 10 == 0
-    tail_len = F.when(is_banner, F.lit(10)).otherwise(
-        (F.col("id") % 100 + 20).cast("int")
-    )
-    body = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(0), tail_len - 1),
-            lambda i: F.concat(
-                F.lit("t"),
-                F.xxhash64(
-                    F.concat(F.col("id").cast("string"), F.lit("-"), i.cast("string"))
-                ).cast("string"),
-            ),
-        ),
-    )
-    text = F.when(is_banner, F.concat(F.lit(BANNER + " "), body)).otherwise(body)
-    docs = (
-        spark.range(n_docs, numPartitions=cpus * 2)
-        .select(F.col("id").alias("doc_id"), text.alias("text"))
-        .persist()
-    )
+    spark = rig.session("substring-bench", cpus)
+    banner = F.concat(F.lit(BANNER + " "), rig.hash_tokens(F.col("id"), F.lit(10)))
+    docs = rig.cached(rig.hash_corpus(spark, n_docs, cpus * 2, 10, banner))
     n_total = docs.count()
     n_banner = (n_docs + 9) // 10
 
-    def run(df):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    stages = {}
-    stages["spans_string_key"] = run(substring_spans(docs, k=8))
-    stages["spans_hashed_key"] = run(substring_spans(docs, k=8, hashed=True))
-    stages["rewrite"] = run(substring_rewrite(docs, k=8))
+    stages = {
+        "spans_string_key": rig.noop_sec(substring_spans(docs, k=8)),
+        "spans_hashed_key": rig.noop_sec(substring_spans(docs, k=8, hashed=True)),
+        "rewrite": rig.noop_sec(substring_rewrite(docs, k=8)),
+    }
 
     # closed-form checks (one extra evaluation, untimed)
     sp = substring_spans(docs, k=8).persist()
@@ -122,31 +91,21 @@ def main() -> None:
     removed = substring_rewrite(docs, k=8).agg(F.sum("n_removed")).collect()[0][0]
 
     wall = sum(stages.values())
-    print(
-        json.dumps(
-            {
-                "metric": "substring_dedup_bench",
-                "value": wall,
-                "unit": "sec",
-                "stages": stages,
-                "docs": n_total,
-                "docs_per_sec_spans": round(n_total / stages["spans_string_key"], 1),
-                "hashed_speedup": round(
-                    stages["spans_string_key"] / stages["spans_hashed_key"], 3
-                ),
-                "flagged_exact": bool(
-                    flag_err == 0 and int(agg["flagged"]) == n_banner
-                ),
-                "coverage_exact": bool(int(agg["covered"]) == 15 * n_banner),
-                "windows_exact": bool(int(agg["wins"]) == 8 * n_banner),
-                "rewrite_exact": bool(int(removed) == 15 * n_banner),
-                "hashed_identical": bool(
-                    tuple(map(int, hashed_agg)) == tuple(map(int, agg))
-                ),
-                "cpus": cpus,
-            }
-        )
-    )
+    rig.emit({
+        "metric": "substring_dedup_bench",
+        "value": wall,
+        "unit": "sec",
+        "stages": stages,
+        "docs": n_total,
+        "docs_per_sec_spans": round(n_total / stages["spans_string_key"], 1),
+        "hashed_speedup": round(stages["spans_string_key"] / stages["spans_hashed_key"], 3),
+        "flagged_exact": bool(flag_err == 0 and int(agg["flagged"]) == n_banner),
+        "coverage_exact": bool(int(agg["covered"]) == 15 * n_banner),
+        "windows_exact": bool(int(agg["wins"]) == 8 * n_banner),
+        "rewrite_exact": bool(int(removed) == 15 * n_banner),
+        "hashed_identical": bool(tuple(map(int, hashed_agg)) == tuple(map(int, agg))),
+        "cpus": cpus,
+    })
     spark.stop()
 
 

@@ -286,12 +286,32 @@ def polygon_geometry(
     to_e6 = lambda arr: F.transform(  # noqa: E731
         arr, lambda v: F.round(v * F.lit(1_000_000.0)).cast("long")
     )
-    base = polygons.select(
-        F.col(poly_id),
-        to_e6(xs).alias("_xe"),
-        to_e6(ys).alias("_ye"),
-    ).select(
+    g = _ring_shoelace(
+        polygons.select(F.col(poly_id), to_e6(xs).alias("_xe"), to_e6(ys).alias("_ye")),
+        [poly_id],
+    )
+    deg2 = F.col("_a2").cast("double") / F.lit(2e12)
+    km2 = deg2 * F.lit(110.574) * (F.lit(111.32) * F.cos(F.radians(F.col("_cy"))))
+    return g.select(
         poly_id,
+        F.col("_nv").alias("n_vertices"),
+        F.col("_a2").alias("area2_e12"),
+        F.round(km2, 3).alias("area_km2"),
+        F.round("_cx", 6).alias("centroid_lon"),
+        F.round("_cy", 6).alias("centroid_lat"),
+    )
+
+
+def _ring_shoelace(rings: DataFrame, keys: list[str]) -> DataFrame:
+    """The exact shoelace of one closed ring per row (first vertex
+    repeated last) over its integer e6 vertex arrays ``_xe``/``_ye``:
+    ``keys`` plus ``_nv`` (vertex count), ``_a2`` (twice the absolute
+    area in e6² units, BIGINT) and the centroid ``_cx``/``_cy`` in
+    degrees. Coordinates shift to the ring's bbox minimum first, which
+    keeps every cross term < 2^46 for country-scale rings; the centroid
+    folds are double arithmetic in element order."""
+    r = rings.select(
+        *keys,
         F.transform("_xe", lambda v: v - F.array_min("_xe")).alias("_xs"),
         F.transform("_ye", lambda v: v - F.array_min("_ye")).alias("_ys"),
         (F.array_min("_xe").cast("double") / F.lit(1e6)).alias("_x0"),
@@ -312,22 +332,12 @@ def polygon_geometry(
         F.lit(0.0),
         lambda acc, i: acc + (yi(i) + yi(i + 1)).cast("double") * cross(i).cast("double"),
     )
-    g = base.select(
-        poly_id,
-        (F.size("_xs") - 1).alias("n_vertices"),
-        F.abs(a2).alias("area2_e12"),
-        (F.col("_x0") + cxn / (F.lit(3.0) * a2.cast("double")) / F.lit(1e6)).alias("_clon"),
-        (F.col("_y0") + cyn / (F.lit(3.0) * a2.cast("double")) / F.lit(1e6)).alias("_clat"),
-    )
-    deg2 = F.abs(F.col("area2_e12")).cast("double") / F.lit(2e12)
-    km2 = deg2 * F.lit(110.574) * (F.lit(111.32) * F.cos(F.radians(F.col("_clat"))))
-    return g.select(
-        poly_id,
-        "n_vertices",
-        "area2_e12",
-        F.round(km2, 3).alias("area_km2"),
-        F.round("_clon", 6).alias("centroid_lon"),
-        F.round("_clat", 6).alias("centroid_lat"),
+    return r.select(
+        *keys,
+        (F.size("_xs") - 1).alias("_nv"),
+        F.abs(a2).alias("_a2"),
+        (F.col("_x0") + cxn / (F.lit(3.0) * a2.cast("double")) / F.lit(1e6)).alias("_cx"),
+        (F.col("_y0") + cyn / (F.lit(3.0) * a2.cast("double")) / F.lit(1e6)).alias("_cy"),
     )
 
 
@@ -366,40 +376,9 @@ def polygon_geometry_rings(
             * F.lit(1_000_000.0)
         ).cast("long"),
     )
-    r = r.select(poly_id, "_ring", coord(1).alias("_xe"), coord(2).alias("_ye"))
-    r = r.select(
-        poly_id,
-        "_ring",
-        F.transform("_xe", lambda v: v - F.array_min("_xe")).alias("_xs"),
-        F.transform("_ye", lambda v: v - F.array_min("_ye")).alias("_ys"),
-        (F.array_min("_xe").cast("double") / F.lit(1e6)).alias("_x0"),
-        (F.array_min("_ye").cast("double") / F.lit(1e6)).alias("_y0"),
-    )
-    xi = lambda i: F.element_at(F.col("_xs"), i)  # noqa: E731
-    yi = lambda i: F.element_at(F.col("_ys"), i)  # noqa: E731
-    cross = lambda i: xi(i) * yi(i + 1) - xi(i + 1) * yi(i)  # noqa: E731
-    idx = F.sequence(F.lit(1), F.size("_xs") - 1)
-    a2 = F.aggregate(idx, F.lit(0).cast("long"), lambda acc, i: acc + cross(i))
-    cxn = F.aggregate(
-        idx, F.lit(0.0),
-        lambda acc, i: acc
-        + (xi(i) + xi(i + 1)).cast("double") * cross(i).cast("double"),
-    )
-    cyn = F.aggregate(
-        idx, F.lit(0.0),
-        lambda acc, i: acc
-        + (yi(i) + yi(i + 1)).cast("double") * cross(i).cast("double"),
-    )
-    per_ring = r.select(
-        poly_id,
-        "_ring",
-        F.abs(a2).alias("_a2"),
-        (F.col("_x0") + cxn / (F.lit(3.0) * a2.cast("double")) / F.lit(1e6)).alias(
-            "_cx"
-        ),
-        (F.col("_y0") + cyn / (F.lit(3.0) * a2.cast("double")) / F.lit(1e6)).alias(
-            "_cy"
-        ),
+    per_ring = _ring_shoelace(
+        r.select(poly_id, "_ring", coord(1).alias("_xe"), coord(2).alias("_ye")),
+        [poly_id, "_ring"],
     )
     # combine rings in ring order: outer (+), holes (−)
     w = lambda s: F.when(s["_ring"] == 0, s["_a2"]).otherwise(-s["_a2"])  # noqa: E731

@@ -9,7 +9,7 @@ per-partition lineage rows land next to the match output (north_rule).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..extract.geotag import geotag_pages
@@ -18,17 +18,30 @@ from .checkpoint import CheckpointedPipeline, Stage
 from .lineage import match_lineage
 
 
+def extract_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stage 1: geotag extraction of the pages at ``sf_dir``."""
+    return geotag_pages(synth.pages(spark, sf_dir))
+
+
+def match_stage(spark: SparkSession, sf_dir: str, pages_geo: DataFrame, **opts) -> DataFrame:
+    """Stage 2: the match cascade of extracted pages against the POIs
+    and the brand table of ``sf_dir``; ``opts`` go to
+    :func:`~..operators.match.match_pages` (the planet-scale knobs)."""
+    return match_pages(
+        pages_geo,
+        synth.osm_pois(spark, sf_dir),
+        synth.poi_common_df(spark),
+        brand_rows=synth.BRAND_ROWS,
+        **opts,
+    )
+
+
 def build_poi_pipeline(root: str, sf_dir: str) -> CheckpointedPipeline:
     def s_extract(spark: SparkSession, _outputs):
-        return geotag_pages(synth.pages(spark, sf_dir))
+        return extract_stage(spark, sf_dir)
 
     def s_match(spark: SparkSession, outputs):
-        return match_pages(
-            outputs["extract"],
-            synth.osm_pois(spark, sf_dir),
-            synth.poi_common_df(spark),
-            brand_rows=synth.BRAND_ROWS,
-        )
+        return match_stage(spark, sf_dir, outputs["extract"])
 
     def s_export_prep(spark: SparkSession, outputs):
         # new/existing split (K6, libs/export.py:86-141) as the final stage

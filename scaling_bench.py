@@ -59,27 +59,40 @@ def amplified_pages_path(sf_dir: str, amplify: int) -> str:
     return os.path.join(_CACHE_ROOT, f"{tag}_x{amplify}_v{synth._SCHEMA_VERSION}")
 
 
+def _fresh(call: str, timeout: int, pin: int | None = None) -> subprocess.CompletedProcess:
+    """``scaling_bench.<call>`` in a fresh interpreter, so in a clean JVM,
+    pinned to cores 0..pin-1 when ``pin`` is set. It runs in the checkout,
+    where the Python workers import the engine from."""
+    cmd = [sys.executable, "-c", f"import scaling_bench; scaling_bench.{call}"]
+    if pin:
+        cmd = ["taskset", "-c", f"0-{pin - 1}", *cmd]
+    return subprocess.run(cmd, capture_output=True, text=True, timeout=timeout, cwd=_REPO)
+
+
+def _prep(sf_dir: str, amplify: int, path: str) -> None:
+    from pyspark.sql import functions as F
+
+    from jobs import rig
+    from osm_poi_matchmaker_spark import synth
+
+    spark = rig.session("scaling-prep", rig.host_cpus())
+    pages = synth.pages(spark, sf_dir)
+    big = (
+        pages.crossJoin(spark.range(amplify).withColumnRenamed("id", "rep"))
+        .withColumn("page_id", F.col("page_id") * amplify + F.col("rep"))
+        .drop("rep")
+    )
+    big.repartition(256).write.mode("overwrite").parquet(path)
+    spark.stop()
+
+
 def build_amplified_input(sf_dir: str, amplify: int) -> str:
     """Materialize the amplified pages table once (untimed data prep)."""
     path = amplified_pages_path(sf_dir, amplify)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    code = f"""
-import sys
-sys.path.insert(0, {_REPO!r})
-from osm_poi_matchmaker_spark import synth
-from osm_poi_matchmaker_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark("scaling-prep", cpus=32, shuffle_partitions=32)
-pages = synth.pages(spark, {sf_dir!r})
-amp = spark.range({amplify}).withColumnRenamed("id", "rep")
-big = (pages.crossJoin(amp)
-       .withColumn("page_id", F.col("page_id") * {amplify} + F.col("rep"))
-       .drop("rep"))
-big.repartition(256).write.mode("overwrite").parquet({path!r})
-spark.stop()
-"""
-    subprocess.run([sys.executable, "-c", code], check=True, timeout=1800)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        out = _fresh(f"_prep({sf_dir!r}, {amplify}, {path!r})", timeout=1800)
+        if out.returncode:
+            raise RuntimeError(f"amplified input failed:\n{out.stderr[-2000:]}")
     return path
 
 
@@ -104,6 +117,44 @@ def cpu_control(workers: int = 8, loops: int = 20_000_000) -> float:
     return sum(ts) / len(ts)
 
 
+def _level(cpus: int, sf_dir: str, path: str, warmups: int, iters: int) -> None:
+    """One level's job loop (run by :func:`run_level` in its own JVM);
+    prints ``RESULT {cpus, sec, pages}``."""
+    from jobs import rig
+    from osm_poi_matchmaker_spark import synth
+    from osm_poi_matchmaker_spark.extract.geotag import geotag_pages_from_html
+    from osm_poi_matchmaker_spark.plans.pipeline import match_stage
+
+    # identical split plan at every parallelism level: Spark's default
+    # maxSplitBytes folds in totalBytes/defaultParallelism, so without
+    # this the N-core leg gets 4x coarser splits than the 4N leg and
+    # runs a single straggler-bound wave
+    spark = rig.session("scaling", cpus, cpus, {
+        "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
+        "spark.sql.files.openCostInBytes": str(128 * 1024),
+    })
+    synth.osm_pois(spark, sf_dir).count()
+    n_pages = spark.read.parquet(path).count()
+
+    def job():
+        # the pipeline's extract checkpoint, materialized BEFORE fan-out:
+        # the cascade's arms are concurrent stages, and racing an unbuilt
+        # cache makes every one of them recompute the full extract
+        pg = rig.cached(geotag_pages_from_html(spark.read.parquet(path)))
+        rig.force(match_stage(spark, sf_dir, pg))
+        # scope the cache to this job (warmup must not seed it); BLOCKING,
+        # because an async unpersist races the next job's cache build —
+        # the stale blocks trigger eviction churn that was measured at
+        # 3.6x the clean build cost
+        pg.unpersist(blocking=True)
+
+    for _ in range(warmups):  # per-JVM one-time costs: codegen compile + C2 JIT
+        job()
+    sec, _ = rig.timed(job, iters)
+    print("RESULT " + json.dumps({"cpus": cpus, "sec": sec, "pages": n_pages}), flush=True)
+    spark.stop()
+
+
 def run_level(
     cpus: int, sf_dir: str, amplify: int = 256, warmups: int = 2, iters: int = 3
 ) -> dict:
@@ -117,62 +168,17 @@ def run_level(
     are per-JVM constants: on a real cluster processing 10^12 pages they
     amortize to zero, so a timed run must not pay them. Warmup runs inside
     the same JVM (not fresh subprocesses per repeat) is what amortizes
-    them; the reported figure is the min over the timed iterations."""
+    them; the reported figure is the min over the timed iterations.
+
+    The level's driver heap is the host-sized default
+    (``session.default_driver_memory``) unless ``$SPARK_DRIVER_MEM`` sets
+    it. The whole level is pinned to exactly ``cpus`` cores: local[N]
+    bounds JVM task slots but NOT the Python workers that pandas UDFs
+    spawn (nor GC/JIT threads), so an unpinned local[4] run can burn 8+
+    cores and fake the small-cluster leg. taskset makes each level a true
+    N-core machine — the sandbox equivalent of an N-executor cluster."""
     path = build_amplified_input(sf_dir, amplify)
-    code = f"""
-import sys, time, json
-sys.path.insert(0, {_REPO!r})
-from osm_poi_matchmaker_spark import synth
-from osm_poi_matchmaker_spark.session import get_spark
-from osm_poi_matchmaker_spark.extract.geotag import geotag_pages_from_html
-from osm_poi_matchmaker_spark.operators.match import match_pages
-from pyspark.sql import functions as F
-spark = get_spark("scaling", cpus={cpus}, shuffle_partitions={cpus},
-    extra_conf={{
-        # identical split plan at every parallelism level: Spark's default
-        # maxSplitBytes folds in totalBytes/defaultParallelism, so without
-        # this the N-core leg gets 4x coarser splits than the 4N leg and
-        # runs a single straggler-bound wave
-        "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
-        "spark.sql.files.openCostInBytes": str(128 * 1024),
-    }})
-pois = synth.osm_pois(spark, {sf_dir!r})
-common = synth.poi_common_df(spark)
-pois.count()
-n_pages = spark.read.parquet({path!r}).count()
-def job():
-    big = spark.read.parquet({path!r})
-    pg = geotag_pages_from_html(big).persist()  # the pipeline's extract checkpoint
-    pg.count()  # materialize BEFORE fan-out: the cascade's arms are
-                # concurrent stages, and racing an unbuilt cache makes
-                # every one of them recompute the full extract
-    df = match_pages(pg, pois, common, brand_rows=synth.BRAND_ROWS)
-    df.select(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*df.columns))).collect()
-    pg.unpersist(blocking=True)  # scope the cache to this job (warmup must
-    # not seed it); BLOCKING, because an async unpersist races the next
-    # job's cache build — the stale blocks trigger eviction churn that was
-    # measured at 3.6x the clean build cost
-for _ in range({warmups}):  # per-JVM one-time costs: codegen compile + C2 JIT
-    job()
-best = None
-for _ in range({iters}):
-    t0 = time.time()
-    job()
-    sec = time.time() - t0
-    best = sec if best is None else min(best, sec)
-print("RESULT " + json.dumps({{"cpus": {cpus}, "sec": best, "pages": n_pages}}))
-spark.stop()
-"""
-    env = dict(os.environ, SPARK_DRIVER_MEM="48g")
-    # Pin the whole level to exactly `cpus` cores: local[N] bounds JVM task
-    # slots but NOT the Python workers that pandas UDFs spawn (nor GC/JIT
-    # threads), so an unpinned local[4] run can burn 8+ cores and fake the
-    # small-cluster leg. taskset makes each level a true N-core machine —
-    # the sandbox equivalent of an N-executor cluster.
-    out = subprocess.run(
-        ["taskset", "-c", f"0-{cpus - 1}", sys.executable, "-c", code],
-        capture_output=True, text=True, timeout=5400, env=env,
-    )
+    out = _fresh(f"_level({cpus}, {sf_dir!r}, {path!r}, {warmups}, {iters})", 5400, pin=cpus)
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[7:])
@@ -180,12 +186,11 @@ spark.stop()
 
 
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 2
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
+    from jobs import rig
+
+    n, sf_dir, repeats, amplify = rig.argv(
+        2, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"), 2, 256
     )
-    repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    amplify = int(sys.argv[4]) if len(sys.argv) > 4 else 256
     # Each leg is preceded by the pure-CPU control: this sandbox is a VM
     # and the HOST speed drifts with neighbor load (steal time) — measured
     # swings of 1.8 → 2.9 s/worker on the identical control within one
@@ -205,26 +210,22 @@ def main() -> None:
     thr_4n = pages / levels[4 * n]
     eff = (thr_4n / thr_n) / 4.0
     drift = abs(controls[4 * n] - controls[n]) / controls[n]
-    print(
-        json.dumps(
-            {
-                "sf_dir": sf_dir,
-                "amplify": amplify,
-                "pages": pages,
-                "N": n,
-                "sec_N": round(levels[n], 3),
-                "sec_4N": round(levels[4 * n], 3),
-                "pages_per_sec_N": round(thr_n, 1),
-                "pages_per_sec_4N": round(thr_4n, 1),
-                "speedup": round(levels[n] / levels[4 * n], 3),
-                "scaling_efficiency": round(eff, 3),
-                "cpu_control_sec_per_worker": controls,
-                "control_drift": round(drift, 3),
-                "window_ok": drift < 0.10,
-                "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-        )
-    )
+    rig.emit({
+        "sf_dir": sf_dir,
+        "amplify": amplify,
+        "pages": pages,
+        "N": n,
+        "sec_N": round(levels[n], 3),
+        "sec_4N": round(levels[4 * n], 3),
+        "pages_per_sec_N": round(thr_n, 1),
+        "pages_per_sec_4N": round(thr_4n, 1),
+        "speedup": round(levels[n] / levels[4 * n], 3),
+        "scaling_efficiency": round(eff, 3),
+        "cpu_control_sec_per_worker": controls,
+        "control_drift": round(drift, 3),
+        "window_ok": drift < 0.10,
+        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+    })
 
 
 if __name__ == "__main__":
