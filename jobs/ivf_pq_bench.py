@@ -11,7 +11,8 @@ re-rank of the top-R fetched full-precision rows by id).
 Corpus and centroids as in ivf_sq8_bench (``rig.vector_corpus``, ~√N
 modulo seeds). Coarse assignment is the engine's nearest-centroid
 kernel (``similarity._assign_to_centroids``), probes are
-``similarity._probe`` and ranking ``similarity._topk``; codebooks are
+``similarity._probe`` over the stored lists and ranking
+``similarity._topk``; codebooks are
 trained with the production pq_codebooks (L2 Lloyd, two rounds).
 
 Usage: python3 jobs/ivf_pq_bench.py [n_vectors] [n_queries] [cpus] [nprobe]
@@ -130,12 +131,16 @@ def main() -> None:
         .select(F.col("vec_id").alias("match_id"), recon.alias("r_vec"), "centroid_id")
     )
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
-    short = similarity._probe(stored, q, cents, nprobe, "r_vec")
-    t_pq, pq_only = rig.timed(lambda: rig.cached(similarity._topk(short, 5)))
+
+    def short(keep):
+        # the stored lists carry centroid_id: the kernel reads it
+        return similarity._probe(stored, q, cents, nprobe, "r_vec", keep)
+
+    t_pq, pq_only = rig.timed(lambda: rig.cached(similarity._topk(short(5), 5)))
 
     # + refine: fetch full rows for the shortlist, exact re-rank
     def refined():
-        shortlist = similarity._topk(short, refine).select("query_id", "match_id")
+        shortlist = similarity._topk(short(refine), refine).select("query_id", "match_id")
         fetched = (
             corpus.withColumnRenamed("vec_id", "match_id")
             .join(F.broadcast(shortlist), "match_id")

@@ -11,8 +11,10 @@ composition against its two parents at 1 M vectors / 64 dims:
   the same layout with float32 payloads.
 - LATENCY: end-to-end top-5 from disk for a 64-query shard — exact
   brute-force float scan, IVF float (prune only), IVF×SQ8 (prune +
-  compress), all at the same nprobe. Each probe routes its queries and
-  scores its lists with the engine's ``similarity._probe``.
+  compress), all at the same nprobe. Each probe is the engine's
+  ``similarity._probe`` over the stored lists: the queries are routed
+  on the driver, and one kernel pass reads each row's ``centroid_id``
+  and scores it against the queries that probe its list.
 - RECALL@5 vs exact for both approximate paths (the IVF assignment is
   shared, so the recall delta isolates the quantization cost).
 
@@ -74,7 +76,7 @@ def main() -> None:
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
 
     def probe(lists, payload):
-        return rig.cached(similarity._topk(similarity._probe(lists, q, cents, nprobe, payload), 5))
+        return rig.cached(similarity._topk(similarity._probe(lists, q, cents, nprobe, payload, 5), 5))
 
     t_exact, exact = rig.timed(lambda: rig.cached(similarity.brute_force_topk(queries, corpus)))
     t_ivf, ivf_f = rig.timed(

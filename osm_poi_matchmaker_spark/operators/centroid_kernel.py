@@ -1,13 +1,18 @@
-"""The nearest-centroid kernel: scoring of vector rows against a small
-centroid set, in NumPy over Arrow record batches. IVF routing and
-k-means rank by cosine; product quantization ranks codewords by squared
-L2 distance. The caller picks the metric (:data:`COSINE`, :data:`L2`).
+"""The nearest-centroid and pair-scoring kernel: scoring of vector rows
+against a small centroid set, and of IVF list members against the
+queries that probe their list, in NumPy over Arrow record batches. IVF
+routing, k-means and the IVF probe rank by cosine; product quantization
+ranks codewords by squared L2 distance. The caller picks the metric
+(:data:`COSINE`, :data:`L2`).
 
 This module runs inside Spark's Python workers (``mapInArrow``), so it
 imports numpy and pyarrow only. The driver collects the centroids once
 as an Arrow table (:func:`centroid_arrays` and :func:`codebook_arrays`
 turn it into arrays) and binds them into :func:`top_centroids`,
 :func:`centroid_sums` or :func:`pq_codes` with ``functools.partial``.
+An IVF probe also collects its queries: :func:`probe_index` routes them
+on the driver, and :func:`probe_lists` assigns, scores and pre-ranks
+the lists in one pass over the corpus.
 
 The arithmetic is the SQL form's, step for step, so every score is
 bit-identical to ``aggregate(zip_with(...))`` in the JVM:
@@ -17,20 +22,21 @@ bit-identical to ``aggregate(zip_with(...))`` in the JVM:
   per-dimension folds from ``0.0``, ``acc = acc + v[d] * c[d]`` and
   ``acc = acc + (v[d] - c[d]) * (v[d] - c[d])`` (no BLAS, whose blocked
   summation changes the last bits);
-* cosine: ``cent_sim = dot / (vn * cn)``; a zero divisor raises
+* cosine: ``dot / (norm(a) * norm(b))``; a zero divisor raises
   ``DIVIDE_BY_ZERO`` under ANSI and gives a NULL score otherwise;
   order: NaN first, then descending cosine, then NULL;
 * L2: NaN first, then ascending distance (the order
   ``array_max(struct(-d, -id))`` gives);
-* ties by ascending centroid id.
+* ties by ascending centroid id (by ascending ``match_id`` in a probe).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 # Rows per scoring block: the rows x K score block and its temporaries
 # stay near 2 MB of float64 each at any centroid count K.
@@ -104,9 +110,7 @@ def _vectors(
     if len(bad):
         i = int(bad[0])
         what = "NULL" if col[i].as_py() is None else f"length {int(lengths[i])}"
-        raise ValueError(
-            f"vector {_row_name(batch, id_col, i)}: {what}, centroids have length {dim}"
-        )
+        raise ValueError(f"vector {_row_name(batch, id_col, i)}: {what}, expected length {dim}")
     flat = col.flatten()
     if flat.null_count:
         i = int(np.flatnonzero(flat.is_null().to_numpy(zero_copy_only=False))[0]) // max(dim, 1)
@@ -119,26 +123,39 @@ def _vectors(
     return v
 
 
+def _cosine(
+    a: np.ndarray, b: np.ndarray, an: np.ndarray, bn: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(sim, null) of the rows of ``a`` against the rows of ``b``, whose
+    norms are ``an`` and ``bn``: null marks a zero divisor, where sim is
+    undefined."""
+    div = np.multiply.outer(an, bn)
+    null = div == 0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _fold(a, b) / div, null
+
+
+def _rank_keys(sim: np.ndarray, null: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(cat, neg): ascending sort keys of the desc-cosine order, NaN
+    first (cat 0), then descending value (cat 1), then NULL (cat 2)."""
+    nan = np.isnan(sim) & ~null
+    cat = np.where(nan, 0, np.where(null, 2, 1)).astype(np.int8)
+    return cat, np.where(cat == 1, -sim, 0.0)
+
+
 def _ranked(
     v: np.ndarray, cmat: np.ndarray, cn: np.ndarray, ansi: bool, name
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(cent_sim, null, order) of a block of vectors against every
     centroid: order[i] lists centroid columns best first."""
-    vn = _norms(v)
-    div = np.multiply.outer(vn, cn)
-    null = div == 0
+    sim, null = _cosine(v, cmat, _norms(v), cn)
     if ansi and null.any():
         i = int(np.flatnonzero(null.any(axis=1))[0])
         raise ArithmeticError(
             f"[DIVIDE_BY_ZERO] Division by zero: vector {name(i)} or a centroid has zero norm"
         )
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sim = _fold(v, cmat) / div
-    nan = np.isnan(sim) & ~null
-    cat = np.where(nan, 0, np.where(null, 2, 1)).astype(np.int8)
-    neg = np.where(cat == 1, -sim, 0.0)
     # lexsort is stable, and columns are in ascending id order
-    return sim, null, np.lexsort((neg, cat), axis=1)
+    return sim, null, np.lexsort(_rank_keys(sim, null)[::-1], axis=1)
 
 
 def _scored(
@@ -197,6 +214,183 @@ def top_centroids(
                 ],
                 names=out.schema.names + ["centroid_id", "cent_sim", "crank"],
             )
+
+
+class ProbeIndex(NamedTuple):
+    """What an IVF probe binds into its kernel closure (see
+    :func:`probe_index`)."""
+
+    cmat: np.ndarray  # centroids, in ascending id order
+    col_list: np.ndarray  # centroid column -> index into ``lists``
+    lists: np.ndarray  # distinct centroid ids, ascending
+    starts: np.ndarray  # queries probing list u: qrows[starts[u]:starts[u+1]]
+    qrows: np.ndarray
+    qids: pa.Array
+    qmat: np.ndarray
+    on: tuple  # per extra key: (name, distinct non-NULL query values, query codes)
+    ansi: bool
+
+
+def probe_index(
+    queries: pa.Table,
+    ids: np.ndarray,
+    cmat: np.ndarray,
+    nprobe: int,
+    on: tuple[str, ...],
+    ansi: bool,
+) -> ProbeIndex:
+    """Route the collected (query_id, q_vec, *on) rows to their
+    ``nprobe`` nearest lists, the order of :func:`top_centroids`. A
+    NULL query_id raises, naming the row (the join form dropped the
+    query); so does a malformed q_vec. No centroids, no probes."""
+    batch = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in queries.columns], names=queries.column_names
+    )
+    qids = batch.column("query_id")
+    if qids.null_count:
+        i = int(np.flatnonzero(qids.is_null().to_numpy(zero_copy_only=False))[0])
+        raise ValueError(f"query row {i}: NULL query_id")
+    n, top = batch.num_rows, min(nprobe, len(ids))
+    cn = _norms(cmat)
+    qmat = np.zeros((n, cmat.shape[1]))
+    cols = np.zeros((n, top), dtype=np.int64)
+    if top and n:
+        qmat = _vectors(batch, "q_vec", "query_id", cmat.shape[1], finite=False)
+        for blk in _blocks(n, len(ids)):
+            name = lambda i: _row_name(batch, "query_id", blk.start + i)  # noqa: E731
+            cols[blk] = _ranked(qmat[blk], cmat, cn, ansi, name)[2][:, :top]
+    # duplicate centroid ids name one list, as in the equi-join
+    lists, col_list = np.unique(ids, return_inverse=True)
+    pair_list = col_list[cols].ravel()
+    order = np.argsort(pair_list, kind="stable")
+    keys = []
+    for key in on:
+        col = batch.column(key)
+        values = pc.unique(col.drop_null())
+        keys.append((key, values, _codes(col, values, -1)))
+    return ProbeIndex(
+        cmat=cmat,
+        col_list=col_list,
+        lists=lists,
+        starts=np.searchsorted(pair_list[order], np.arange(len(lists) + 1)),
+        qrows=np.repeat(np.arange(n), top)[order],
+        qids=qids,
+        qmat=qmat,
+        on=tuple(keys),
+        ansi=ansi,
+    )
+
+
+def _codes(col: pa.Array, values: pa.Array, null: int) -> np.ndarray:
+    """Position of every entry of ``col`` in ``values``; ``null`` where
+    it is NULL or absent."""
+    at = pc.index_in(col.cast(values.type), value_set=values)
+    return pc.fill_null(at, null).to_numpy(zero_copy_only=False)
+
+
+def probe_lists(
+    batches: Iterator[pa.RecordBatch],
+    index: ProbeIndex,
+    payload: str,
+    route: str | None,
+    keep: int,
+) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` body of an IVF probe over list rows (match_id,
+    ``payload``, ``route`` or centroid_id, and the index's ``on`` keys):
+    assign every row to the nearest centroid of its ``route`` vector, or
+    read the centroid_id it carries; score each list's members against
+    the queries that probe that list, one (queries x members) block at a
+    time; keep each query's ``keep`` best (match_id, query_id,
+    cosine_sim) over the partition. Self-matches by id, and pairs whose ``on`` keys differ or
+    are NULL, are never scored. Order: NaN first, then descending
+    cosine, then NULL, then ascending match_id. A NULL match_id, or a
+    NULL or malformed payload or route vector raises, naming the row."""
+    ix = index
+    dim = ix.cmat.shape[1]
+    cn, qn = _norms(ix.cmat), _norms(ix.qmat)
+    qkeys = ix.qids.to_numpy(zero_copy_only=False)
+    pool = _Pool(keep)
+    id_type = None
+    for batch in batches:
+        if not batch.num_rows or not len(ix.qrows):
+            continue
+        mids = batch.column("match_id")
+        if mids.null_count:
+            i = int(np.flatnonzero(mids.is_null().to_numpy(zero_copy_only=False))[0])
+            raise ValueError(f"list row {i} of a batch: NULL match_id")
+        id_type = mids.type
+        if route is None:
+            lst = _codes(batch.column("centroid_id"), pa.array(ix.lists), -1)
+        else:
+            v = _vectors(batch, route, "match_id", dim, finite=False)
+            best = np.empty(len(v), dtype=np.int64)
+            for blk in _blocks(len(v), len(ix.cmat)):
+                name = lambda i: _row_name(batch, "match_id", blk.start + i)  # noqa: E731
+                best[blk] = _ranked(v[blk], ix.cmat, cn, ix.ansi, name)[2][:, 0]
+            lst = ix.col_list[best]
+        p = v if payload == route else _vectors(batch, payload, "match_id", dim, finite=False)
+        pn = _norms(p)
+        mkeys = mids.to_numpy(zero_copy_only=False)
+        mon = [_codes(batch.column(key), values, -2) for key, values, _ in ix.on]
+        order = np.argsort(lst, kind="stable")
+        bounds = np.searchsorted(lst[order], np.arange(len(ix.lists) + 1))
+        for u in np.flatnonzero((np.diff(bounds) > 0) & (np.diff(ix.starts) > 0)):
+            q = ix.qrows[ix.starts[u] : ix.starts[u + 1]]
+            members = order[bounds[u] : bounds[u + 1]]
+            for blk in _blocks(len(members), len(q)):
+                m = members[blk]
+                valid = np.not_equal.outer(qkeys[q], mkeys[m])
+                for (_, _, qcodes), mcodes in zip(ix.on, mon):
+                    valid &= np.equal.outer(qcodes[q], mcodes[m])
+                sim, null = _cosine(ix.qmat[q], p[m], qn[q], pn[m])
+                if ix.ansi and (null & valid).any():
+                    i, j = (int(x[0]) for x in np.nonzero(null & valid))
+                    raise ArithmeticError(
+                        f"[DIVIDE_BY_ZERO] Division by zero: query_id={qkeys[q[i]]} "
+                        f"or vector match_id={mkeys[m[j]]} has zero norm"
+                    )
+                qi, mj = np.nonzero(valid)
+                pool.add(q[qi], mkeys[m[mj]], sim[qi, mj], null[qi, mj])
+    q, m, sim, null = pool.cut()
+    if len(q):
+        # match_id first: rows sorted by query_id then compress ~1%
+        # smaller in the top-k window's shuffle
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(m, type=id_type), ix.qids.take(pa.array(q)), pa.array(sim, mask=null)],
+            names=["match_id", "query_id", "cosine_sim"],
+        )
+
+
+class _Pool:
+    """Scored pairs of a partition, cut to each query row's ``keep``
+    best whenever the uncut rows pass a block, so it stays within a
+    block plus the rows kept."""
+
+    def __init__(self, keep: int):
+        self.keep = keep
+        self.parts: list[tuple] = []
+        self.kept = self.rows = 0
+
+    def add(self, q, m, sim, null) -> None:
+        self.parts.append((q, m, sim, null))
+        self.rows += len(q)
+        if self.rows > max(_BLOCK_CELLS, 2 * self.kept):
+            self.parts = [self.cut()]
+            self.kept = self.rows = len(self.parts[0][0])
+
+    def cut(self) -> tuple[np.ndarray, ...]:
+        if not self.parts:
+            return np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0), np.zeros(0, bool)
+        q, m, sim, null = (np.concatenate(c) for c in zip(*self.parts))
+        cat, neg = _rank_keys(sim, null)
+        # ascending match_id: the ids themselves, or their sorted codes
+        mk = m if m.dtype.kind in "biuf" else np.unique(m, return_inverse=True)[1]
+        order = np.lexsort((mk, neg, cat, q))
+        qs = q[order]
+        first = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+        rank = np.arange(len(qs)) - np.repeat(first, np.diff(np.r_[first, len(qs)]))
+        take = order[rank < self.keep]
+        return q[take], m[take], sim[take], null[take]
 
 
 def _nearest(

@@ -5,9 +5,9 @@ Baseline: brute-force cosine top-k via built-in array expressions
 sign-random-projections, so candidate generation is a bucket join
 instead of all-pairs (the tiling layer's cell join with bucket key =
 quantized signature); and the IVF family, whose nearest-centroid routing,
-k-means and PQ rounds and PQ encoding are the NumPy kernel of
-:mod:`.centroid_kernel` over Arrow batches (``mapInArrow``), bit-identical
-to the SQL fold.
+k-means and PQ rounds, PQ encoding and list probe are the NumPy kernel
+of :mod:`.centroid_kernel` over Arrow batches (``mapInArrow``),
+bit-identical to the SQL fold.
 """
 
 from __future__ import annotations
@@ -304,13 +304,12 @@ def ivf_topk(
     scale structure (assign once, bucket the corpus by ``centroid_id``,
     probe few lists per query) is identical to a trained-centroid IVF.
 
-    Scale shape: the ~√N centroids go to every task with the kernel;
-    list assignment and probe selection are both row-local top-n in
-    NumPy (:func:`_nearest_centroids`), so neither the corpus nor the
-    queries shuffle to be routed. At 100 TB the corpus is
-    written bucketed by ``centroid_id`` so probing is a partition-pruned
-    scan; the one remaining shuffle is the final per-query top-k window
-    over the scored candidates.
+    Scale shape: see :func:`_probe`. The queries are routed on the
+    driver and the corpus is assigned, scored and pre-ranked where it
+    lies, in one kernel pass; nothing shuffles but the final per-query
+    top-k window, which sees at most ``k`` rows per query from each
+    partition. At 100 TB the corpus is written bucketed by
+    ``centroid_id`` so probing is a partition-pruned scan.
 
     ``cents`` overrides the modulo-seeded centroids with a trained set
     (:func:`kmeans_centroids`) — schema (centroid_id, cent_vec); the
@@ -320,35 +319,61 @@ def ivf_topk(
     """
     if cents is None:
         cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
-    assigned = _nearest_centroids(
-        corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec")),
-        cents,
-        "c_vec",
-    )
+    lists = corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec"))
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    return _topk(_probe(assigned, q, cents, nprobe, "c_vec"), k)
+    return _topk(_probe(lists, q, cents, nprobe, "c_vec", k, route="c_vec"), k)
 
 
 def _probe(
-    assigned: DataFrame,
+    lists: DataFrame,
     q: DataFrame,
     cents: DataFrame,
     nprobe: int,
     payload: str,
-    on: tuple[str, ...] = ("centroid_id",),
+    keep: int,
+    route: str | None = None,
+    on: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Scored pairs of an IVF probe: every query row of ``q`` (query_id,
-    q_vec, …) takes its ``nprobe`` nearest lists and meets the members
-    of ``assigned`` (match_id, ``payload``, centroid_id, …) through a
-    broadcast equi-join on ``on``; self-matches by id are excluded and
-    ``cosine_sim`` = cosine(q_vec, payload)."""
-    probes = _nearest_centroids(q, cents, "q_vec", nprobe).drop("cent_sim", "crank")
-    return (
-        assigned.drop("cent_sim", "crank")
-        .join(F.broadcast(probes), list(on))
-        .where(F.col("query_id") != F.col("match_id"))
-        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col(payload)))
+    """Pre-ranked pairs of an IVF probe, (match_id, query_id,
+    cosine_sim): every query row of ``q`` (query_id, q_vec, *on) takes
+    its ``nprobe`` nearest lists and meets their members among the rows
+    of ``lists`` (match_id, ``payload``, *on, and either a ``route``
+    vector or the ``centroid_id`` of a stored list); ``cosine_sim`` =
+    cosine(q_vec, payload). Self-matches by id are excluded, and a pair
+    must agree on every ``on`` key (a NULL matches nothing). Each
+    partition returns each query row's ``keep`` best pairs in the
+    :func:`_ranked` order, so a window over the result ranks the same
+    top ``keep`` as over every pair.
+
+    Scale shape: the query side is collected to the driver and routed
+    there (the same bound as the broadcast it replaces), then travels
+    with the centroids in the closure of ONE ``mapInArrow`` over the
+    list rows (:func:`.centroid_kernel.probe_lists`): a row is assigned
+    to its list, scored against only the queries that probe that list
+    and pre-ranked where it lies: no join, no shuffle. Stored lists are
+    filtered to the probed ``centroid_id`` values first, so a scan of
+    a table sorted or bucketed by list skips the rest. A NULL id, or a
+    NULL or malformed vector, raises, naming the row."""
+    ids, cmat = _centroid_arrays(cents)
+    index = centroid_kernel.probe_index(
+        q.select("query_id", "q_vec", *on).toArrow(), ids, cmat, nprobe, on, _ansi(q)
     )
+    schema = T.StructType(
+        [
+            lists.schema["match_id"],
+            q.schema["query_id"],
+            T.StructField("cosine_sim", T.DoubleType()),
+        ]
+    )
+    kernel = partial(
+        centroid_kernel.probe_lists, index=index, payload=payload, route=route, keep=keep
+    )
+    if route is None:
+        # a stored list's rows are read only when a query probes it
+        probed = index.lists[np.diff(index.starts) > 0].tolist()
+        lists = lists.where(F.col("centroid_id").isin(probed))
+    cols = dict.fromkeys(["match_id", payload, route or "centroid_id", *on])
+    return lists.select(*cols).mapInArrow(kernel, schema)
 
 
 def embedding_cosine_dup_pairs(
@@ -567,17 +592,13 @@ def ivf_sq8_topk(
         cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
     # Inverted-list assignment at full precision; payload reconstructed
     # through the SQ8 code (what a stored int8 list yields at probe time).
-    assigned = (
-        _nearest_centroids(
-            corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec")),
-            cents,
-            "c_vec",
-        )
+    lists = (
+        corpus.select(F.col(corpus_key).alias("match_id"), F.col(vec).alias("c_vec"))
         .crossJoin(F.broadcast(_sq8_dims(corpus, vec)))
-        .select("match_id", _sq8_recon(F.col("c_vec")).alias("r_vec"), "centroid_id")
+        .select("match_id", "c_vec", _sq8_recon(F.col("c_vec")).alias("r_vec"))
     )
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    return _topk(_probe(assigned, q, cents, nprobe, "r_vec"), k)
+    return _topk(_probe(lists, q, cents, nprobe, "r_vec", k, route="c_vec"), k)
 
 
 def ivf_topk_filtered(
@@ -596,8 +617,8 @@ def ivf_topk_filtered(
     metadata equality predicate — each query only matches corpus rows
     sharing its ``filter_col`` value (the tenant/language/category
     filter every production vector store bolts onto ANN). The filter
-    rides the probe JOIN KEY — (centroid_id, filter value) — so
-    non-matching candidates never materialize, rather than being
+    is a probe key next to the list (a NULL matches nothing), so
+    non-matching candidates are never scored, rather than being
     post-filtered out of an already-scored top-k (post-filtering
     under-fills k whenever the filter is selective).
 
@@ -610,21 +631,17 @@ def ivf_topk_filtered(
     """
     if cents is None:
         cents = _seed_cents(corpus, corpus_key, vec, centroid_mod)
-    assigned = _nearest_centroids(
-        corpus.select(
-            F.col(corpus_key).alias("match_id"),
-            F.col(vec).alias("c_vec"),
-            F.col(filter_col).alias("_fv"),
-        ),
-        cents,
-        "c_vec",
+    lists = corpus.select(
+        F.col(corpus_key).alias("match_id"),
+        F.col(vec).alias("c_vec"),
+        F.col(filter_col).alias("_fv"),
     )
     q = queries.select(
         F.col(query_key).alias("query_id"),
         F.col(vec).alias("q_vec"),
         F.col(filter_col).alias("_fv"),
     )
-    return _topk(_probe(assigned, q, cents, nprobe, "c_vec", on=("centroid_id", "_fv")), k)
+    return _topk(_probe(lists, q, cents, nprobe, "c_vec", k, route="c_vec", on=("_fv",)), k)
 
 
 def ivf_knn_join(
@@ -879,10 +896,11 @@ def ivf_pq_topk(
     Everything deterministic, so the DuckDB oracle composes the
     trained-centroid chain and the codebook chain bit-identically.
 
-    Scale shape: coarse centroids, codebooks and per-query probes all
-    broadcast; the corpus shuffles once at write (bucketed by
-    ``centroid_id``, m-byte payload); a probe reads nprobe/√N of a
-    32×-smaller table.
+    Scale shape: the codebooks broadcast and the probe is
+    :func:`_probe` (coarse centroids and queries on the driver, one
+    kernel pass over the coded corpus); the corpus shuffles once at
+    write (bucketed by ``centroid_id``, m-byte payload); a probe reads
+    nprobe/√N of a 32×-smaller table.
 
     ``refine`` > 0 adds the FAISS ``IndexRefineFlat`` step: the PQ
     reconstruction only SHORTLISTS the top-``refine`` candidates per
@@ -916,29 +934,21 @@ def ivf_pq_topk(
             ),
         )
     )
-    assigned = (
-        _nearest_centroids(
-            coded.select(F.col(corpus_key).alias("match_id"), "_vd", "codes"), cents, "_vd"
-        )
-        .crossJoin(F.broadcast(_books_map(books)))
-        .select("match_id", recon.alias("r_vec"), "centroid_id")
+    lists = coded.crossJoin(F.broadcast(_books_map(books))).select(
+        F.col(corpus_key).alias("match_id"), "_vd", recon.alias("r_vec")
     )
     q = queries.select(F.col(query_key).alias("query_id"), F.col(vec).alias("q_vec"))
-    scored = _probe(assigned, q, cents, nprobe, "r_vec")
+    scored = _probe(lists, q, cents, nprobe, "r_vec", refine or k, route="_vd")
     if not refine:
         return _topk(scored, k)
-    shortlist = (
-        _ranked(scored)
-        .where(F.col("rank") <= refine)
-        .select("query_id", "q_vec", "match_id")
-    )
+    shortlist = _ranked(scored).where(F.col("rank") <= refine).select("query_id", "match_id")
     full = corpus.select(
         F.col(corpus_key).alias("match_id"), F.col(vec).alias("f_vec")
     )
     return _topk(
-        full.join(F.broadcast(shortlist), "match_id").withColumn(
-            "cosine_sim", cosine(F.col("q_vec"), F.col("f_vec"))
-        ),
+        full.join(F.broadcast(shortlist), "match_id")
+        .join(F.broadcast(q), "query_id")
+        .withColumn("cosine_sim", cosine(F.col("q_vec"), F.col("f_vec"))),
         k,
     )
 

@@ -1,9 +1,13 @@
 """Streaming ANN probe at the retrieval edge: the twin of
 ``operators/similarity.ivf_topk`` as a cached index + ``foreachBatch``
 over the batch operator's body (:mod:`.per_batch`). The index is the
-centroids and the corpus's list assignment (``_nearest_centroids``);
-each micro-batch runs ``ivf_topk``'s ``_topk(_probe(...))``. Output
-rows carry a ``batch_id`` partition column.
+centroids and the corpus's list assignment (``_nearest_centroids``),
+cached once. Each micro-batch runs ``ivf_topk``'s
+``_topk(_probe(...))`` over the cached lists: the batch's queries are
+collected and routed on the driver, and one kernel pass over the
+cached lists reads each row's stored ``centroid_id`` and scores it
+against the queries that probe its list. Output rows carry a
+``batch_id`` partition column.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ def ann_probe_stream(
 
     def probe(batch: DataFrame) -> DataFrame:
         q = batch.select(F.col(key).alias("query_id"), F.col(vec).alias("q_vec"))
-        return _topk(_probe(assigned, q, cents, nprobe, "c_vec"), k)
+        return _topk(_probe(assigned, q, cents, nprobe, "c_vec", k), k)
 
     run_per_batch(
         read_stream(spark, batch_dir, schema, max_files_per_trigger),

@@ -486,3 +486,140 @@ def test_pq_codeword_ids_past_a_million(spark):
     for r in got:
         recon = book[(0, codes[r["match_id"]][0])] + book[(1, codes[r["match_id"]][1])]
         assert abs(r["cosine_sim"] - cos(vecs[r["query_id"]], recon)) < 2e-6, r
+
+
+def _join_probe(lists, q, cents, nprobe, payload, on=()):
+    """The broadcast-join probe the kernel pass replaced, routing with the
+    crossJoin + row_number form: every (query_id, match_id, cosine_sim)
+    pair of the ``nprobe`` nearest lists, scored by the SQL fold.
+    ``lists`` carries its centroid_id."""
+    probes = _window_top_n(
+        q.select(F.col("query_id").alias("vid"), F.col("q_vec").alias("v"), *on),
+        cents,
+        nprobe,
+        "v",
+        *on,
+    ).select(F.col("vid").alias("query_id"), F.col("v").alias("q_vec"), "centroid_id", *on)
+    return (
+        lists.join(F.broadcast(probes), ["centroid_id", *on])
+        .where(F.col("query_id") != F.col("match_id"))
+        .withColumn("cosine_sim", S.cosine(F.col("q_vec"), F.col(payload)))
+        .select("query_id", "match_id", "cosine_sim")
+    )
+
+
+def _cut_rows(scored, keep):
+    return sorted(
+        (r[0], r[1], r[2], _bits(r[3]))
+        for r in S._ranked(scored)
+        .where(F.col("rank") <= keep)
+        .select("query_id", "rank", "match_id", "cosine_sim")
+        .collect()
+    )
+
+
+def _probe_corpus(spark, elem):
+    """Seeded 8-d centroids (centroid 4 duplicates -2), their stored
+    lists (c_vec, centroid_id, _fv) over 3 partitions with list -7
+    emptied, and queries: members under their own ids (self-matches),
+    the centroid -7 vector (its nearest list is empty), a NaN vector and
+    a negative id. Members 100, 101 and -35 share one vector (exact
+    cosine ties), member 61 holds a NaN; ``_fv`` is 0, 1 or NULL on
+    both sides."""
+    rng = random.Random(21)
+    vec = lambda: [rng.uniform(-1.0, 1.0) for _ in range(8)]  # noqa: E731
+    base = {cid: vec() for cid in (-7, -2, 0, 3, 11)}
+    base[4] = list(base[-2])
+    cents = spark.createDataFrame(
+        sorted(base.items()), f"centroid_id long, cent_vec array<{elem}>"
+    )
+    tie = vec()
+    fv = lambda i: None if i % 5 == 0 else i % 2  # noqa: E731
+    rows = [(i, vec()) for i in range(-30, 60)]
+    rows += [(100, tie), (101, tie), (-35, tie), (61, [float("nan")] + [0.25] * 7)]
+    members = spark.createDataFrame(
+        [(i, v, fv(i)) for i, v in rows], f"match_id long, c_vec array<{elem}>, _fv int"
+    )
+    stored = members.join(
+        _window_top_n(members.select(F.col("match_id").alias("vid"), F.col("c_vec").alias("v")),
+                      cents, 1).select(F.col("vid").alias("match_id"), "centroid_id"),
+        "match_id",
+    ).where(F.col("centroid_id") != -7).repartition(3, "match_id")
+    queries = [(i, v, fv(i)) for i, v in rows if i % 9 == 0 or i in (100, -35)]
+    queries += [(200, base[-7], 1), (201, [float("nan")] * 8, 0), (-202, vec(), None)]
+    q = spark.createDataFrame(queries, f"query_id long, q_vec array<{elem}>, _fv int")
+    return cents, stored, q
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_probe_kernel_matches_join_reference(spark, elem):
+    """The one-pass kernel probe (assigning by its route vector or
+    reading the stored centroid_id) keeps, per query, the rows, ranks,
+    ids and bit-identical cosines of the broadcast join + SQL cosine +
+    row_number form: float and double elements, exact ties, a NaN
+    member and query, negative ids, self-matches, a filter key with
+    NULLs, a query whose one probed list is empty, keep larger than
+    any list, and the top-keep merge of 3 partitions."""
+    cents, stored, q = _probe_corpus(spark, elem)
+    assert stored.rdd.getNumPartitions() == 3
+    routed = stored.drop("centroid_id")
+    for on in ((), ("_fv",)):
+        qs = q if on else q.drop("_fv")
+        for nprobe, keep in ((1, 50), (3, 2)):
+            want = _cut_rows(_join_probe(stored, qs, cents, nprobe, "c_vec", on), keep)
+            assert want and len(want) < 50 * len(q.collect()), (on, nprobe)
+            if nprobe == 1:
+                assert 200 not in {r[0] for r in want}  # its one list is empty
+            for lists, route in ((stored, None), (routed, "c_vec")):
+                got = S._probe(lists, qs, cents, nprobe, "c_vec", keep, route=route, on=on)
+                assert _cut_rows(got, keep) == want, (on, nprobe, route)
+
+
+def test_probe_zero_norm_pair(spark):
+    """A zero-norm member met by a query raises DIVIDE_BY_ZERO under ANSI,
+    as the SQL fold does; without ANSI its score is NULL and ranks last
+    in both forms."""
+    cents, stored, q = _probe_corpus(spark, "double")
+    stored = stored.unionByName(spark.createDataFrame([(70, [0.0] * 8, 1, 0)], stored.schema))
+    for form in (_join_probe, lambda *a: S._probe(*a[:5], 50)):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            form(stored, q.drop("_fv"), cents, 6, "c_vec").collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = _cut_rows(_join_probe(stored, q.drop("_fv"), cents, 6, "c_vec"), 200)
+        assert any(r[2] == 70 and r[3] is None for r in want)
+        got = S._probe(stored, q.drop("_fv"), cents, 6, "c_vec", 200)
+        assert _cut_rows(got, 200) == want
+    finally:
+        spark.conf.unset("spark.sql.ansi.enabled")
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        ((70, None), "vector match_id=70: NULL"),
+        ((70, [0.5] * 7), "vector match_id=70: length 7"),
+        ((70, [0.5, None] + [0.5] * 6), "vector match_id=70: NULL component"),
+        ((None, [0.5] * 8), "NULL match_id"),
+    ],
+)
+def test_probe_refuses_bad_list_rows(spark, bad, match):
+    """A probed list row with a NULL, NULL-holding or short payload, or a
+    NULL match_id, raises and names the row. The join form scored such
+    a payload NULL (``zip_with`` pads the shorter side) and ranked it
+    last, and dropped a NULL-id row."""
+    cents, stored, q = _probe_corpus(spark, "double")
+    lists = stored.unionByName(spark.createDataFrame([(*bad, 1, 0)], stored.schema))
+    with pytest.raises(Exception, match=match):
+        S._probe(lists, q.drop("_fv"), cents, 6, "c_vec", 50).collect()
+
+
+def test_probe_refuses_null_query_id(spark):
+    """ivf_topk raises on a query row with a NULL id, naming it; the join
+    form silently dropped the query (``query_id != match_id`` is NULL)."""
+    emb = _emb(spark)
+    q = emb.where(F.col("vec_id") % 50 == 0).select(
+        F.when(F.col("vec_id") != 0, F.col("vec_id")).alias("vec_id"), "embedding"
+    )
+    with pytest.raises(Exception, match="query row 0: NULL query_id"):
+        S.ivf_topk(q.orderBy(F.col("vec_id").asc_nulls_first()), emb).collect()

@@ -1,7 +1,8 @@
 """The nearest-centroid kernel outside Spark: a bounded score block at
 any centroid count, block boundaries invisible in the output under
-either metric, no rows without centroids, and a worker-side import of
-numpy and pyarrow only."""
+either metric and in the probe's scoring and top-k cuts, no rows
+without centroids, and a worker-side import of numpy and pyarrow
+only."""
 
 from __future__ import annotations
 
@@ -50,6 +51,32 @@ def test_block_boundaries_do_not_change_rows(monkeypatch):
         split = pa.Table.from_batches(_top(batch, ids, cmat, 3, metric))
         assert whole.num_rows == 150, metric
         assert split.equals(whole), metric
+
+
+def test_probe_block_and_cut_boundaries_do_not_change_rows(monkeypatch):
+    """One-row blocks, and a pool cut after every block, return the same
+    top-keep rows as one block per list; the rows of a second batch
+    merge into the first's."""
+    ids = np.array([-3, 1, 2, 8], dtype=np.int64)
+    cmat = np.random.default_rng(9).uniform(-1.0, 1.0, (len(ids), 8))
+    queries = pa.Table.from_batches([_batch(12, 8, seed=3)]).rename_columns(
+        ["query_id", "q_vec"]
+    )
+    lists = [
+        b.rename_columns(["match_id", "c_vec"]) for b in (_batch(40, 8), _batch(30, 8, seed=6))
+    ]
+    index = K.probe_index(queries, ids, cmat, 2, (), ansi=True)
+
+    def probe():
+        return pa.Table.from_batches(
+            K.probe_lists(iter(lists), index, "c_vec", "c_vec", keep=4)
+        )
+
+    whole = probe()
+    monkeypatch.setattr(K, "_BLOCK_CELLS", 1)
+    split = probe()
+    assert whole.num_rows == 12 * 4
+    assert split.equals(whole)
 
 
 def test_no_centroids_no_rows():

@@ -82,17 +82,17 @@ def test_pricing_agg_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_ivf_broadcasts_centroids_and_probes(spark):
-    # the corpus side must never shuffle for the centroid assignment: the
-    # centroids travel in the kernel's closure, so list assignment and
-    # probe routing are one MapInArrow each over their own scan, the
-    # probe lists are the broadcast side of the one join, and the only
-    # shuffle is the per-query top-k window
+def test_ivf_probe_is_one_kernel_pass(spark):
+    # the queries are routed on the driver and travel with the centroids
+    # in the kernel's closure, so list assignment, scoring and the
+    # per-partition pre-rank are one MapInArrow over the corpus scan:
+    # no probe join, no SQL cosine fold, and the only shuffle is the
+    # per-query top-k window
     plan = plan_of(entry_mod._q_ann_topk_ivf(spark, SF), mode="simple")
-    assert plan.count("MapInArrow") == 2, plan
-    assert plan.count("BroadcastHashJoin") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "zip_with" not in plan, plan
     assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
-    assert plan.count("Exchange") == 2, plan  # the shuffle and the broadcast
     assert "CartesianProduct" not in plan
 
 
